@@ -87,7 +87,6 @@ def bench_cdc_replay(
     paths: int = 200,
     max_reps: int = 60,
     n_batches: int = 8,
-    merge_scope: str = "full",
 ) -> dict:
     from debezium_spark.generator import gen_change_log, gen_source_table
     from debezium_spark.streaming.engine import Engine, EngineConfig
@@ -122,7 +121,6 @@ def bench_cdc_replay(
                 batch_lsn_span=max(n_events * 2 // n_batches, 4096),
                 partitions=partitions,
                 n_buckets=32,
-                merge_scope=merge_scope,
             ),
         )
         eng.run()
@@ -259,7 +257,6 @@ def main() -> None:
         paths=int(os.environ.get("BENCH_CDC_PATHS", "200")),
         max_reps=int(os.environ.get("BENCH_CDC_MAX_REPS", "60")),
         n_batches=int(os.environ.get("BENCH_CDC_BATCHES", "4")),
-        merge_scope=os.environ.get("BENCH_CDC_SCOPE", "full"),
     )
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1
 

@@ -9,7 +9,7 @@ Example::
         -m debezium_spark \
         --changelog /data/changelog --lake /data/lake \
         --source-table /data/source --batch-lsn-span 1000000 \
-        --merge-scope touched --partitions 32
+        --partitions 32
 
 On a cluster the master/executor topology comes from spark-submit; in
 local runs ``--cores`` picks local[N].
@@ -31,9 +31,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=32)
     p.add_argument("--partitions", type=int, default=4)
     p.add_argument(
-        "--merge-scope", choices=("touched", "full"), default="touched"
-    )
-    p.add_argument(
         "--snapshot-mode",
         choices=(
             "always",
@@ -53,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
         "<lake-root>/_dlq with __connect.errors.* context headers",
     )
     p.add_argument("--signal-path")
-    p.add_argument("--salt", type=int, default=0)
     p.add_argument(
         "--key-columns",
         default="repo,path",
@@ -173,11 +169,9 @@ def main(argv: list[str] | None = None) -> int:
         batch_lsn_span=args.batch_lsn_span,
         n_buckets=args.n_buckets,
         partitions=args.partitions,
-        merge_scope=args.merge_scope,
         snapshot_mode=args.snapshot_mode,
         error_mode=args.error_mode,
         signal_path=args.signal_path,
-        salt=args.salt,
         key_columns=tuple(args.key_columns.split(",")),
         snapshot_overrides=overrides,
         offset_store_path=args.offset_store,

@@ -232,7 +232,9 @@ def encode_jpeg(arr: np.ndarray, quality: int | None = None) -> bytes:
     else:
         if not 1 <= quality <= 100:
             raise ValueError("quality must be in 1..100")
-        qtab = np.full((8, 8), max(1, round(50.0 / quality * 8)), dtype=np.int64)
+        # clamped to 255: the DQT written below is 8-bit
+        q = min(255, max(1, round(50.0 / quality * 8)))
+        qtab = np.full((8, 8), q, dtype=np.int64)
 
     ycc = _rgb_to_ycbcr(arr)
     ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
@@ -432,6 +434,8 @@ def _decode_scan(payload, pos, frame, scomps, qtabs, huff, restart_interval):
                         break
                     if sym == 0xF0:  # ZRL
                         k += 16
+                        if k > 64:  # the 16 zeros ran past index 63
+                            raise ValueError("AC coefficient index overrun")
                         continue
                     run, s = sym >> 4, sym & 0x0F
                     k += run

@@ -1,4 +1,4 @@
-"""Last-writer-wins per-key compaction — the core apply kernel.
+"""Last-writer-wins per-key election — the engine's one apply kernel.
 
 Reference semantics: within one source partition, events are totally
 ordered by LSN (single-threaded coordinator,
@@ -9,136 +9,71 @@ row — exactly what Kafka log compaction would leave. After Spark's
 parallel shuffle this order must be *re-derived from LSN inside each
 key group* — never from arrival order (SURVEY §4).
 
-Two kernels, identical results (tests assert equality):
-
-- ``max_by`` (default): ``groupBy(key).agg(max_by(struct(*), lsn))``.
-  One shuffle with **map-side partial aggregation** — each task reduces
-  its slice of a hot key locally before the exchange, so even a
-  pathological million-update key costs O(1) post-shuffle memory. This
-  is the scale-optimal plan (whole-stage codegen, no Python).
-- ``pandas``: ``groupBy(key).applyInPandas`` with vectorized
-  ``sort_values`` + tail(1) — the shape the north-star names; kept for
-  parity and as the template for richer per-key folds. An optional
-  salted two-phase variant pre-reduces hot keys on (key, salt) before
-  the final per-key group (SURVEY §2.3 PartitionRouting → salting).
-
-Input contract: envelope rows after ``drop_tombstones`` +
-``pk_change_split`` + ``normalize_target_key`` (every row's ``key`` is
-the row it affects). Output: one row per key —
-``(repo, path, lsn, op, after)`` where ``op = 'd'`` means the key ends
-deleted.
+:func:`compact` is a merge-as-compaction: table state rows re-enter as
+events at their stored ``_lsn``, are unioned with a batch's raw change
+rows, and one ``groupBy(repo, path).agg(max_by(...))`` elects the
+winner per table PK. The aggregate has **map-side partial
+aggregation** — each task reduces its slice of a hot key before the
+exchange, so even a million-update key costs O(1) post-shuffle memory
+(whole-stage Catalyst, no Python, no salting).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-DEFAULT_KEY_COLUMNS = ("repo", "path")
-
-
-def _lww_reduce(df: DataFrame, group_exprs: list) -> DataFrame:
-    """One max-by-LSN reduction: the winner payload
-    (lsn, op, after, schema_version) shared by the custom-key pass and
-    the PK-level pass so the two can never drift apart."""
-    winner = F.max_by(
-        F.struct(
-            F.col("lsn"), F.col("op"), F.col("after"), F.col("schema_version")
-        ),
-        F.col("lsn"),
-    ).alias("w")
-    return (
-        df.groupBy(*group_exprs)
-        .agg(winner)
-        .select("repo", "path", "w.lsn", "w.op", "w.after", "w.schema_version")
-    )
-
-
-def compact_max_by(
-    df: DataFrame, key_columns: tuple[str, ...] = DEFAULT_KEY_COLUMNS
-) -> DataFrame:
-    """LWW via max_by aggregate (partial-agg friendly; default kernel).
-
-    ``key_columns`` = the event-key columns (``message.key.columns``
-    analogue, relational/Key.java:27-70). Must be a superset of the
-    table PK (repo, path): a finer key only splits compaction groups —
-    the LSN-guarded merge still converges on the PK; a coarser key
-    would collapse distinct table rows.
-    """
-    return _lww_reduce(
-        df, [F.col(f"key.{c}").alias(c) for c in key_columns]
-    )
-
-
-def compact_apply_in_pandas(
-    df: DataFrame,
-    salt: int = 0,
-    key_columns: tuple[str, ...] = DEFAULT_KEY_COLUMNS,
-) -> DataFrame:
-    """LWW via groupBy.applyInPandas (vectorized pandas fold per key).
-
-    ``salt > 0`` enables the two-phase skew defense: phase 1 reduces on
-    (key, salt-of-lsn) so a hot key's events split across ``salt``
-    groups; phase 2 reduces the ≤salt survivors per key.
-    """
-    extra = [c for c in key_columns if c not in ("repo", "path")]
-    slim = df.select(
-        F.col("key.repo").alias("repo"),
-        F.col("key.path").alias("path"),
-        *[F.col(f"key.{c}").alias(f"__k_{c}") for c in extra],
-        "lsn",
-        "op",
-        "after",
-        "schema_version",
-    )
-    group_cols = ["repo", "path"] + [f"__k_{c}" for c in extra]
-
-    def last_writer(pdf: pd.DataFrame) -> pd.DataFrame:
-        # vectorized: no iterrows (input_hint: no per-row Python)
-        return pdf.sort_values("lsn", kind="stable").tail(1)
-
-    if salt > 0:
-        pre = slim.withColumn("__salt", F.pmod(F.col("lsn"), salt).cast("int"))
-        pre = (
-            pre.groupBy(*group_cols, "__salt")
-            .applyInPandas(
-                lambda pdf: pdf.sort_values("lsn", kind="stable").tail(1),
-                schema=pre.schema,
-            )
-            .drop("__salt")
-        )
-        slim = pre
-    out = slim.groupBy(*group_cols).applyInPandas(
-        last_writer, schema=slim.schema
-    )
-    return out.drop(*[f"__k_{c}" for c in extra])
-
-
-def reduce_to_pk(df: DataFrame) -> DataFrame:
-    """Collapse custom-key compaction winners to one row per table PK
-    (repo, path) by max LSN. Needed when ``key_columns`` is finer than
-    the PK: a key-moving update yields a DELETE(old key) + CREATE(new
-    key) pair that lands on the same table row — the merge join
-    requires change sets unique per PK. Input is already one row per
-    custom key, so this second reduce is tiny; the shared winner
-    payload lives in :func:`_lww_reduce`."""
-    return _lww_reduce(df, ["repo", "path"])
+KEY = ("repo", "path")
 
 
 def compact(
-    df: DataFrame,
-    kernel: str = "max_by",
-    salt: int = 0,
-    key_columns: tuple[str, ...] = DEFAULT_KEY_COLUMNS,
+    changes: DataFrame,
+    state: DataFrame | None = None,
+    retain_tombstones: bool = False,
 ) -> DataFrame:
-    if kernel == "max_by":
-        out = compact_max_by(df, key_columns=key_columns)
-    elif kernel == "pandas":
-        out = compact_apply_in_pandas(df, salt=salt, key_columns=key_columns)
-    else:
-        raise ValueError(f"unknown compaction kernel {kernel!r}")
-    if set(key_columns) != {"repo", "path"}:
-        out = reduce_to_pk(out)
-    return out
+    """Elect one winner per ``(repo, path)`` from ``changes`` ∪ ``state``.
+
+    ``changes``: ``repo``, ``path``, ``op``, ``lsn`` + payload columns,
+    any number of rows per key; ``op == 'd'`` deletes the key, any
+    other op upserts it. ``state`` (optional): ``repo``, ``path``, the
+    same payload columns, ``_lsn`` and, under retention, ``_deleted``.
+    A state row enters as an ``'u'`` event (``'d'`` for a retained
+    tombstone) and wins LSN ties — the strict ``changes.lsn > _lsn``
+    guard, so an incremental-snapshot chunk stamped at the watermark
+    never replaces a row whose newest update IS the watermark LSN.
+
+    Output: ``repo``, ``path``, payload, ``_lsn`` — delete winners are
+    dropped, or with ``retain_tombstones`` kept as ``_deleted`` rows
+    with NULL payload (a tombstone never leaks stale content).
+
+    Custom ``key_columns`` need no second pass: electing at the PK
+    already collapses custom-key winners, and ``pk_change_split``
+    stamps the CREATE half ``lsn + 1`` so the two halves never tie.
+    """
+    payload = [c for c in changes.columns if c not in (*KEY, "op", "lsn")]
+    rows = changes.select(*KEY, "op", "lsn", F.lit(0).alias("src"), *payload)
+    if state is not None:
+        dead = (
+            F.coalesce(F.col("_deleted"), F.lit(False))
+            if "_deleted" in state.columns
+            else F.lit(False)
+        )
+        rows = state.select(
+            *KEY,
+            F.when(dead, "d").otherwise("u").alias("op"),
+            F.col("_lsn").alias("lsn"),
+            F.lit(1).alias("src"),
+            *payload,
+        ).unionByName(rows)
+    won = rows.groupBy(*KEY).agg(
+        F.max_by(F.struct("op", "lsn", *payload), F.struct("lsn", "src")).alias("w")
+    )
+    deleted = F.col("w.op") == "d"
+    if not retain_tombstones:
+        won = won.filter(~deleted)
+    return won.select(
+        *KEY,
+        *[F.when(~deleted, F.col(f"w.{p}")).alias(p) for p in payload],
+        F.col("w.lsn").cast("bigint").alias("_lsn"),
+        *([deleted.alias("_deleted")] if retain_tombstones else []),
+    )

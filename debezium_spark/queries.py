@@ -5002,7 +5002,6 @@ def cdc_replay_final_state(spark, sf_dir):
             source_table_path=f"{tmp}/source",
             batch_lsn_span=4096,  # several fenced stream batches
             n_buckets=8,
-            merge_scope="full",
         ),
     )
     eng.run()
@@ -5126,7 +5125,6 @@ def cdc_engine_replay_events(spark, sf_dir):
             source_table_path=f"{tmp}/source",
             batch_lsn_span=10_000_000,  # one dense stream batch
             n_buckets=8,
-            merge_scope="full",
         ),
     )
     eng.run()
@@ -5144,9 +5142,9 @@ def _events_two_merge_lake(spark, sf_dir):
     """Shared fixture for the lake-driving catalog entries: fold the
     ``events`` table (repo-shaped, LSN = event_id) into a real
     bucket-COW lake in two LSN-halved merges; returns ``(lake, v1)``
-    with ``v1`` the version after the first merge. Each half is LWW
-    pre-compacted per key (merge()'s input contract — the engine runs
-    the same compaction) with one map-side-combined max_by shuffle."""
+    with ``v1`` the version after the first merge. Each half goes in as
+    raw change rows; the merge elects the max-LSN event per key, as it
+    does for the engine."""
     import tempfile
 
     from debezium_spark.lake import LakeTable
@@ -5166,32 +5164,9 @@ def _events_two_merge_lake(spark, sf_dir):
         _op_col().alias("op"),
         F.col("event_id").cast("long").alias("lsn"),
     )
-    # bound scan prunes to event_id only; then BOTH halves' LWW folds
-    # come out of ONE map-side-combined shuffle via conditional max_by
-    # (a null ordering key is skipped, so w1/w2 are null exactly when
-    # the key has no events in that half) — not one scan+shuffle per
-    # half. The tiny per-key result is cached so the two merges never
-    # rescan the events table.
+    # bound scan prunes to event_id only
     mn, mx = ev.agg(F.min("lsn"), F.max("lsn")).first()
     bound = (int(mn) + int(mx)) // 2
-    img = F.struct(*[c for c in ev.columns if c not in ("repo", "path")])
-    folds = (
-        ev.groupBy("repo", "path")
-        .agg(
-            F.max_by(
-                img, F.when(F.col("lsn") <= bound, F.col("lsn"))
-            ).alias("w1"),
-            F.max_by(
-                img, F.when(F.col("lsn") > bound, F.col("lsn"))
-            ).alias("w2"),
-        )
-        # the fold output is O(keys) tiny — coalesce so every
-        # downstream merge job schedules a handful of tasks, not
-        # shuffle_partitions of them (pure fixture-scale hygiene; at
-        # corpus scale the agg width IS the right task count)
-        .coalesce(8)
-        .persist()
-    )
 
     import atexit
     import shutil
@@ -5200,16 +5175,9 @@ def _events_two_merge_lake(spark, sf_dir):
     atexit.register(shutil.rmtree, tmp, True)
     lt = LakeTable(spark, f"{tmp}/lake", n_buckets=8)
     lt.create()
-    lt.merge(
-        folds.filter(F.col("w1").isNotNull()).select("repo", "path", "w1.*"),
-        1,
-    )
+    lt.merge(ev.filter(F.col("lsn") <= bound), 1)
     v1 = lt.manifest()["version"]
-    lt.merge(
-        folds.filter(F.col("w2").isNotNull()).select("repo", "path", "w2.*"),
-        2,
-    )
-    folds.unpersist()
+    lt.merge(ev.filter(F.col("lsn") > bound), 2)
     return lt, v1
 
 

@@ -39,6 +39,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Every micro-batch re-plans the same apply + publish plans; their
+        # generated classes (~100 per streamed batch) must stay cached.
+        # At the default 100 entries the working set overflows the LRU
+        # and a batch recompiles (and runs cold) a varying share of it.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,10 +15,11 @@ Per-batch dataflow (SURVEY §7.1)::
     events[lsn_lo, lsn_hi)                           (pruned parquet scan)
       → table filter / tombstone drop / skipped-ops  (codegen filters)
       → PK-change split → target-key normalize
-      → LWW compaction per (repo, path)              (one shuffle,
-                                                      map-side combine)
       → schema-align (event-version gated columns → physical superset)
-      → LakeTable.merge (LSN-guarded, bucket COW, fenced commit)
+      → LakeTable.merge: touched buckets' state ∪ change rows
+        → LWW election per (repo, path)              (one shuffle,
+                                                      map-side combine)
+        → bucket COW rewrite, fenced commit
       → lineage rows per source partition
 """
 
@@ -31,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.lake import LakeTable
-from debezium_spark.operators.compaction import compact
+# perfbench/trace.py looks `compact` up here; re-point the trace, then delete
+from debezium_spark.operators.compaction import compact  # noqa: F401
 from debezium_spark.operators.transforms import (
     drop_tombstones,
     enforce_valid,
@@ -57,17 +59,10 @@ class EngineConfig:
     schema_changes: list[dict] = field(default_factory=list)
     n_buckets: int = 32
     batch_lsn_span: int = 4096  # LSN units per micro-batch (≙ max.batch.size)
-    compaction_kernel: str = "max_by"  # or "pandas"
-    # "touched": per-bucket COW MERGE (Iceberg-shaped; right when a
-    # batch touches few buckets — the 10^10-scale steady state).
-    # "full": single-shuffle merge-as-compaction rewrite (right for
-    # dense batches: snapshot, backfill, uniform-update replay).
-    merge_scope: str = "touched"
     # column.include.list / column.exclude.list analogue (regex over
     # row-image field names; key columns always kept)
     column_include_regex: str | None = None
     column_exclude_regex: str | None = None
-    salt: int = 0
     partitions: int = 4
     # always|initial|never|initial_only|custom — custom delegates the
     # skip-vs-run decision to `custom_should_snapshot(committed_offsets)`
@@ -160,7 +155,7 @@ class EngineConfig:
     # PostProcessor SPI (processors/spi/PostProcessor.java, registry
     # processors/PostProcessorRegistry.java): callables applied to the
     # envelope DataFrame after the dispatcher's filters, before
-    # compaction — snapshot AND stream batches, like the reference
+    # the merge — snapshot AND stream batches, like the reference
     # applying registered processors to every emitted record. Contract:
     # DataFrame -> DataFrame, envelope schema preserved, Column-level
     # expressions only (stays in whole-stage codegen), values may be
@@ -180,9 +175,9 @@ class EngineConfig:
     # message.key.columns analogue (relational/Key.java:27-70,
     # RelationalDatabaseConnectorConfig.java:321): columns of the row
     # image forming the event key. Must contain the table PK (repo,
-    # path) — a finer key only splits compaction groups (the
-    # LSN-guarded merge still converges on the PK); a coarser one would
-    # collapse distinct rows, so it is rejected at engine start.
+    # path) — a finer key only changes which updates split into
+    # DELETE + CREATE (the merge still elects per PK); a coarser one
+    # would collapse distinct rows, so it is rejected at engine start.
     key_columns: tuple[str, ...] = ("repo", "path")
     # engine lifecycle callbacks (debezium-api
     # engine/DebeziumEngine.java:52-61 CompletionCallback, :67-110
@@ -326,7 +321,9 @@ class Engine:
                 f"{cfg.offset_flush_interval_batches}"
             )
         if not self.lake.exists():
-            self.lake.create()
+            # the version-0 schema is the history head's CREATE when the
+            # log carries one, BASE_SCHEMA otherwise
+            self.lake.create(self.tracker.schemas[0])
         else:
             # schema-history loss healing (see the method docstring):
             # detected and repaired on every cold start, not only under
@@ -1520,6 +1517,19 @@ class Engine:
                 if ch is None:
                     continue
                 v = int(ch["schema_version"])
+                if (
+                    ch["change_type"] == "CREATE_TABLE"
+                    and self.tracker.changes_by_version.get(0) != ch
+                ):
+                    # the lake was created under another v0 and may
+                    # hold rows already — a late history head cannot
+                    # be folded in
+                    raise ValueError(
+                        f"CREATE TABLE history head at lsn {ch['lsn']} was "
+                        "not folded at engine init (schema history "
+                        "injected through config?); the lake's version-0 "
+                        "schema differs from it"
+                    )
                 if v > self.tracker.latest_version:
                     self.tracker.apply(ch)
                 # the change takes effect now, whether newly learned or
@@ -1568,10 +1578,9 @@ class Engine:
             F.approx_count_distinct(F.col("source.txId")).alias("n_tx")
         )
         events = events.observe(obs, *aggs)
-        # No cache here: the single consumer is the compaction pipeline,
-        # whose OUTPUT the merge caches (LakeTable.merge persists the
-        # compacted change set). The observation fires when that cache
-        # materializes.
+        # No cache here: the single consumer is the merge, which
+        # persists the aligned change rows; the observation fires when
+        # its bucket-discovery job materializes that cache.
 
         # 4. dispatcher-stage filters + per-record transforms.
         #    Events at lsn <= the batch's max truncate LSN are wiped by
@@ -1617,18 +1626,21 @@ class Engine:
         ev = pk_change_split(ev, self.cfg.key_columns)
         ev = normalize_target_key(ev, self.cfg.key_columns)
 
-        # 4. LWW compaction + schema alignment + fenced LSN-guarded
-        #    merge. Offsets/lineage are pulled from the observation
-        #    after the merge's data write (but inside its commit).
+        # 5. schema alignment + fenced LSN-guarded merge (the LWW
+        #    election happens inside it). Offsets/lineage are pulled
+        #    from the observation after the merge's bucket-discovery
+        #    job (but inside its commit).
         def _obs_row(observation, fallback: dict) -> dict:
-            # An Observation whose node never materialized has no
-            # metrics row and .get dies JVM-side (toPyRow assertion).
-            # That happens only when the optimizer/AQE proved the
+            # .get WAITS for the first action over the observed node.
+            # When that action ran but the optimizer/AQE proved the
             # observed subtree EMPTY — a zero-row batch window (an LSN
             # gap in the log, or a window holding only control rows) —
-            # so the zero/None fallback is the exact answer, not an
-            # approximation. Any batch with ≥1 input row materializes
-            # the node and takes the normal path.
+            # there is no metrics row and .get dies JVM-side (toPyRow
+            # assertion), so the zero/None fallback is the exact
+            # answer. When no action over the node has reported, .get
+            # BLOCKS FOREVER, not raises — so it must only be called
+            # after a job that reads the observed rows (LakeTable.merge
+            # calls frontier_fn after its discovery job).
             try:
                 return observation.get
             except Exception:
@@ -1691,38 +1703,18 @@ class Engine:
             }
             return offsets, lineage, sum(r["events"] for r in lineage), counters
 
-        if self.cfg.merge_scope == "full":
-            # merge_full compacts state ∪ events in its own single
-            # shuffle — no pre-compaction needed, alignment is a pure
-            # projection over the raw events
-            flat = ev.select(
-                F.col("key.repo").alias("repo"),
-                F.col("key.path").alias("path"),
-                "lsn",
-                "op",
-                "after",
-                "schema_version",
-            )
-            result = self.lake.merge_full(
-                self._align(flat),
-                batch_id,
-                frontier_fn=frontier,
-                metrics={"phase": phase},
-                phase=phase,
-                truncate_lsn=truncate_lsn,
-            )
-            self._fire_deferred_signals(deferred_signals)
-            self._maybe_publish()
-            return result
-        compacted = compact(
-            ev,
-            self.cfg.compaction_kernel,
-            salt=self.cfg.salt,
-            key_columns=self.cfg.key_columns,
+        # the merge elects the LWW winner per key over the touched
+        # buckets' state and these raw change rows
+        flat = ev.select(
+            F.col("key.repo").alias("repo"),
+            F.col("key.path").alias("path"),
+            "lsn",
+            "op",
+            "after",
+            "schema_version",
         )
-        changes = self._align(compacted)
         result = self.lake.merge(
-            changes,
+            self._align(flat),
             batch_id,
             frontier_fn=frontier,
             metrics={"phase": phase},
@@ -1760,15 +1752,15 @@ class Engine:
             if sig.get("__applied") or self._apply_signal_action(sig):
                 self._source_ledger.mark(sig["id"])
 
-    def _align(self, compacted: DataFrame) -> DataFrame:
-        """Project compaction winners onto the lake's physical superset
+    def _align(self, flat: DataFrame) -> DataFrame:
+        """Project change rows onto the lake's physical superset
         schema, gating each column by the event's schema version —
         events that predate an ADD COLUMN contribute NULL for it
         (mixed-schema batches, SURVEY §7.4)."""
         schema = self.lake.table_schema()
         # columns removed by the column filter are absent from the image
         # struct — they land as NULL in the lake (never captured)
-        present = set(compacted.schema["after"].dataType.names)
+        present = set(flat.schema["after"].dataType.names)
         cols = [F.col("op"), F.col("lsn")]
         for c in schema.columns:
             p = c["physical"]
@@ -1792,7 +1784,7 @@ class Engine:
                     F.lit(c.get("default"))
                 )
             cols.append(val.cast(c["type"]).alias(p))
-        return compacted.select(*cols)
+        return flat.select(*cols)
 
     # -- introspection ------------------------------------------------------
     @property

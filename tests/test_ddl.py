@@ -601,6 +601,69 @@ def test_create_head_and_multi_alter_replay_through_engine(
     assert n_default > 0  # pre-add rows read the multi-ALTER's default
 
 
+_STARS_CREATE = (
+    "CREATE TABLE repo_content (repo string, path string, "
+    "commit string, lang string, content string, stars int DEFAULT 7, "
+    "PRIMARY KEY (repo, path))"
+)
+
+
+def test_create_head_differing_from_base_reaches_the_lake(spark, tmp_root):
+    """A CREATE history head that differs from BASE_SCHEMA becomes the
+    lake's version-0 schema: tracker and manifest agree from the first
+    commit, and the extra column is in the table."""
+    msg = json.dumps({"lsn": BASE - 50, "schema_version": 0, "ddl": _STARS_CREATE})
+    src, log = _world_with_messages(
+        spark, os.path.join(tmp_root, "stars"), [msg], lsns=[BASE - 50]
+    )
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=log,
+            lake_root=os.path.join(tmp_root, "stars", "lake"),
+            source_table_path=src,
+            batch_lsn_span=977,
+            n_buckets=8,
+        ),
+    )
+    assert "stars" in eng.tracker.schemas[0].logical_names
+    assert eng.lake.table_schema().columns == eng.tracker.schemas[0].columns
+    eng.run()
+    assert eng.lake.table_schema().columns == eng.tracker.latest.columns
+    assert "stars" in eng.final_state().columns
+
+
+def test_create_head_not_folded_at_init_raises(spark, tmp_root):
+    """A version-0 CREATE row that the engine did not fold at init (the
+    history was injected through config) cannot be applied mid-stream:
+    the lake already holds rows under another v0 — fail loudly."""
+    msg = json.dumps({"lsn": BASE - 50, "schema_version": 0, "ddl": _STARS_CREATE})
+    src, log = _world_with_messages(
+        spark, os.path.join(tmp_root, "late"), [msg], lsns=[BASE - 50]
+    )
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=log,
+            lake_root=os.path.join(tmp_root, "late", "lake"),
+            source_table_path=src,
+            batch_lsn_span=977,
+            n_buckets=8,
+            schema_changes=[
+                {
+                    "lsn": 10**12,
+                    "schema_version": 1,
+                    "change_type": "ALTER_ADD_COLUMN",
+                    "column_name": "size_bytes",
+                    "new_type": "int",
+                }
+            ],
+        ),
+    )
+    with pytest.raises(ValueError, match="CREATE TABLE"):
+        eng.run()
+
+
 def test_create_table_only_legal_as_history_head():
     from debezium_spark.schema_evolution import SchemaTracker
 

@@ -1,6 +1,9 @@
 """End-to-end: snapshot + replay → final table state matches the pure-
 Python oracle fold per row, including sha256(content) (input_hint
-invariant). Both compaction kernels; exactly-once re-delivery."""
+invariant), and the one-shot max-LSN election over the raw log.
+Exactly-once re-delivery; the merge scoped to the touched
+buckets agrees with a full rewrite (one bucket, every batch touches
+it)."""
 
 from __future__ import annotations
 
@@ -37,6 +40,51 @@ def _oracle_state(spark, src_path, log_path):
     return fold_final_state(src_pdf, log_pdf)
 
 
+def _max_by_state(spark, src_path, log_path):
+    """The max-LSN formulation of the same state, in one Spark election
+    over the snapshot and the whole raw log: per (repo, path) the
+    highest-LSN event wins and a delete winner drops the key. A PK
+    change deletes its old key at the event's LSN. Snapshot rows sit
+    below every log LSN; tombstones carry no table effect."""
+    from pyspark.sql import functions as F
+
+    payload = ("commit", "lang", "content")
+    snap = spark.read.parquet(src_path).select(
+        "repo", "path", F.lit("r").alias("op"), F.lit(-1).cast("long").alias("lsn"),
+        *payload,
+    )
+    log = spark.read.parquet(log_path).filter(~F.col("is_tombstone"))
+    img = lambda side: [F.col(f"{side}.{c}").alias(c) for c in payload]  # noqa: E731
+    upserts = log.filter(F.col("op") != "d").select(
+        "after.repo", "after.path", "op", "lsn", *img("after")
+    )
+    deletes = log.filter(
+        (F.col("op") == "d")
+        | (
+            (F.col("op") == "u")
+            & ((F.col("key.repo") != F.col("after.repo"))
+               | (F.col("key.path") != F.col("after.path")))
+        )
+    ).select(
+        "key.repo", "key.path", F.lit("d").alias("op"), "lsn",
+        *[F.lit(None).cast("string").alias(c) for c in payload],
+    )
+    won = (
+        snap.unionByName(upserts).unionByName(deletes)
+        .groupBy("repo", "path")
+        .agg(F.max_by(F.struct("op", *payload), F.col("lsn")).alias("w"))
+        .filter(F.col("w.op") != "d")
+        .select("repo", "path", *[F.col(f"w.{c}").alias(c) for c in payload])
+    )
+    return {(r["repo"], r["path"]): r.asDict() for r in won.collect()}
+
+
+# the two formulations of last-writer-wins the engine's batched,
+# bucketed apply must equal: the max-LSN election and the ordered
+# per-key fold of the pandas-input oracle
+REFERENCE_STATE = {"max_by": _max_by_state, "pandas": _oracle_state}
+
+
 def _engine_state_map(engine):
     return {
         (r["repo"], r["path"]): r.asDict()
@@ -60,21 +108,27 @@ def _assert_state_matches(engine, oracle):
             assert row[col] == oracle[k][col], f"{col} mismatch at {k}"
 
 
-@pytest.mark.parametrize("kernel", ["max_by", "pandas"])
-def test_replay_matches_oracle(spark, tmp_root, kernel):
+# bucket count per merge scope: with one bucket every batch touches the
+# whole table, so the touched-bucket merge is a full rewrite
+SCOPE_BUCKETS = {"touched": 8, "full": 1}
+
+
+@pytest.mark.parametrize("reference", sorted(REFERENCE_STATE))
+def test_replay_matches_oracle(spark, tmp_root, reference):
     src_path, log_path = _make_fixture(spark, tmp_root)
     cfg = EngineConfig(
         changelog_path=log_path,
-        lake_root=os.path.join(tmp_root, f"lake_{kernel}"),
+        lake_root=os.path.join(tmp_root, f"lake_{reference}"),
         source_table_path=src_path,
         batch_lsn_span=2000,
-        compaction_kernel=kernel,
         n_buckets=8,
     )
     engine = Engine(spark, cfg)
     results = engine.run()
     assert all(not r.get("skipped") for r in results)
-    _assert_state_matches(engine, _oracle_state(spark, src_path, log_path))
+    _assert_state_matches(
+        engine, REFERENCE_STATE[reference](spark, src_path, log_path)
+    )
 
 
 def test_exactly_once_redelivery(spark, tmp_root):
@@ -174,26 +228,28 @@ def test_snapshot_mode_custom(spark, tmp_root):
     assert res and res["batch_id"] == 1  # fresh snapshot batch id
 
 
-@pytest.mark.parametrize("kernel", ["max_by", "pandas"])
-def test_custom_message_key_columns(spark, tmp_root, kernel):
+@pytest.mark.parametrize("reference", sorted(REFERENCE_STATE))
+def test_custom_message_key_columns(spark, tmp_root, reference):
     """message.key.columns analogue (relational/Key.java:27-70): replay
-    keyed on (repo, path, lang) — a finer key than the PK. Compaction
-    splits on the custom key, the PK-level reduce restores one change
-    per row, and the final state must equal the default-key oracle."""
+    keyed on (repo, path, lang) — a finer key than the PK. A lang
+    change splits into DELETE(old key) + CREATE(new key, lsn + 1), the
+    PK-level election keeps the CREATE, and the final state must equal
+    both default-key references."""
     src_path, log_path = _make_fixture(spark, tmp_root, n_events=1500)
     cfg = EngineConfig(
         changelog_path=log_path,
-        lake_root=os.path.join(tmp_root, f"lake_ck_{kernel}"),
+        lake_root=os.path.join(tmp_root, f"lake_ck_{reference}"),
         source_table_path=src_path,
         batch_lsn_span=1000,
         n_buckets=8,
-        compaction_kernel=kernel,
         key_columns=("repo", "path", "lang"),
     )
     engine = Engine(spark, cfg)
     results = engine.run()
     assert all(not r.get("skipped") for r in results)
-    _assert_state_matches(engine, _oracle_state(spark, src_path, log_path))
+    _assert_state_matches(
+        engine, REFERENCE_STATE[reference](spark, src_path, log_path)
+    )
 
     # a key that drops the PK is rejected
     with pytest.raises(ValueError, match="key_columns"):
@@ -232,8 +288,7 @@ def test_truncate_apply(spark, tmp_root, scope):
         lake_root=os.path.join(tmp_root, f"lake_trunc_{scope}"),
         source_table_path=src_path,
         batch_lsn_span=700,  # truncate lands mid-batch, not on a boundary
-        n_buckets=8,
-        merge_scope=scope,
+        n_buckets=SCOPE_BUCKETS[scope],
     )
     engine = Engine(spark, cfg)
     engine.run()
@@ -251,24 +306,21 @@ def test_truncate_apply(spark, tmp_root, scope):
 def test_merge_scopes_agree_on_equal_lsn_ties(spark, tmp_root):
     """Both merge scopes must keep the STATE row when a change arrives
     with the exact LSN that wrote the row (strict > guard) — the
-    incremental-snapshot-chunk-at-the-watermark case; the scopes used
-    to disagree (full broke ties toward the change)."""
+    incremental-snapshot-chunk-at-the-watermark case."""
     from debezium_spark.lake import LakeTable
 
     for scope in ("touched", "full"):
-        lake = LakeTable(spark, f"{tmp_root}/tie_{scope}", n_buckets=4)
+        lake = LakeTable(
+            spark, f"{tmp_root}/tie_{scope}", n_buckets=SCOPE_BUCKETS[scope]
+        )
         lake.create()
         mk = lambda commit, lsn: spark.createDataFrame(  # noqa: E731
             [("u", lsn, "r1", "p1", commit, "py", "body-" + commit)],
             "op string, lsn long, repo string, path string, "
             "commit string, lang string, content string",
         )
-        if scope == "touched":
-            lake.merge(mk("aaaa", 10), 1)
-            lake.merge(mk("bbbb", 10), 2)  # same lsn, new content
-        else:
-            lake.merge_full(mk("aaaa", 10), 1)
-            lake.merge_full(mk("bbbb", 10), 2)
+        lake.merge(mk("aaaa", 10), 1)
+        lake.merge(mk("bbbb", 10), 2)  # same lsn, new content
         rows = lake.read_state().collect()
         assert len(rows) == 1
         assert rows[0]["commit"] == "aaaa", scope  # state won the tie
@@ -294,8 +346,8 @@ def test_frontier_rejects_partition_overflow(spark, tmp_root):
 
 
 def test_full_scope_matches_touched(spark, tmp_root):
-    """merge_scope='full' (single-shuffle merge-as-compaction) must
-    produce byte-identical final state to the touched-bucket COW merge."""
+    """The merge as a full rewrite (one bucket) must produce
+    byte-identical final state to the merge scoped to touched buckets."""
     import hashlib
 
     from debezium_spark.generator import gen_change_log, gen_source_table
@@ -314,8 +366,7 @@ def test_full_scope_matches_touched(spark, tmp_root):
                 lake_root=f"{tmp_root}/lake_{scope}",
                 source_table_path=f"{tmp_root}/src",
                 batch_lsn_span=800,
-                n_buckets=8,
-                merge_scope=scope,
+                n_buckets=SCOPE_BUCKETS[scope],
             ),
         )
         eng.run()

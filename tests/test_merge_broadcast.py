@@ -1,18 +1,12 @@
-"""Sparse-batch merge plan: the state side must never shuffle.
-
-At the 10^10 steady state a micro-batch touches a tiny fraction of
-keys; the compacted change set broadcasts, so the only exchange in the
-whole apply is the upstream compaction shuffle. On Iceberg this is a
-storage-partitioned join; these tests prove the same property on the
-parquet stand-in — and that the broadcast plan is value-identical to
-the dense full-outer fallback.
+"""The one merge, as a merge-as-compaction: value cases on a seeded
+lake (mixed batch, LSN tie with state, truncate, delete of an unseen
+key) and a plan pin that a sparse batch scans only the bucket
+directories it touches.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
 
 from debezium_spark.lake import LakeTable
 
@@ -59,88 +53,73 @@ def _state(lt):
 
 
 def test_broadcast_merge_equals_full_outer_merge(spark, tmp_root):
-    bc = _seed(spark, os.path.join(tmp_root, "bc"))  # default: broadcast
-    fo = _seed(
-        spark, os.path.join(tmp_root, "fo"), broadcast_merge_threshold=-1
-    )
-    bc.merge(_mixed_batch(spark), 2)
-    fo.merge(_mixed_batch(spark), 2)
-    s_bc, s_fo = _state(bc), _state(fo)
-    assert s_bc == s_fo
-    keys = {(r[0], r[1]) for r in s_bc}
-    assert ("r0", "p100") in keys  # insert landed
-    assert ("r2", "p010") not in keys  # delete applied
-    by_key = {(r[0], r[1]): r for r in s_bc}
-    assert by_key[("r0", "p016")][4] == "base-16"  # stale change lost
-    assert by_key[("r0", "p000")][4] == "upd-0"  # update won
-
-
-def test_sparse_merge_state_side_is_exchange_free(spark, tmp_root):
-    """Plan pin: the sparse-batch apply has ZERO shuffle exchanges —
-    state scan → broadcast joins → union. The only exchange of the
-    whole batch is the upstream change-set compaction (which persists
-    before the merge)."""
-    import re
-
-    lt = _seed(spark, os.path.join(tmp_root, "plan"))
-    old = lt.read_state(logical=False, with_sys=True)
-    changes = _mixed_batch(spark)
-    ns = lt._merge_new_state(old, changes, lt.table_schema(), broadcast=True)
-    plan = ns._sc._jvm.PythonSQLUtils.explainString(
-        ns._jdf.queryExecution(), "formatted"
-    )
-    shuffles = re.findall(r"\(\d+\) Exchange", plan)
-    assert shuffles == [], f"state-side shuffle in sparse merge:\n{plan}"
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # dense fallback keeps the single full-outer shuffle shape
-    ns_fo = lt._merge_new_state(old, changes, lt.table_schema(), broadcast=False)
-    plan_fo = ns_fo._sc._jvm.PythonSQLUtils.explainString(
-        ns_fo._jdf.queryExecution(), "formatted"
-    )
-    assert "Join FullOuter" in plan_fo or "SortMergeJoin" in plan_fo
-
-
-def test_byte_gate_falls_back_and_stays_correct(spark, tmp_root):
-    """The broadcast gate bounds BYTES too (an explicit broadcast hint
-    bypasses autoBroadcastJoinThreshold; 50k rows of multi-KB payloads
-    would blow the 8GB broadcast limit): a change set under the row
-    threshold but over the byte bound must take the shuffled fallback
-    and still produce the identical state."""
-    tiny = _seed(
-        spark, os.path.join(tmp_root, "bytegate"),
-        broadcast_merge_max_bytes=100,  # forces the fallback
-    )
-    ref = _seed(spark, os.path.join(tmp_root, "bytegate_ref"))
-    tiny.merge(_mixed_batch(spark), 2)
-    ref.merge(_mixed_batch(spark), 2)
-    assert _state(tiny) == _state(ref)
-
-
-def test_merge_full_light_winner_plan_equals_wide_shuffle(spark, tmp_root):
-    """merge_full's light winner election (pruned (key,lsn,src) shuffle
-    + broadcast winner fetch — payloads never shuffle) must be value-
-    identical to the wide max_by shuffle on every op mix, including the
-    state-wins-lsn-ties guard."""
-    light = _seed(
-        spark,
-        os.path.join(tmp_root, "mf_light"),
-        lww_light_threshold=2_000_000,  # opt-in (default off, measured)
-    )
-    wide = _seed(spark, os.path.join(tmp_root, "mf_wide"))
+    """A mixed batch on a seeded lake: updates, deletes, a stale change,
+    inserts, a delete of an unseen key and an LSN tie with state."""
+    lt = _seed(spark, os.path.join(tmp_root, "mixed"))
     batch = _mixed_batch(spark).unionByName(
         # lsn tie with state: seed wrote k=30 at lsn 1030; an event at
         # the SAME lsn must lose (state wins ties, strict guard)
         _changes(spark, [("r2", "p030", "c-tie-30", "py", "tie-30", "u", 1030)])
     )
-    light.merge_full(batch, 2)
-    wide.merge_full(batch, 2)
-    s_l, s_w = _state(light), _state(wide)
-    assert s_l == s_w
-    by_key = {(r[0], r[1]): r for r in s_l}
+    lt.merge(batch, 2)
+    s = _state(lt)
+    keys = {(r[0], r[1]) for r in s}
+    assert ("r0", "p100") in keys  # insert landed
+    assert ("r2", "p010") not in keys  # delete applied
+    assert ("r0", "p500") not in keys  # delete of an unseen key: no-op
+    by_key = {(r[0], r[1]): r for r in s}
+    assert by_key[("r0", "p016")][4] == "base-16"  # stale change lost
+    assert by_key[("r0", "p000")][4] == "upd-0"  # update won
     assert by_key[("r2", "p030")][4] == "base-30"  # tie → state kept
-    assert ("r0", "p100") in {(r[0], r[1]) for r in s_l}  # insert
-    assert ("r2", "p010") not in {(r[0], r[1]) for r in s_l}  # delete
+    assert len(s) == 60 - 5 + 10
+    # one manifest change per changed key (duplicates collapse)
+    assert lt.manifest()["metrics"]["changes"] == 10 + 5 + 5 + 10 + 1 + 1
+
+
+def test_merge_elects_within_a_batch(spark, tmp_root):
+    """Change rows need not be key-unique: several events of one key
+    in one batch elect the max-LSN one, wherever it sits."""
+    lt = _seed(spark, os.path.join(tmp_root, "multi"))
+    lt.merge(
+        _changes(
+            spark,
+            _rows([0], "u", 7000, "late")
+            + _rows([0], "u", 6000, "early")
+            + _rows([1], "u", 6000, "upd")
+            + _rows([1], "d", 6500, "del")
+            + _rows([200], "d", 6000, "del")
+            + _rows([200], "c", 6500, "ins"),
+        ),
+        2,
+    )
+    by_key = {(r[0], r[1]): r for r in _state(lt)}
+    assert by_key[("r0", "p000")][4] == "late-0"
+    assert ("r1", "p001") not in by_key
+    assert by_key[("r0", "p200")][4] == "ins-200"
+    assert lt.manifest()["metrics"]["changes"] == 3
+
+
+def test_sparse_merge_scans_only_touched_buckets(spark, tmp_root):
+    """Plan pin: a batch touching one bucket reads only that bucket's
+    directory, rewrites only it, and carries every other bucket
+    forward by reference."""
+    lt = _seed(spark, os.path.join(tmp_root, "prune"))
+    before = lt.manifest()["files"]
+    scans = []
+    read_state = lt.read_state
+
+    def spy(buckets=None, **kw):
+        df = read_state(buckets=buckets, **kw)
+        scans.append(df.inputFiles())
+        return df
+
+    lt.read_state = spy
+    lt.merge(_changes(spark, _rows([7], "u", 9000, "one")), 2)
+    (files,) = scans
+    after = lt.manifest()["files"]
+    changed = [b for b in after if after[b] != before[b]]
+    assert len(changed) == 1 and len(after) == len(before)
+    assert files and all(f"/{before[changed[0]]['path']}/" in f for f in files)
 
 
 def test_broadcast_merge_respects_truncate(spark, tmp_root):

@@ -372,6 +372,44 @@ def test_jpeg_decode_hand_built_stream():
     assert np.array_equal(out, np.full((8, 8, 3), 200, dtype=np.uint8))
 
 
+def test_jpeg_lowest_quality_table_fits_the_8bit_dqt():
+    """quality=1 scales the flat table past 255; the file's 8-bit DQT
+    must carry the same value the encoder quantized with, or the
+    decoder dequantizes with a wrapped table. Block-constant content
+    has DC only: the error is half a DC step (255 / 16) per YCbCr
+    channel, at most 2.772x that in RGB (B = Y + 1.772 Cb), plus
+    rounding. A wrapped table misses this bound by 2x."""
+    for seed in range(3):
+        img = _tiled(2, 2, tiles_seed=seed)
+        dec = decode_jpeg(encode_jpeg(img, quality=1))
+        assert np.abs(dec.astype(int) - img.astype(int)).max() <= 47
+
+
+def test_jpeg_zrl_past_last_coefficient_is_rejected():
+    """A ZRL (16 zeros) that runs past coefficient 63 is a corrupt
+    stream: four ZRLs from k=1 reach k=65. Hand-built like the stream
+    above: DC category 0 and AC ZRL each own the length-1 code '0', so
+    the entropy bits are 0 0000 + 111 padding = 0x07."""
+    import struct
+
+    def seg(marker, payload):
+        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+    one_code = bytes([1] + [0] * 15)
+    stream = (
+        b"\xff\xd8"
+        + seg(0xDB, b"\x00" + b"\x01" * 64)
+        + seg(0xC0, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
+        + seg(0xC4, b"\x00" + one_code + bytes([0x00]))  # DC: category 0
+        + seg(0xC4, b"\x10" + one_code + bytes([0xF0]))  # AC: ZRL
+        + seg(0xDA, bytes([1, 1, 0x00, 0, 0x3F, 0]))
+        + bytes([0x07])
+        + b"\xff\xd9"
+    )
+    with pytest.raises(ValueError, match="AC coefficient index overrun"):
+        decode_jpeg(stream)
+
+
 def test_jpeg_rejects_unsupported_profiles():
     with pytest.raises(ValueError, match="not a JPEG"):
         decode_jpeg(b"\x89PNG\r\n\x1a\n" + b"\x00" * 40)

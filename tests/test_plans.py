@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from debezium_spark.generator import gen_change_log
-from debezium_spark.operators.compaction import compact_max_by
+from debezium_spark.operators.compaction import compact
 from debezium_spark.operators.transforms import (
     drop_tombstones,
     normalize_target_key,
@@ -61,20 +61,39 @@ def test_lsn_range_filter_pushed_to_scan(spark, changelog_path):
     assert "LessThan(lsn,200)" in plan
 
 
-def test_compaction_has_partial_aggregation_single_exchange(spark, changelog_path):
+def test_compaction_has_partial_aggregation_single_exchange(
+    spark, changelog_path, tmp_path
+):
+    """Plan pin on the merge's election: state ∪ raw change rows meet
+    in ONE exchange with an aggregate on each side — the map-side
+    combine that pre-reduces a hot key in every task before the
+    shuffle (no salting needed)."""
+    import re
+
+    from debezium_spark.lake import LakeTable
+
     ev = normalize_target_key(
         pk_change_split(drop_tombstones(spark.read.parquet(changelog_path)))
     )
-    plan = plan_of(compact_max_by(ev))
-    # partial (map-side) + final aggregate around exactly one exchange:
-    # a hot key is pre-reduced in every task before the shuffle
+    changes = ev.select(
+        "key.repo", "key.path", "op", "lsn",
+        "after.commit", "after.lang", "after.content",
+    )
+    lt = LakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    lt.create()
+    lt.merge(changes, 1)
+    state = lt.read_state(logical=False, with_sys=True)
+    plan = plan_of(compact(changes, state))
     assert n_exchanges(plan) == 1
-    # max_by over a struct buffer plans as SortAggregate — what matters
-    # is one aggregate on each side of the exchange (map-side combine)
-    import re
-
-    aggs = re.findall(r"\(\d+\) (?:Sort|Hash|ObjectHash)Aggregate", plan)
-    assert len(aggs) >= 2
+    # max_by over a struct buffer plans as SortAggregate; the tree
+    # section lists final aggregate, exchange, partial aggregate
+    tree = plan.split("\n\n")[0]
+    nodes = re.findall(
+        r"(SortAggregate|HashAggregate|ObjectHashAggregate|Exchange)", tree
+    )
+    k = nodes.index("Exchange")
+    assert nodes[k - 1] != "Exchange" and nodes[k + 1] != "Exchange"
+    assert "Aggregate" in nodes[k - 1] and "Aggregate" in nodes[k + 1]
 
 
 def test_column_pruning_reaches_scan(spark):

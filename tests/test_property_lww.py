@@ -1,12 +1,12 @@
-"""Property-based check of the LWW compaction kernel (hypothesis).
+"""Property-based check of the LWW election kernel (hypothesis).
 
 The reference's core invariant — the max-LSN event per key determines
 the final row, regardless of arrival order (SURVEY §4
 single-writer-per-partition; ChangeEventQueue FIFO) — must hold for
 ARBITRARY event sequences, not just generator-shaped ones. Hypothesis
-drives random op sequences over a small key space through all three
-kernel variants (max_by, pandas, salted pandas) and a pure-Python
-fold; all four must agree exactly.
+drives random op sequences over a small key space through the election
+(``compaction.compact``, with and without tombstone retention) and a
+pure-Python fold; they must agree exactly.
 """
 
 from __future__ import annotations
@@ -16,10 +16,7 @@ from hypothesis import strategies as st
 
 from debezium_spark.operators.compaction import compact
 
-_SCHEMA = (
-    "key struct<repo:string,path:string>, lsn bigint, op string, "
-    "after struct<content:string>, schema_version int"
-)
+_SCHEMA = "repo string, path string, lsn bigint, op string, content string"
 
 _events = st.lists(
     st.tuples(
@@ -36,11 +33,10 @@ _events = st.lists(
 def _result_map(df):
     return {
         (r["repo"], r["path"]): (
-            r["lsn"],
-            r["op"],
-            None if r["after"] is None else r["after"]["content"],
+            r["_lsn"],
+            "d" if r["_deleted"] else r["content"],
         )
-        for r in (x.asDict(recursive=True) for x in df.collect())
+        for r in df.collect()
     }
 
 
@@ -56,20 +52,13 @@ def test_lww_kernels_match_python_fold_on_arbitrary_logs(spark, evs):
     for lsn, (ri, pi, op, tok) in enumerate(evs, start=1):
         key = (f"r{ri}", f"p{pi}")
         content = None if op == "d" else f"v{tok}"
-        rows.append(
-            (
-                {"repo": key[0], "path": key[1]},
-                lsn,
-                op,
-                None if op == "d" else {"content": content},
-                1,
-            )
-        )
-        expected[key] = (lsn, op, content)
-    df = spark.createDataFrame(rows, _SCHEMA)
-    a = _result_map(compact(df, "max_by"))
-    b = _result_map(compact(df, "pandas"))
-    c = _result_map(compact(df, "pandas", salt=4))
-    assert a == expected
-    assert b == expected
-    assert c == expected
+        rows.append((key[0], key[1], lsn, op, content))
+        expected[key] = (lsn, "d" if op == "d" else content)
+    # arrival order reversed: the winner comes from LSN, never position
+    df = spark.createDataFrame(rows[::-1], _SCHEMA)
+    assert _result_map(compact(df, retain_tombstones=True)) == expected
+    live = {
+        (r["repo"], r["path"]): (r["_lsn"], r["content"])
+        for r in compact(df).collect()
+    }
+    assert live == {k: v for k, v in expected.items() if v[1] != "d"}

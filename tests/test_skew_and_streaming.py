@@ -1,5 +1,5 @@
-"""Skew fixture (one hot repo), salted compaction, and the Structured
-Streaming front-end (foreachBatch + checkpoint, availableNow)."""
+"""Skew fixture (one hot repo) and the Structured Streaming front-end
+(foreachBatch + checkpoint, availableNow)."""
 
 from __future__ import annotations
 
@@ -22,9 +22,8 @@ def _oracle(spark, src_path, log_path):
 
 
 def test_skewed_hot_repo(spark, tmp_root):
-    """70% of events hit repo 0 (FIXTURES.md §5 skew_log). The salted
-    pandas kernel and the partial-agg max_by kernel must both converge
-    to the oracle state."""
+    """70% of events hit repo 0 (FIXTURES.md §5 skew_log). The merge's
+    partial-aggregated election must converge to the oracle state."""
     src_path = os.path.join(tmp_root, "src")
     log_path = os.path.join(tmp_root, "log")
     gen_source_table(spark, 5, 20).write.parquet(src_path)
@@ -43,29 +42,24 @@ def test_skewed_hot_repo(spark, tmp_root):
 
     oracle = _oracle(spark, src_path, log_path)
     oracle_sha = content_sha256_map(oracle)
-    for kernel, salt in (("max_by", 0), ("pandas", 16)):
-        cfg = EngineConfig(
-            changelog_path=log_path,
-            lake_root=os.path.join(tmp_root, f"lake_{kernel}"),
-            source_table_path=src_path,
-            batch_lsn_span=3000,
-            compaction_kernel=kernel,
-            salt=salt,
-            n_buckets=8,
-        )
-        engine = Engine(spark, cfg)
-        engine.run()
-        import hashlib
+    cfg = EngineConfig(
+        changelog_path=log_path,
+        lake_root=os.path.join(tmp_root, "lake"),
+        source_table_path=src_path,
+        batch_lsn_span=3000,
+        n_buckets=8,
+    )
+    engine = Engine(spark, cfg)
+    engine.run()
+    import hashlib
 
-        got = {
-            (r["repo"], r["path"]): r["content"]
-            for r in engine.final_state().collect()
-        }
-        assert set(got) == set(oracle), kernel
-        for k, v in got.items():
-            assert (
-                hashlib.sha256((v or "").encode()).hexdigest() == oracle_sha[k]
-            ), (kernel, k)
+    got = {
+        (r["repo"], r["path"]): r["content"]
+        for r in engine.final_state().collect()
+    }
+    assert set(got) == set(oracle)
+    for k, v in got.items():
+        assert hashlib.sha256((v or "").encode()).hexdigest() == oracle_sha[k], k
 
 
 def test_structured_streaming_front_end(spark, tmp_root):

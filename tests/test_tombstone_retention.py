@@ -32,9 +32,9 @@ def _row(k, op, lsn, tag):
     return (f"r{k % 4}", f"p{k:03d}", f"c-{tag}", "py", f"{tag}", op, lsn)
 
 
-def _seed(spark, root, retain, **kw):
+def _seed(spark, root, retain, n_buckets=4):
     lt = LakeTable(
-        spark, root, n_buckets=4, retain_tombstones=retain, **kw
+        spark, root, n_buckets=n_buckets, retain_tombstones=retain
     )
     lt.create()
     lt.merge(_ch(spark, [_row(k, "c", 100 + k, f"base-{k}") for k in range(8)]), 1)
@@ -76,23 +76,21 @@ def test_delete_before_any_insert_guards_unseen_key(spark, tmp_root):
 
 
 def test_all_merge_plans_agree_under_retention(spark, tmp_root):
-    # broadcast, dense full-outer, and full-scope merges must produce
-    # the same retained state
+    # the one merge, scoped to the touched buckets (4 buckets) and as a
+    # full rewrite (1 bucket: every batch touches it), must produce the
+    # same retained state
     batches = [
         [_row(1, "d", 500, "del"), _row(9, "d", 777, "ghost-del")],
         [_row(1, "u", 300, "late"), _row(9, "c", 200, "late-ins"),
          _row(2, "u", 900, "upd")],
     ]
     lakes = {
-        "bc": _seed(spark, f"{tmp_root}/bc", True),
-        "fo": _seed(spark, f"{tmp_root}/fo", True,
-                    broadcast_merge_threshold=-1),
-        "full": _seed(spark, f"{tmp_root}/full", True),
+        "touched": _seed(spark, f"{tmp_root}/touched", True),
+        "full": _seed(spark, f"{tmp_root}/full", True, n_buckets=1),
     }
-    for i, b in enumerate(batches):
-        lakes["bc"].merge(_ch(spark, b), 2 + i)
-        lakes["fo"].merge(_ch(spark, b), 2 + i)
-        lakes["full"].merge_full(_ch(spark, b), 2 + i)
+    for lt in lakes.values():
+        for i, b in enumerate(batches):
+            lt.merge(_ch(spark, b), 2 + i)
     states = {
         n: sorted(
             tuple(r)
@@ -100,20 +98,20 @@ def test_all_merge_plans_agree_under_retention(spark, tmp_root):
         )
         for n, lt in lakes.items()
     }
-    assert states["bc"] == states["fo"] == states["full"]
-    live = _live_keys(lakes["bc"])
+    assert states["touched"] == states["full"]
+    live = _live_keys(lakes["touched"])
     assert ("r1", "p001") not in live and ("r1", "p009") not in live
     assert ("r2", "p002") in live
     # tombstones visible to the merge reader, hidden from consumers
     sys_rows = {
         (r["repo"], r["path"]): r["_deleted"]
-        for r in lakes["bc"].read_state(
+        for r in lakes["touched"].read_state(
             logical=False, with_sys=True
         ).collect()
     }
     assert sys_rows[("r1", "p001")] is True
     assert sys_rows[("r2", "p002")] is False
-    logical_cols = lakes["bc"].read_state(logical=True).columns
+    logical_cols = lakes["touched"].read_state(logical=True).columns
     assert "_deleted" not in logical_cols and "_lsn" not in logical_cols
 
 

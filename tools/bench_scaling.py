@@ -83,15 +83,14 @@ gen_change_log(spark, 4, 50, n_events=5000, partitions=32, max_reps=2
     ).write.parquet(f"{tmp}/wlog")
 Engine(spark, EngineConfig(changelog_path=f"{tmp}/wlog",
     lake_root=f"{tmp}/wlake", source_table_path=f"{tmp}/wsrc",
-    batch_lsn_span=6000, partitions=32, merge_scope="full")).run()
+    batch_lsn_span=6000, partitions=32)).run()
 
 inp = %(inp)r
 total = spark.read.parquet(inp + "/log").count()
 eng = Engine(spark, EngineConfig(
     changelog_path=inp + "/log", lake_root=f"{tmp}/lake",
     source_table_path=inp + "/src",
-    batch_lsn_span=%(events)d * 2 // 2 + 10, partitions=32,
-    merge_scope="full"))
+    batch_lsn_span=%(events)d * 2 // 2 + 10, partitions=32))
 def _cpu():
     with open("/proc/stat") as f:
         return list(map(int, f.readline().split()[1:]))
@@ -248,7 +247,7 @@ def main() -> None:
         "\n## Measured (this repo)\n\n"
         "CDC replay (snapshot + LSN-ordered stream replay → exact final state), one shared synthetic\n"
         f"repo-file change log of {events:,} events over {N_REPOS * PATHS:,} keys, 2 micro-batches,\n"
-        "merge_scope=full, tmpfs-backed, JIT-warmed, interleaved best-of runs\n"
+        "tmpfs-backed, JIT-warmed, interleaved best-of runs\n"
         "(methodology: tools/bench_scaling.py):\n\n"
         "| Metric | Value | Notes |\n|---|---|---|\n"
         f"| Replay throughput @ local[8] (≙ N executors) | {best[8]['events_per_sec']:,.0f} events/s | snapshot {best[8]['snapshot_s']}s + stream {best[8]['stream_s']}s |\n"
