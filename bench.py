@@ -8,9 +8,9 @@ prints ONE JSON line:
 The headline number is the north-rule metric: change-events/sec through
 the full engine (snapshot -> LSN-ordered replay -> LWW compaction ->
 fenced merge -> final state). Per-query seconds cover the catalog.
-Scaling evidence (local[8] vs local[32]) comes from
-tools/bench_scaling.py which shells out to this file at two
-parallelism levels.
+``SPARK_GRAFT_CPUS`` defaults to the CPUs this process may run on. The
+per-layer benchmark and the (1,4) scaling diagnostic live in
+``perfbench/``.
 """
 
 from __future__ import annotations
@@ -23,60 +23,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-# ---------------------------------------------------------------------------
-# Host-window self-classification (VERDICT r3 item 8). This host runs in
-# minutes-to-hours degradation waves (4-6x wall swings on identical
-# code, BASELINE.md taxonomy); a BENCH file that lands in one reads as
-# a regression until cross-checked by hand. Each run therefore records
-# its own evidence: the /proc/stat cpu mix across the whole run (the
-# degraded windows show elevated sys/steal), plus a fixed single-thread
-# sha256 probe before and after (pure-CPU per-cycle speed, immune to
-# Spark's own load) against a clean-window reference rate.
-# ---------------------------------------------------------------------------
-
-# best single-thread sha256 rate observed in a clean window on this
-# host (MB/s); re-calibrate if the sandbox hardware changes
-_PROBE_REF_MBPS = 1500.0
-# best clean-window full-payload replay at the DEFAULT bench config
-# (BENCH_HISTORY r3_catalog117_session7). The r4 scaling session
-# showed a window can read probe-clean while parallel Spark work runs
-# far below clean rates (the shared-guest-kernel ceiling) — so the
-# replay itself is cross-checked against this reference whenever the
-# default config ran, and a probe-clean-but-slow run is downgraded to
-# degraded_parallel instead of mislabeled clean.
-_REPLAY_CLEAN_REF = 89_100.0
-
-
-def _cpu_probe_mbps(iters: int = 2000) -> float:
-    import hashlib
-
-    blk = b"\x5a" * 65536
-    h = hashlib.sha256()
-    t0 = time.perf_counter()
-    for _ in range(iters):
-        h.update(blk)
-    return round(iters * 65536 / (time.perf_counter() - t0) / 1e6, 1)
-
-
-def _cpu_stat() -> list[int]:
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:]))
-
-
-def _classify_window(mix: dict, probes: list[float]) -> str:
-    """clean / moderate / degraded per the BASELINE.md taxonomy: the
-    best probe rep (waves are intermittent — one clean rep proves the
-    cycles exist) plus kernel-time evidence."""
-    ratio = max(probes) / _PROBE_REF_MBPS
-    sys_pct = mix.get("sys", 0.0)
-    steal = mix.get("steal", 0.0)
-    if ratio < 0.6 or steal > 5.0 or sys_pct > 30.0:
-        return "degraded"
-    if ratio >= 0.8 and steal <= 2.0 and sys_pct <= 20.0:
-        return "clean"
-    return "moderate"
 
 
 def bench_cdc_replay(
@@ -250,7 +196,9 @@ def bench_multi_table_streaming(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     n_events = int(os.environ.get("BENCH_CDC_EVENTS", "1000000"))
     cdc_kw = dict(
         n_repos=int(os.environ.get("BENCH_CDC_REPOS", "50")),
@@ -283,9 +231,6 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    probes = [_cpu_probe_mbps()]
-    cstat0 = _cpu_stat()
-
     queries = entrymod.queries()
     # untimed JIT/codegen + page-cache warmup: without this the first
     # catalog entry absorbs JVM startup (~7-10 s) and reads as a
@@ -302,10 +247,8 @@ def main() -> None:
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         per_query[name] = round(time.time() - t0, 3)
 
-    # the host runs in minutes-long degradation waves (4-6x swings on
-    # identical code, see BASELINE.md); the headline replay leg runs
-    # twice and reports the best rep, with every rep recorded, so one
-    # wave-aligned rep can't masquerade as a regression
+    # the headline replay leg runs BENCH_CDC_REPS times and reports the
+    # best rep, with every rep recorded
     n_reps = int(os.environ.get("BENCH_CDC_REPS", "2"))
     reps = [
         bench_cdc_replay(spark, n_events=n_events, partitions=cpus, **cdc_kw)
@@ -323,32 +266,6 @@ def main() -> None:
         else None
     )
 
-    probes.append(_cpu_probe_mbps())
-    d = [b - a for a, b in zip(cstat0, _cpu_stat())]
-    mix = {
-        k: round(v / max(sum(d), 1) * 100, 1)
-        for k, v in zip(
-            ["user", "nice", "sys", "idle", "iow", "irq", "sirq", "steal"],
-            d,
-        )
-    }
-    default_cfg = n_events == 1_000_000 and cdc_kw["n_repos"] == 50 and (
-        cdc_kw["paths"] == 200 and cpus == 32
-    )
-    host_window = {
-        "class": _classify_window(mix, probes),
-        "cpu_mix": mix,
-        "cpu_probe_mbps": probes,
-        "probe_ref_mbps": _PROBE_REF_MBPS,
-    }
-    if default_cfg:
-        ratio = round(replay["events_per_sec"] / _REPLAY_CLEAN_REF, 3)
-        host_window["replay_vs_clean_ref"] = ratio
-        if host_window["class"] == "clean" and ratio < 0.6:
-            # probe-clean but the parallel leg is crawling: the
-            # shared-kernel ceiling a single-thread probe cannot see
-            host_window["class"] = "degraded_parallel"
-
     print(
         json.dumps(
             {
@@ -361,7 +278,6 @@ def main() -> None:
                 "cdc_replay": replay,
                 "multi_table_streaming": multi_table,
                 "catalog_total_s": round(sum(per_query.values()), 2),
-                "host_window": host_window,
             }
         )
     )

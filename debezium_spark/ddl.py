@@ -422,13 +422,15 @@ def parse_ddl_cols(ddl: Column) -> list[Column]:
     # top-level-comma counting: valid on any balanced-paren fragment
     # that does NOT end with an enclosing ')' — so CREATE counts over
     # its extracted body (greedy group strips the outer parens), MULTI
-    # over the whole statement
+    # over the whole statement. String literals are emptied first: a
+    # ',' or '(' inside a quoted DEFAULT is not structure.
+    unquoted = F.regexp_replace(ddl, r"'[^']*'", "''")
     cre_body = F.regexp_extract(
-        ddl, rf"(?i)^\s*CREATE\s+TABLE\s+{_ID}\s*\((.*)\)\s*;?\s*$", 1
+        unquoted, rf"(?i)^\s*CREATE\s+TABLE\s+{_ID}\s*\((.*)\)\s*;?\s*$", 1
     )
     n_top_cre = F.regexp_count(cre_body, F.lit(top_comma)).cast("long")
-    n_top_mul = F.regexp_count(ddl, F.lit(top_comma)).cast("long")
-    has_pk = ddl.rlike(rf"(?i){pkcl}")
+    n_top_mul = F.regexp_count(unquoted, F.lit(top_comma)).cast("long")
+    has_pk = unquoted.rlike(rf"(?i){pkcl}")
     n_items = (
         # CREATE: top-level commas + 1, minus the PK clause if present
         F.when(is_cre, n_top_cre + 1 - F.when(has_pk, 1).otherwise(0))
@@ -440,7 +442,7 @@ def parse_ddl_cols(ddl: Column) -> list[Column]:
         is_cre & has_pk,
         F.regexp_replace(
             F.regexp_extract(
-                ddl, rf"(?i)PRIMARY\s+KEY\s*\(\s*([^)]*?)\s*\)", 1
+                unquoted, rf"(?i)PRIMARY\s+KEY\s*\(\s*([^)]*?)\s*\)", 1
             ),
             r"\s*,\s*",
             ",",

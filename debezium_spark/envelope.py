@@ -144,30 +144,6 @@ def is_valid_delete(row) -> bool:
     )
 
 
-def is_valid_truncate(row) -> bool:
-    # truncate carries no image and no key (Envelope.java:319 — the
-    # table effect is delete-everything-below-its-LSN).
-    return (
-        row["op"] == OP_TRUNCATE
-        and not row["is_tombstone"]
-        and row["after"] is None
-        and row["before"] is None
-    )
-
-
-def is_valid_message(row) -> bool:
-    # op='m' rows carry a payload in `message`, no row images.
-    # row["message"] (not .get): pyspark Row has no .get(), and the
-    # field is always present in EVENT_SCHEMA.
-    return (
-        row["op"] == OP_MESSAGE
-        and not row["is_tombstone"]
-        and row["after"] is None
-        and row["before"] is None
-        and row["message"] is not None
-    )
-
-
 def is_valid_tombstone(row) -> bool:
     # null value side, key preserved (EventDispatcher.java:496-508).
     return (

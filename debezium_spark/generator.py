@@ -285,38 +285,3 @@ def truncate_envelopes(
     return _control_envelope(
         spark, [(lsn, "t", schema_version, None) for lsn in lsns]
     )
-
-
-def gen_schema_log(spark: SparkSession, changes: list[dict]) -> DataFrame:
-    """Structured schema-change events (FIXTURES.md §3; analogue of
-    ``relational/history/TableChanges.java:92-215``).
-
-    Each dict: {lsn, schema_version, change_type, column_name,
-    new_type, prev_name}.
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("lsn", T.LongType(), False),
-            T.StructField("schema_version", T.IntegerType(), False),
-            T.StructField("change_type", T.StringType(), False),
-            T.StructField("table", T.StringType(), False),
-            T.StructField("column_name", T.StringType(), True),
-            T.StructField("new_type", T.StringType(), True),
-            T.StructField("prev_name", T.StringType(), True),
-        ]
-    )
-    rows = [
-        (
-            int(c["lsn"]),
-            int(c["schema_version"]),
-            c["change_type"],
-            TABLE_NAME,
-            c.get("column_name"),
-            c.get("new_type"),
-            c.get("prev_name"),
-        )
-        for c in changes
-    ]
-    return spark.createDataFrame(rows, schema)

@@ -1242,16 +1242,6 @@ def propagate_source_metadata(
     return df.select(*cols)
 
 
-def heartbeat_topic(prefix: str, server: str) -> str:
-    """``__debezium-heartbeat.<server>`` (HeartbeatImpl.java:38-43)."""
-    return f"{prefix}.{server}" if prefix else f"__debezium-heartbeat.{server}"
-
-
-def transaction_topic(server: str) -> str:
-    """``<server>.transaction`` (TransactionMonitor topic)."""
-    return f"{server}.transaction"
-
-
 # ---------------------------------------------------------------------------
 # Custom converter SPI (debezium-api spi/converter/CustomConverter.java;
 # registry relational/CustomConverterRegistry.java)

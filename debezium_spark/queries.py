@@ -2,17 +2,16 @@
 ``(spark, sf_dir) -> DataFrame`` callable, paired with an ANSI-SQL
 DuckDB oracle over the same parquet tables.
 
-The CDC operator family is expressed over the driver's ``events``
-table, read as a change stream: ``event_id`` is the LSN (unique,
-monotone), ``user_id`` the key, and ``event_type`` maps onto Debezium
-op codes (``signup→c``, ``error→d``, else ``u`` — the envelope ops of
-``data/Envelope.java:34-78``). The engine-proper (repo-table CDC with
-snapshot/restart/schema evolution) lives in
-:mod:`debezium_spark.streaming.engine` and is exercised end-to-end by
-the flagship ``cdc_replay_final_state`` (multi-batch fenced replay +
-snapshot survivorship) and ``cdc_engine_replay_events`` (dense
-single-batch) — both over events-derived deterministic logs, both
-value-hash-checked against SQL oracles.
+CDC entries run the engine's own operators. :func:`_envelopes` turns
+the driver's ``events`` table into engine change envelopes
+(``event_id`` → LSN, ``user_id`` → key, ``event_type`` → op code —
+``signup→c``, ``error→d``, else ``u``, the envelope ops of
+``data/Envelope.java:34-78`` — and ``source.table``), and an entry is
+adapter → engine operator (``operators.*``, ``sources.*``,
+``LakeTable``, ``publisher``, the full ``Engine``) → a projection onto
+its oracle's columns, so the oracle checks the code the engine runs.
+The entries named in :data:`CATALOG_ONLY` have no engine counterpart
+and compute inline.
 
 Determinism rules for oracle hash-matching:
 - every computed double is either carried verbatim from parquet or
@@ -34,6 +33,9 @@ from debezium_spark.functions import dedup as D
 from debezium_spark.functions import multimodal as M
 from debezium_spark.functions import similarity as S
 from debezium_spark.functions import text as X
+from debezium_spark.operators import connect_smt as C
+from debezium_spark.operators import transforms as T
+from debezium_spark.operators.compaction import compact
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -79,6 +81,126 @@ def _op_col() -> Column:
     )
 
 
+def _envelopes(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    content: Column | None = None,
+    previous: bool = False,
+    op: Column | None = None,
+    fields: tuple[str, ...] = ("user_id", "event_type", "value"),
+) -> DataFrame:
+    """The ``events`` fixture as the engine's change envelopes (the
+    ``envelope.EVENT_SCHEMA`` columns). ``op`` from ``event_type``
+    (signup→c, error→d, else u) unless ``op`` overrides it; c/u carry
+    the row as ``after``, a delete carries it as ``before``;
+    ``source.txId = event_id div 10``, ``partition_id = user_id % 4``,
+    no tombstones. With ``previous``, u/d instead carry the key's
+    previous row as ``before`` (c none) — a window exchange, so only
+    entries that diff images ask for it. An entry that reads the
+    stream as successive row versions passes ``op='u'``.
+
+    Events form (``content`` None): key ``{user_id}``, row image =
+    ``fields``, ``lsn = event_id``, ``source.table = event_type``.
+    Repo form (``content`` given): the engine's repo table — key
+    ``(r<user%8>, p<user>)``, image ``{repo, path, commit =
+    md5(event_id), lang = event_type, content, size_bytes}``,
+    ``lsn = event_id + 1`` (LSN 0 is the snapshot's) and
+    ``source.table = 'repo_files'``."""
+    from debezium_spark.generator import TABLE_NAME
+
+    ev = _t(spark, sf_dir, "events")
+    op = _op_col() if op is None else op
+    if content is None:
+        key = F.struct("user_id")
+        row = F.struct(*fields)
+        lsn, table = F.col("event_id"), F.col("event_type")
+    else:
+        repo = F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string"))
+        path = F.concat(F.lit("p"), F.col("user_id").cast("string"))
+        key = F.struct(repo.alias("repo"), path.alias("path"))
+        row = F.struct(
+            repo.alias("repo"),
+            path.alias("path"),
+            F.md5(F.col("event_id").cast("string")).alias("commit"),
+            F.col("event_type").alias("lang"),
+            content.alias("content"),
+            F.lit(None).cast("long").alias("size_bytes"),
+        )
+        lsn, table = F.col("event_id") + 1, F.lit(TABLE_NAME)
+    is_del = op == "d"
+    if previous:
+        w = Window.partitionBy("user_id").orderBy("event_id")
+        before = F.when(op.isin("u", "d"), F.lag(row).over(w))
+    else:
+        before = F.when(is_del, row)
+    ts_ms = F.unix_millis(F.col("ts").cast("timestamp"))
+    return ev.select(
+        (F.col("user_id") % 4).cast("int").alias("partition_id"),
+        lsn.alias("lsn"),
+        op.alias("op"),
+        key.alias("key"),
+        before.alias("before"),
+        F.when(~is_del, row).alias("after"),
+        F.struct(
+            ts_ms.alias("ts_ms"),
+            F.lit("false").alias("snapshot"),
+            F.expr("event_id div 10").alias("txId"),
+            table.alias("table"),
+        ).alias("source"),
+        ts_ms.alias("ts_ms"),
+        F.lit(0).alias("schema_version"),
+        F.lit(False).alias("is_tombstone"),
+        F.lit(None).cast("string").alias("message"),
+    )
+
+
+def _final_state(env: DataFrame) -> DataFrame:
+    """``compact`` — the engine's LWW election — over events-form
+    envelopes: per ``user_id`` (riding compact's ``(repo, path)`` key)
+    the winner ``(user_id, event_type, value, lsn)``, absent when its
+    last op is a delete."""
+    key = (F.col("key.user_id").alias("repo"), F.lit(0).alias("path"))
+    won = compact(env.select(*key, "op", "lsn", "after.event_type", "after.value"))
+    return won.select(
+        F.col("repo").alias("user_id"),
+        "event_type",
+        "value",
+        F.col("_lsn").alias("lsn"),
+    )
+
+
+# CDC entries with no engine operator to run, and why; every other
+# cdc_* entry reaches one (pinned by tests/test_catalog_routing.py).
+CATALOG_ONLY = {
+    "cdc_envelope_build": "checks the events→envelope adapter itself",
+    "cdc_lww_compaction": "oracle keeps a delete winner's payload; compact drops it",
+    "cdc_scd2_history": "SCD2 history table; the engine keeps one version per key",
+    "cdc_partition_routing": "the engine hashes with xxhash64, which DuckDB lacks",
+    "cdc_offset_frontier": "the engine observes its frontier inside the merge",
+    "cdc_heartbeat": "engine heartbeats are written from committed offsets",
+    "cdc_schema_evolution_gate": "the engine's gate is Engine._align",
+    "cdc_sparse_update_fold": "cell-granular fold; the engine applies full rows",
+    "cdc_outbox_router": "the engine has no outbox EventRouter",
+    "cdc_json_unwrap": "consumer-side JSON field extraction",
+    "cdc_json_export": "text format fixed by its oracle",
+    "cdc_cloudevents_export": "text format fixed by its oracle",
+    "cdc_avro_json_export": "text format fixed by its oracle",
+    "cdc_avro_binary_export": "binary codec only the catalog uses",
+    "cdc_cloudevents_avro_export": "binary codec only the catalog uses",
+    "cdc_protobuf_export": "binary codec only the catalog uses",
+    "cdc_type_handling_modes": "converter modes as plain column casts",
+    "cdc_transaction_markers": "the engine emits no transaction BEGIN/END records",
+    "cdc_source_sequence": "the engine keeps no source.sequence token",
+    "cdc_hybrid_time_flush": "the engine has no HYBRID_TIME LSN mode",
+    "cdc_gtid_set_normalize": "the engine has no MySQL GTID sets",
+    "cdc_logical_messages": "the engine routes messages driver-side (messages.py)",
+    "cdc_reselect_columns": "backfills per event; reselect_columns joins one state",
+    "cdc_temporal_join": "as-of join of facts onto the feed",
+    "cdc_incremental_agg": "folds the raw stream; the engine's views fold a lake",
+}
+
+
 # ===========================================================================
 # CDC core — envelope / dispatcher / compaction / apply
 # ===========================================================================
@@ -98,18 +220,17 @@ def _op_col() -> Column:
 )
 def cdc_envelope_build(spark, sf_dir):
     """Envelope construction (data/Envelope.java:230-319): c/u carry an
-    after image, d carries before only. Flat columns (structs don't
-    hash portably)."""
-    ev = _t(spark, sf_dir, "events")
-    is_del = F.col("event_type") == "error"
-    return ev.select(
-        F.col("event_id").alias("lsn"),
-        "user_id",
-        _op_col().alias("op"),
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        F.when(~is_del, F.col("value")).alias("after_value"),
-        F.when(~is_del, F.col("event_type")).alias("after_event_type"),
-        F.when(is_del, F.col("value")).alias("before_value"),
+    after image, d carries before only — the catalog's events→envelope
+    adapter itself, checked against its oracle. Flat columns (structs
+    don't hash portably)."""
+    return _envelopes(spark, sf_dir).select(
+        "lsn",
+        "key.user_id",
+        "op",
+        "ts_ms",
+        F.col("after.value").alias("after_value"),
+        F.col("after.event_type").alias("after_event_type"),
+        F.col("before.value").alias("before_value"),
     )
 
 
@@ -156,21 +277,9 @@ def cdc_lww_compaction(spark, sf_dir):
 )
 def cdc_final_state(spark, sf_dir):
     """Full replay result: LWW winner per key, keys whose last op is a
-    DELETE are absent — Debezium's final-table-state semantics
-    (north_rule invariant) as one relational expression."""
-    ev = _t(spark, sf_dir, "events")
-    w = F.max_by(
-        F.struct(
-            F.col("event_type"), F.col("value"), F.col("event_id").alias("lsn"), _op_col().alias("op")
-        ),
-        F.col("event_id"),
-    ).alias("w")
-    return (
-        ev.groupBy("user_id")
-        .agg(w)
-        .filter(F.col("w.op") != "d")
-        .select("user_id", "w.event_type", "w.value", "w.lsn")
-    )
+    DELETE are absent — Debezium's final-table-state semantics (north
+    rule invariant), elected by the engine's ``compact``."""
+    return _final_state(_envelopes(spark, sf_dir))
 
 
 @_q(
@@ -189,34 +298,15 @@ def cdc_state_as_of(spark, sf_dir):
     """Point-in-time state: the table AS OF a historical LSN (here the
     log midpoint, computed in-query) — the relational form of the
     lake's manifest-pinned time travel (``LakeTable.read_state(
-    version=...)`` / ``Engine.state_as_of``; every fenced merge commit
-    is a readable snapshot, expiry is ``expire_snapshots``).
-
-    Scale shape: the LSN bound rides a broadcast 1-row aggregate into
-    a pushdown-able filter, then the same single map-side-combined
-    max_by shuffle as ``cdc_final_state`` — cost is the prefix scan,
-    never a second pass."""
-    ev = _t(spark, sf_dir, "events")
-    hi = ev.agg(
-        F.expr("max(event_id) div 2").cast("long").alias("lsn_hi")
+    version=...)`` / ``Engine.state_as_of``). The LSN bound rides a
+    broadcast 1-row aggregate into the filter, then the engine's
+    ``compact`` elects the prefix's winners."""
+    env = _envelopes(spark, sf_dir)
+    hi = env.agg(F.expr("max(lsn) div 2").cast("long").alias("lsn_hi"))
+    prefix = env.crossJoin(F.broadcast(hi)).filter(
+        F.col("lsn") <= F.col("lsn_hi")
     )
-    w = F.max_by(
-        F.struct(
-            F.col("event_type"),
-            F.col("value"),
-            F.col("event_id").alias("lsn"),
-            _op_col().alias("op"),
-        ),
-        F.col("event_id"),
-    ).alias("w")
-    return (
-        ev.crossJoin(F.broadcast(hi))
-        .filter(F.col("event_id") <= F.col("lsn_hi"))
-        .groupBy("user_id")
-        .agg(w)
-        .filter(F.col("w.op") != "d")
-        .select("user_id", "w.event_type", "w.value", "w.lsn")
-    )
+    return _final_state(prefix)
 
 
 @_q(
@@ -278,10 +368,8 @@ def cdc_scd2_history(spark, sf_dir):
 def cdc_skipped_operations(spark, sf_dir):
     """skipped.operations filter (EventDispatcher.java:147-148,294-301)
     — pushdown-able codegen filter, no shuffle."""
-    ev = _t(spark, sf_dir, "events").withColumn("op", _op_col())
-    return ev.filter(~F.col("op").isin("d")).select(
-        F.col("event_id").alias("lsn"), "user_id", "op"
-    )
+    out = T.skip_operations(_envelopes(spark, sf_dir), ("d",))
+    return out.select("lsn", "key.user_id", "op")
 
 
 @_q(
@@ -296,24 +384,24 @@ def cdc_skipped_operations(spark, sf_dir):
 )
 def cdc_tombstones(spark, sf_dir):
     """Tombstone companion records after every DELETE
-    (EventDispatcher.java:496-508; tombstones.on.delete default true)."""
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        F.col("event_id").alias("lsn"),
+    (EventDispatcher.java:496-508; tombstones.on.delete default true),
+    emitted by ExtractNewRecordState's ``rewrite-with-tombstone`` mode:
+    a companion row carries the key and ``__deleted`` NULL."""
+    out = T.extract_new_record_state(
+        _envelopes(spark, sf_dir),
+        delete_mode="rewrite-with-tombstone",
+        row_fields=("user_id",),
+        key_fields=("user_id",),
+        add_ts_ms=False,
+        add_fields=("lsn",),
+    )
+    tomb = F.col("__deleted").isNull()
+    return out.select(
+        F.col("__lsn").alias("lsn"),
         "user_id",
-        _op_col().alias("op"),
-        F.lit(False).alias("is_tombstone"),
+        F.when(~tomb, F.col("__op")).alias("op"),
+        tomb.alias("is_tombstone"),
     )
-    tomb = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("lsn"),
-            "user_id",
-            F.lit(None).cast("string").alias("op"),
-            F.lit(True).alias("is_tombstone"),
-        )
-    )
-    return base.unionByName(tomb)
 
 
 @_q(
@@ -329,14 +417,11 @@ def cdc_extract_new_record_state(spark, sf_dir):
     """ExtractNewRecordState, delete.handling.mode=rewrite
     (transforms/ExtractNewRecordState.java:1-303,
     extractnewstate/DefaultDeleteHandlingStrategy.java:1-92)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "user_id",
-        "value",
-        "event_type",
-        _op_col().alias("__op"),
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("__ts_ms"),
-        (F.col("event_type") == "error").alias("__deleted"),
+    return T.extract_new_record_state(
+        _envelopes(spark, sf_dir),
+        delete_mode="rewrite",
+        row_fields=("user_id", "value", "event_type"),
+        key_fields=("user_id",),
     )
 
 
@@ -352,17 +437,14 @@ def cdc_extract_new_record_state(spark, sf_dir):
 def cdc_transaction_metadata(spark, sf_dir):
     """Per-event transaction block {id, total_order,
     data_collection_order} (pipeline/txmetadata/TransactionMonitor.java:
-    108-158). Windows partition by tx — bounded group size, no skew."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "tx_id", F.expr("event_id div 10")
-    )
-    w_tx = Window.partitionBy("tx_id").orderBy("event_id")
-    w_tbl = Window.partitionBy("tx_id", "event_type").orderBy("event_id")
-    return ev.select(
-        "event_id",
-        "tx_id",
-        F.row_number().over(w_tx).cast("long").alias("total_order"),
-        F.row_number().over(w_tbl).cast("long").alias("data_collection_order"),
+    108-158); ``event_type`` is the data collection. Windows partition
+    by tx — bounded group size, no skew."""
+    out = T.transaction_metadata(_envelopes(spark, sf_dir))
+    return out.select(
+        F.col("lsn").alias("event_id"),
+        F.col("transaction.id").alias("tx_id"),
+        "transaction.total_order",
+        "transaction.data_collection_order",
     )
 
 
@@ -423,24 +505,25 @@ def cdc_offset_frontier(spark, sf_dir):
 def cdc_snapshot_read(spark, sf_dir):
     """Initial-snapshot READ envelopes with FIRST/LAST markers
     (RelationalSnapshotChangeEventSource.java:607-624,
-    SnapshotRecord.java:16-44). Markers from two global scalars
-    (broadcast), not a single-partition window."""
+    SnapshotRecord.java:16-44), emitted by the engine's snapshot source
+    over ``customer`` as the source table. The key is zero-padded so
+    the source's string-ordered markers follow the numeric key."""
+    from debezium_spark.sources.snapshot import snapshot_envelopes
+
     c = _t(spark, sf_dir, "customer")
-    bounds = c.agg(
-        F.min("c_custkey").alias("lo"), F.max("c_custkey").alias("hi")
-    )
-    return (
-        c.crossJoin(F.broadcast(bounds))
-        .select(
-            "c_custkey",
-            F.lit("r").alias("op"),
-            F.lit(0).cast("long").alias("lsn"),
-            F.when(F.col("c_custkey") == F.col("lo"), "first")
-            .when(F.col("c_custkey") == F.col("hi"), "last")
-            .otherwise("true")
-            .alias("snapshot"),
-            "c_name",
+    env = snapshot_envelopes(
+        c.select(
+            F.lpad(F.col("c_custkey").cast("string"), 19, "0").alias("repo"),
+            F.lit("").alias("path"),
+            F.col("c_name").alias("content"),
         )
+    )
+    return env.select(
+        F.col("after.repo").cast("long").alias("c_custkey"),
+        "op",
+        "lsn",
+        "source.snapshot",
+        F.col("after.content").alias("c_name"),
     )
 
 
@@ -459,24 +542,24 @@ def cdc_snapshot_read(spark, sf_dir):
 def cdc_pk_change_split(spark, sf_dir):
     """PK-change UPDATE → DELETE(old key) + CREATE(new key) pair
     (RelationalChangeRecordEmitter.java:171-185); the CREATE gets the
-    next LSN slot so per-key order stays strict. 'purchase' events play
-    the key-moving updates here."""
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        (F.col("event_id") * 2).alias("lsn"),
-        F.when(F.col("event_type") == "purchase", "d")
-        .otherwise(_op_col())
-        .alias("op"),
-        F.col("user_id").alias("key_user_id"),
-        "value",
+    next LSN slot (LSNs are doubled to leave it free) so per-key order
+    stays strict. 'purchase' events play the key-moving updates: the
+    row moves from ``user_id`` to ``user_id + 1000``."""
+    env = _envelopes(spark, sf_dir).withColumn("lsn", F.col("lsn") * 2)
+    moves = F.col("source.table") == "purchase"
+    moved = F.col("after").withField("user_id", F.col("after.user_id") + 1000)
+    env = env.withColumn(
+        "before", F.when(moves, F.col("after")).otherwise(F.col("before"))
+    ).withColumn("after", F.when(moves, moved).otherwise(F.col("after")))
+    out = T.pk_change_split(env, key_columns=("user_id",))
+    return out.select(
+        "lsn",
+        "op",
+        F.col("key.user_id").alias("key_user_id"),
+        F.when(F.col("op") == "d", F.col("before.value"))
+        .otherwise(F.col("after.value"))
+        .alias("value"),
     )
-    created = ev.filter(F.col("event_type") == "purchase").select(
-        (F.col("event_id") * 2 + 1).alias("lsn"),
-        F.lit("c").alias("op"),
-        (F.col("user_id") + 1000).alias("key_user_id"),
-        "value",
-    )
-    return base.unionByName(created)
 
 
 @_q(
@@ -492,16 +575,13 @@ def cdc_pk_change_split(spark, sf_dir):
 def cdc_skip_unchanged_updates(spark, sf_dir):
     """skip-messages-without-change
     (RelationalChangeRecordEmitter.java:110-119): suppress updates whose
-    before/after images are identical — here the per-key previous value
-    via lag()."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    return (
-        ev.withColumn("prev_value", F.lag("value").over(w))
-        .filter(
-            F.col("prev_value").isNull() | (F.col("value") != F.col("prev_value"))
-        )
-        .select("event_id", "user_id", "value")
+    before/after images are identical. Each event updates its key's
+    ``value``; the key's previous row is the before image."""
+    env = _envelopes(
+        spark, sf_dir, previous=True, op=F.lit("u"), fields=("value",)
+    )
+    return T.skip_unchanged_updates(env).select(
+        F.col("lsn").alias("event_id"), "key.user_id", "after.value"
     )
 
 
@@ -513,14 +593,13 @@ def cdc_skip_unchanged_updates(spark, sf_dir):
 )
 def cdc_mask_hash(spark, sf_dir):
     """column.mask.hash.SHA-256.with.salt
-    (relational/mapping/MaskStrings.java HashValueConverter)."""
-    c = _t(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.sha2(F.concat(F.lit("s4lt"), F.col("c_name")), 256).alias(
-            "c_name_masked"
-        ),
+    (relational/mapping/MaskStrings.java HashValueConverter) over the
+    ``customer`` row image."""
+    c = _t(spark, sf_dir, "customer").select(
+        "c_custkey", F.struct("c_name").alias("after")
     )
+    out = T.hash_mask_image_field(c, "after", "c_name", "s4lt")
+    return out.select("c_custkey", F.col("after.c_name").alias("c_name_masked"))
 
 
 @_q(
@@ -544,8 +623,6 @@ def cdc_smt_predicate_gate(spark, sf_dir):
     (``apply_with_predicate``), not an inline CASE — the oracle's CASE
     is the semantic twin. Scale shape: two pushed-filter scans +
     unionByName, no shuffle introduced."""
-    from debezium_spark.operators import transforms as T
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         F.concat(F.lit("server1."), F.col("event_type")).alias("topic"),
@@ -594,8 +671,6 @@ def cdc_connect_smt_chain(spark, sf_dir):
     DuckDB-cast caveat mirrored in the oracle: CAST(double AS BIGINT)
     rounds there, so the oracle truncs explicitly to match Java/Spark
     cast semantics."""
-    from debezium_spark.operators import connect_smt as C
-
     ev = _t(spark, sf_dir, "events").select(
         F.col("event_id").alias("lsn"),
         F.concat(F.lit("server1."), F.col("event_type")).alias("topic"),
@@ -649,8 +724,6 @@ def cdc_connect_struct_smts(spark, sf_dir):
     as HeaderToValue's). Headers surface as flat hdr_* columns because
     the contract hash needs flat output; hdr_trace proves DropHeaders
     removed the key."""
-    from debezium_spark.operators import connect_smt as C
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         F.concat(F.lit("server1."), F.col("event_type")).alias("topic"),
@@ -688,12 +761,17 @@ def cdc_connect_struct_smts(spark, sf_dir):
 )
 def cdc_truncate_mask(spark, sf_dir):
     """column.truncate.to.N.chars + column.mask.with.N.chars
-    (relational/mapping/TruncateStrings.java, MaskStrings.java)."""
-    c = _t(spark, sf_dir, "customer")
+    (relational/mapping/TruncateStrings.java, MaskStrings.java) over the
+    ``customer`` row image."""
+    c = _t(spark, sf_dir, "customer").select(
+        "c_custkey", F.struct("c_name", "c_mktsegment").alias("after")
+    )
+    c = T.truncate_image_field(c, "after", "c_name", 5)
+    c = T.mask_image_field(c, "after", "c_mktsegment")
     return c.select(
         "c_custkey",
-        F.substring("c_name", 1, 5).alias("c_name_trunc"),
-        F.lit("***").alias("c_mktsegment_masked"),
+        F.col("after.c_name").alias("c_name_trunc"),
+        F.col("after.c_mktsegment").alias("c_mktsegment_masked"),
     )
 
 
@@ -709,13 +787,13 @@ def cdc_logical_table_router(spark, sf_dir):
     """ByLogicalTableRouter: merge shard topics via regex
     (transforms/ByLogicalTableRouter.java:58-113) — event_type plays
     the physical table name."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        "event_type",
-        F.regexp_replace(
-            "event_type", "^(click|view)$", "interaction"
-        ).alias("route"),
+    out = T.by_logical_table_router(
+        _envelopes(spark, sf_dir), "^(click|view)$", "interaction"
+    )
+    return out.select(
+        F.col("lsn").alias("event_id"),
+        F.col("source.table").alias("event_type"),
+        F.col("__route").alias("route"),
     )
 
 
@@ -731,14 +809,16 @@ def cdc_logical_table_router(spark, sf_dir):
 def cdc_content_based_router(spark, sf_dir):
     """ContentBasedRouter: route by expression over the record — Spark
     SQL replaces the reference's scripting engine
-    (transforms/ContentBasedRouter.java)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.when(F.col("value") >= 50, "high")
-        .when(F.col("value") >= 10, "mid")
-        .otherwise("low")
-        .alias("route"),
+    (transforms/ContentBasedRouter.java); a delete's value is in its
+    before image."""
+    v = "coalesce(after.value, before.value)"
+    out = T.content_based_router(
+        _envelopes(spark, sf_dir),
+        f"CASE WHEN {v} >= 50 THEN 'high' WHEN {v} >= 10 THEN 'mid' "
+        "ELSE 'low' END",
+    )
+    return out.select(
+        F.col("lsn").alias("event_id"), F.col("__route").alias("route")
     )
 
 
@@ -753,10 +833,13 @@ def cdc_scripting_filter(spark, sf_dir):
     """Scripting Filter SMT — keep record iff expression true
     (debezium-scripting .../transforms/Filter.java); Spark SQL expr is
     the script engine."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.filter(
-        F.expr("event_type = 'purchase' AND value > 20")
-    ).select("event_id", "user_id", "value")
+    out = T.scripting_filter(
+        _envelopes(spark, sf_dir),
+        "source.table = 'purchase' AND after.value > 20",
+    )
+    return out.select(
+        F.col("lsn").alias("event_id"), "key.user_id", "after.value"
+    )
 
 
 @_q(
@@ -793,37 +876,17 @@ def cdc_dlq_route(spark, sf_dir):
     :func:`debezium_spark.operators.transforms.dead_letter_records`
     operator — scan→filter→project, codegen, no shuffle. Headers are
     flattened to flat columns for the hash compare."""
-    from debezium_spark.operators.transforms import dead_letter_records
-
-    ev = _t(spark, sf_dir, "events")
-    is_del = F.col("event_type") == "error"
-    env = ev.select(
-        F.pmod(F.col("event_id"), F.lit(8)).cast("int").alias(
-            "partition_id"
-        ),
-        F.col("event_id").alias("lsn"),
-        _op_col().alias("op"),
-        F.when(
-            F.col("event_id") % 41 != 0,
-            F.struct(
-                F.col("user_id").cast("string").alias("repo"),
-                F.lit("p").alias("path"),
-            ),
-        ).alias("key"),
-        F.when(is_del, F.col("value")).alias("before"),
-        F.when(
-            ~is_del & (F.col("event_id") % 23 != 0), F.col("value")
-        ).alias("after"),
-        F.lit(False).alias("is_tombstone"),
+    env = _envelopes(spark, sf_dir, content=F.lit(None).cast("string"))
+    eid = F.col("lsn") - 1
+    env = env.withColumn("key", F.when(eid % 41 != 0, F.col("key"))).withColumn(
+        "after", F.when(eid % 23 != 0, F.col("after"))
     )
     h = F.col("headers")
-    return dead_letter_records(env, source_topic="events").select(
-        "lsn",
-        F.col("key.repo").cast("bigint").alias("user_id"),
+    return T.dead_letter_records(env, source_topic="events").select(
+        eid.alias("lsn"),
+        F.expr("CAST(substring(key.path, 2) AS BIGINT)").alias("user_id"),
         "op",
-        F.concat(
-            F.lit("dlq."), h["__connect.errors.topic"]
-        ).alias("dlq_topic"),
+        F.concat(F.lit("dlq."), h["__connect.errors.topic"]).alias("dlq_topic"),
         h["__connect.errors.stage"].alias("err_stage"),
         h["__connect.errors.exception.class.name"].alias("err_class"),
         h["__connect.errors.exception.message"].alias("err_message"),
@@ -866,15 +929,14 @@ def cdc_timezone_convert(spark, sf_dir):
     """TimezoneConverter SMT (transforms/TimezoneConverter.java:1-505):
     temporal fields re-rendered in a target zone. Output as a formatted
     string so both engines agree byte-for-byte (IANA tzdata)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.date_format(
-            F.from_utc_timestamp(
-                F.col("ts").cast("timestamp"), "America/New_York"
-            ),
-            "yyyy-MM-dd HH:mm:ss",
-        ).alias("ts_nyc"),
+    out = T.timezone_converter(
+        _envelopes(spark, sf_dir), "ts_ms", "America/New_York"
+    )
+    return out.select(
+        F.col("lsn").alias("event_id"),
+        F.date_format("ts_ms_America_New_York", "yyyy-MM-dd HH:mm:ss").alias(
+            "ts_nyc"
+        ),
     )
 
 
@@ -922,21 +984,13 @@ def cdc_heartbeat(spark, sf_dir):
 def cdc_changed_fields(spark, sf_dir):
     """ExtractChangedRecordState: list of changed column names =
     diff(before, after) (transforms/ExtractChangedRecordState.java:
-    1-113); the per-key previous row plays the before image."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    prev_v = F.lag("value").over(w)
-    prev_t = F.lag("event_type").over(w)
-    return ev.select(
-        "event_id",
-        F.concat_ws(
-            ",",
-            F.when(prev_v.isNull() | (F.col("value") != prev_v), "value"),
-            F.when(
-                prev_t.isNull() | (F.col("event_type") != prev_t),
-                "event_type",
-            ),
-        ).alias("changed"),
+    1-113). Each event updates its key's row; the key's previous row is
+    the before image."""
+    env = _envelopes(spark, sf_dir, previous=True, op=F.lit("u"))
+    out = T.extract_changed_record_state(env, row_fields=("value", "event_type"))
+    return out.select(
+        F.col("lsn").alias("event_id"),
+        F.array_join("__changed", ",").alias("changed"),
     )
 
 
@@ -979,56 +1033,33 @@ def cdc_replica_identity_modes(spark, sf_dir):
     """REPLICA IDENTITY image shaping, all four modes from one log
     (PostgresChangeRecordEmitter.java:110-118: updates carry no old
     values under CHANGE/DEFAULT; yboutput CHANGE additionally emits
-    only changed new-image cells; FULL keeps complete old rows). The
-    per-key previous row plays the full before image; the key
-    (user_id) is always its own column, mirroring the Kafka record
-    key surviving every identity. One window shuffle, then a 4-way
-    literal explode — no second exchange. Engine-side twin:
-    operators/transforms.py replica_identity_shape."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    base = ev.select(
-        F.col("event_id").alias("lsn"),
-        "user_id",
-        _op_col().alias("op"),
-        "value",
-        "event_type",
-        F.lag("value").over(w).alias("prev_value"),
-        F.lag("event_type").over(w).alias("prev_event_type"),
+    only changed new-image cells; FULL keeps complete old rows). Each
+    event is fanned out to four tables named after the modes, and the
+    engine's per-table ``replica.identity.autoset.values`` application
+    shapes them (unmatched ``change`` keeps the yb default identity).
+    The key's previous row is the full before image of u/d; the key
+    (user_id) is always its own column. One window exchange, then a
+    narrow 4-way fan-out."""
+    modes = F.explode(F.array(*map(F.lit, T.REPLICA_IDENTITY_MODES)))
+    env = (
+        _envelopes(spark, sf_dir, previous=True)
+        .withColumn("mode", modes)
+        .withColumn("source", F.col("source").withField("table", F.col("mode")))
     )
-    modes = F.explode(
-        F.array(*[F.lit(m) for m in ("full", "default", "change", "nothing")])
-    ).alias("mode")
-    e = base.select("*", modes)
-    is_u, is_d = F.col("op") == "u", F.col("op") == "d"
-    is_full = F.col("mode") == "full"
-    is_change = F.col("mode") == "change"
-    unchanged_v = (
-        F.col("prev_value").isNotNull()
-        & (F.col("value") == F.col("prev_value"))
+    out = T.apply_replica_identity_autoset(
+        env,
+        "full:FULL,default:DEFAULT,nothing:NOTHING",
+        key_fields=("user_id",),
     )
-    unchanged_t = F.col("prev_event_type").isNotNull() & (
-        F.col("event_type") == F.col("prev_event_type")
-    )
-    return e.select(
+    return out.select(
         "lsn",
         "mode",
-        "user_id",
+        "key.user_id",
         "op",
-        F.when((is_u | is_d) & is_full, F.col("prev_value")).alias(
-            "before_value"
-        ),
-        F.when((is_u | is_d) & is_full, F.col("prev_event_type")).alias(
-            "before_event_type"
-        ),
-        F.when(is_d, F.lit(None).cast("double"))
-        .when(is_change & is_u & unchanged_v, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("after_value"),
-        F.when(is_d, F.lit(None).cast("string"))
-        .when(is_change & is_u & unchanged_t, F.lit(None).cast("string"))
-        .otherwise(F.col("event_type"))
-        .alias("after_event_type"),
+        F.col("before.value").alias("before_value"),
+        F.col("before.event_type").alias("before_event_type"),
+        F.col("after.value").alias("after_value"),
+        F.col("after.event_type").alias("after_event_type"),
     )
 
 
@@ -1197,53 +1228,34 @@ def cdc_json_unwrap(spark, sf_dir):
 )
 def cdc_wire_roundtrip(spark, sf_dir):
     """Debezium JSON wire-format serde, both directions in one plan
-    (engine/format/Json.java; serde/json/JsonSerde.java:63-104): build
-    the Kafka-record view (key_json, value_json, offset) with to_json —
-    tombstone companions carry value_json NULL, the reference's
-    delete-companion shape (EventDispatcher.java:496-508) — then parse
-    back with from_json against explicit schemas. The oracle computes
-    the envelope directly, so a driver hash match proves the wire is
-    lossless (doubles included: Jackson shortest-roundtrip emit,
-    exact parse-back). Pure codegen, zero shuffle, zero Python —
-    sources/json_wire.py is the engine-side twin over EVENT_SCHEMA."""
-    ev = _t(spark, sf_dir, "events")
-    is_del = F.col("event_type") == "error"
-    env = ev.select(
-        F.col("event_id").alias("lsn"),
-        "user_id",
-        _op_col().alias("op"),
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        F.when(~is_del, F.col("value")).alias("after_value"),
-        F.when(is_del, F.col("value")).alias("before_value"),
-    )
-    key_schema = env.select("user_id").schema
-    val_schema = env.select(
-        "op", "ts_ms", "after_value", "before_value"
-    ).schema
-    data = env.select(
-        F.to_json(F.struct("user_id")).alias("key_json"),
-        F.to_json(
-            F.struct("op", "ts_ms", "after_value", "before_value")
-        ).alias("value_json"),
-        F.col("lsn").alias("offset"),
-    )
-    tomb = env.filter(F.col("op") == "d").select(
-        F.to_json(F.struct("user_id")).alias("key_json"),
-        F.lit(None).cast("string").alias("value_json"),
-        F.col("lsn").alias("offset"),
-    )
-    wire = data.unionByName(tomb)
-    v = F.from_json(F.col("value_json"), val_schema)
-    return wire.select(
-        F.col("offset").alias("lsn"),
-        F.from_json(F.col("key_json"), key_schema)["user_id"].alias(
-            "user_id"
-        ),
-        v["op"].alias("op"),
-        v["ts_ms"].alias("ts_ms"),
-        v["after_value"].alias("after_value"),
-        v["before_value"].alias("before_value"),
-        F.col("value_json").isNull().alias("is_tombstone"),
+    (engine/format/Json.java; serde/json/JsonSerde.java:63-104), run by
+    the engine's ``sources.json_wire``: envelopes (a delete followed by
+    its tombstone companion, EventDispatcher.java:496-508) →
+    ``to_wire`` Kafka records → ``from_wire``. ``value`` rides the row
+    image's ``content`` text, so a hash match proves the wire is
+    lossless (doubles included: shortest round-trip text, exact
+    parse-back). Pure codegen, zero shuffle, zero Python."""
+    from debezium_spark.sources.json_wire import from_wire, to_wire
+
+    env = _envelopes(spark, sf_dir, content=F.col("value").cast("string"))
+    value_side = ("op", "before", "after", "source", "ts_ms")
+    tombs = env.filter(F.col("op") == "d").select(
+        *[
+            F.lit(None).cast(env.schema[c].dataType).alias(c)
+            if c in value_side
+            else c
+            for c in env.columns
+        ]
+    ).withColumn("is_tombstone", F.lit(True))
+    out = from_wire(to_wire(env.unionByName(tombs)))
+    return out.select(
+        (F.col("lsn") - 1).alias("lsn"),
+        F.expr("CAST(substring(key.path, 2) AS BIGINT)").alias("user_id"),
+        "op",
+        "ts_ms",
+        F.col("after.content").cast("double").alias("after_value"),
+        F.col("before.content").cast("double").alias("before_value"),
+        "is_tombstone",
     )
 
 
@@ -1314,6 +1326,32 @@ def cdc_transaction_markers(spark, sf_dir):
     return begin.unionByName(end)
 
 
+def _prev_tx_commit(ev: DataFrame) -> DataFrame:
+    """``(tx_id, prev_commit)`` per transaction of the ``events`` stream
+    (``tx_id = event_id div 10``): the commit LSN (max ``event_id``) of
+    the previous transaction, NULL for the first. Scale-safe in two
+    levels: per-bucket lag windows (``tx_id div 1024``) plus a
+    bucket-frontier prefix over the tiny bucket table — no global
+    single-partition window over 10^9 transactions."""
+    tx = (
+        ev.groupBy(F.expr("event_id div 10").alias("tx_id"))
+        .agg(F.max("event_id").alias("commit"))
+        .withColumn("bkt", F.expr("tx_id div 1024"))
+    )
+    bmax = tx.groupBy("bkt").agg(F.max("commit").alias("bmax"))
+    wprev = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+    frontier = bmax.select(
+        "bkt", F.max("bmax").over(wprev).alias("prev_bucket_commit")
+    )
+    win = Window.partitionBy("bkt").orderBy("tx_id")
+    return tx.join(F.broadcast(frontier), "bkt").select(
+        "tx_id",
+        F.coalesce(
+            F.lag("commit").over(win), F.col("prev_bucket_commit")
+        ).alias("prev_commit"),
+    )
+
+
 @_q(
     "cdc_source_sequence",
     """
@@ -1340,39 +1378,12 @@ def cdc_source_sequence(spark, sf_dir):
     ``["<lastCommitLsn>","<lsn>"]`` where lastCommitLsn is the commit
     LSN of the last COMPLETELY processed transaction (null before the
     first commit). The reference carries it as O(1) streaming state;
-    the relational twin is a lag over per-tx commit LSNs, computed
-    scale-safe in two levels: per-bucket lag windows (tx_id div 1024)
-    plus a bucket-frontier prefix over the tiny bucket table — no
-    global single-partition window over 10^9 transactions."""
+    the relational twin is a lag over per-tx commit LSNs
+    (:func:`_prev_tx_commit`, scale-safe in two levels)."""
     ev = _t(spark, sf_dir, "events")
-    tx = (
-        ev.withColumn("tx_id", F.expr("event_id div 10"))
-        .groupBy("tx_id")
-        .agg(F.max("event_id").alias("commit_lsn"))
-        .withColumn("bkt", F.expr("tx_id div 1024"))
-    )
-    # bucket frontier: max commit of every bucket strictly before b —
-    # the bucket table is n_tx/1024 rows, so this window is cheap
-    bmax = tx.groupBy("bkt").agg(F.max("commit_lsn").alias("bmax"))
-    wprev = (
-        Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    frontier = bmax.select(
-        "bkt", F.max("bmax").over(wprev).alias("prev_bucket_commit")
-    )
-    win = Window.partitionBy("bkt").orderBy("tx_id")
-    seqs = (
-        tx.join(F.broadcast(frontier), "bkt")
-        .select(
-            "tx_id",
-            F.coalesce(
-                F.lag("commit_lsn").over(win),
-                F.col("prev_bucket_commit"),
-            ).alias("last_commit"),
-        )
-    )
     out = ev.withColumn("tx_id", F.expr("event_id div 10")).join(
-        seqs, "tx_id"
+        _prev_tx_commit(ev).withColumnRenamed("prev_commit", "last_commit"),
+        "tx_id",
     )
     return out.select(
         F.col("event_id").alias("lsn"),
@@ -1449,22 +1460,8 @@ def cdc_hybrid_time_flush(spark, sf_dir):
         ).alias("lsn_ht"),
         F.expr("event_id div 10").alias("tx_id"),
     )
-    tx = (
-        enc.groupBy("tx_id")
-        .agg(F.max("event_id").alias("commit_event"))
-        .withColumn("bkt", F.expr("tx_id div 1024"))
-    )
-    bmax = tx.groupBy("bkt").agg(F.max("commit_event").alias("bmax"))
-    wprev = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    frontier = bmax.select(
-        "bkt", F.max("bmax").over(wprev).alias("prev_bucket_commit")
-    )
-    win = Window.partitionBy("bkt").orderBy("tx_id")
-    prevc = tx.join(F.broadcast(frontier), "bkt").select(
-        "tx_id",
-        F.coalesce(
-            F.lag("commit_event").over(win), F.col("prev_bucket_commit")
-        ).alias("prev_commit_event"),
+    prevc = _prev_tx_commit(ev).withColumnRenamed(
+        "prev_commit", "prev_commit_event"
     )
     pce = F.col("prev_commit_event")
     return enc.join(prevc, "tx_id").select(
@@ -1578,15 +1575,13 @@ def cdc_header_to_value(spark, sf_dir):
     """HeaderToValue SMT (transforms/HeaderToValue.java:1-312): headers
     (a map column) moved into value fields; 'move' also removes the
     copied keys from the header map."""
-    from debezium_spark.operators.transforms import header_to_value
-
     ev = _t(spark, sf_dir, "events").withColumn(
         "headers",
         F.create_map(
             F.lit("op"), _op_col(), F.lit("tbl"), F.col("event_type")
         ),
     )
-    out = header_to_value(ev, "headers", ("op", "tbl"), operation="move")
+    out = T.header_to_value(ev, "headers", ("op", "tbl"), operation="move")
     return out.select("event_id", "__header_op", "__header_tbl")
 
 
@@ -1603,10 +1598,6 @@ def cdc_schema_change_filter(spark, sf_dir):
     events (op='m' + TableChanges JSON) kept only when their change
     type is in the include list; data events pass through. 'signup'
     events play the schema events here, typed by value parity."""
-    from debezium_spark.operators.transforms import (
-        schema_change_event_filter,
-    )
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         F.when(F.col("event_type") == "signup", "m")
@@ -1624,7 +1615,7 @@ def cdc_schema_change_filter(spark, sf_dir):
             ),
         ).alias("message"),
     )
-    return schema_change_event_filter(ev, ("ALTER_ADD_COLUMN",)).select(
+    return T.schema_change_event_filter(ev, ("ALTER_ADD_COLUMN",)).select(
         "event_id"
     )
 
@@ -1674,25 +1665,23 @@ def cdc_topic_naming(spark, sf_dir):
     map-side-combined distinct (a few rows through the exchange), and
     the results broadcast-join back onto the stream — the expensive
     escape is O(tables), not O(events)."""
-    from debezium_spark.operators.transforms import topic_name
-
     ev = _t(spark, sf_dir, "events")
     names = ev.select("event_type").distinct()
     names = names.select(
         "event_type",
-        topic_name(
+        T.topic_name(
             "server1", F.lit("public"), F.col("event_type"), "default"
         ).alias("topic_default"),
-        topic_name(
+        T.topic_name(
             "server1", F.lit("public"), F.col("event_type"), "schema"
         ).alias("topic_schema"),
-        topic_name(
+        T.topic_name(
             "server1",
             F.lit("public"),
             F.concat(F.col("event_type"), F.lit("$x")),
             "sanitized",
         ).alias("topic_sanitized"),
-        topic_name(
+        T.topic_name(
             "server1",
             F.lit("public"),
             F.concat(F.col("event_type"), F.lit("_$")),
@@ -1750,8 +1739,6 @@ def cdc_schema_name_adjust(spark, sf_dir):
     `_`, `.` legal in fullnames but not field names). Pure
     regexp_replace codegen — the adjuster runs per record at dispatch
     in the reference, so it must stay expression-only here."""
-    from debezium_spark.operators.transforms import schema_name_adjust
-
     ev = _t(spark, sf_dir, "events")
     named = ev.select(
         "event_id",
@@ -1765,8 +1752,8 @@ def cdc_schema_name_adjust(spark, sf_dir):
     return named.select(
         "event_id",
         "proposed",
-        schema_name_adjust(F.col("proposed"), "avro").alias("avro_name"),
-        schema_name_adjust(F.col("proposed"), "avro_field").alias(
+        T.schema_name_adjust(F.col("proposed"), "avro").alias("avro_name"),
+        T.schema_name_adjust(F.col("proposed"), "avro_field").alias(
             "avro_field_name"
         ),
     )
@@ -1924,6 +1911,28 @@ def _avro_binary_oracle() -> str:
     """
 
 
+def _avro_record_hex() -> Column:
+    """Hex of the binary-Avro record {lsn: long, op: union(null,string),
+    key: union(null,long), after: union(null,long)} of an ``events``
+    row — zigzag-varint longs, length-prefixed UTF-8, union branch
+    indexes; a NULL value takes the null branch like a delete."""
+    from debezium_spark.functions import serde_binary as B
+
+    zz = B.zigzag_varint_hex
+    cents = F.floor(F.col("value") * 100).cast("long")
+    no_after = (F.col("event_type") == "error") | F.col("value").isNull()
+    return F.concat(
+        zz(F.col("event_id")),
+        F.lit("02"),
+        B.avro_string_hex(_op_col()),
+        F.lit("02"),
+        zz(F.col("user_id").cast("long")),
+        F.when(no_after, F.lit("00")).otherwise(
+            F.concat(F.lit("02"), zz(cents))
+        ),
+    )
+
+
 @_q("cdc_avro_binary_export", _avro_binary_oracle())
 def cdc_avro_binary_export(spark, sf_dir):
     """BINARY Avro export (engine/format/Avro.java; Avro spec binary
@@ -1938,19 +1947,7 @@ def cdc_avro_binary_export(spark, sf_dir):
     from debezium_spark.functions import serde_binary as B
 
     ev = _t(spark, sf_dir, "events")
-    zz = B.zigzag_varint_hex
-    cents = F.floor(F.col("value") * 100).cast("long")
-    no_after = (F.col("event_type") == "error") | F.col("value").isNull()
-    body = F.concat(
-        zz(F.col("event_id")),
-        F.lit("02"),
-        B.avro_string_hex(_op_col()),
-        F.lit("02"),
-        zz(F.col("user_id").cast("long")),
-        F.when(no_after, F.lit("00")).otherwise(
-            F.concat(F.lit("02"), zz(cents))
-        ),
-    )
+    body = _avro_record_hex()
     return ev.select(
         "event_id",
         body.alias("avro_hex"),
@@ -2057,19 +2054,7 @@ def cdc_cloudevents_avro_export(spark, sf_dir):
     from debezium_spark.functions import serde_binary as B
 
     ev = _t(spark, sf_dir, "events")
-    zz = B.zigzag_varint_hex
-    cents = F.floor(F.col("value") * 100).cast("long")
-    no_after = (F.col("event_type") == "error") | F.col("value").isNull()
-    body = F.concat(
-        zz(F.col("event_id")),
-        F.lit("02"),
-        B.avro_string_hex(_op_col()),
-        F.lit("02"),
-        zz(F.col("user_id").cast("long")),
-        F.when(no_after, F.lit("00")).otherwise(
-            F.concat(F.lit("02"), zz(cents))
-        ),
-    )
+    body = _avro_record_hex()
     headers = F.concat(
         F.lit('{"ce_specversion":"1.0","ce_id":"'),
         F.col("event_id").cast("string"),
@@ -2146,27 +2131,11 @@ def cdc_protobuf_export(spark, sf_dir):
 def cdc_truncate_apply(spark, sf_dir):
     """TRUNCATE apply semantics (data/Envelope.java:319 — a 't' event
     has no image; its table effect is delete-every-row-below-its-LSN).
-    LSN 5000 plays the truncate position: the final state is the LWW
-    fold of events strictly after it, keys whose last op is DELETE
-    absent. The engine-side implementation wipes state rows with
-    ``_lsn < truncate_lsn`` inside the merge (lake.py) and drops
-    pre-truncate events before compaction."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") > 5000)
-    w = F.max_by(
-        F.struct(
-            F.col("event_type"),
-            F.col("value"),
-            F.col("event_id").alias("lsn"),
-            _op_col().alias("op"),
-        ),
-        F.col("event_id"),
-    ).alias("w")
-    return (
-        ev.groupBy("user_id")
-        .agg(w)
-        .filter(F.col("w.op") != "d")
-        .select("user_id", "w.event_type", "w.value", "w.lsn")
-    )
+    LSN 5000 plays the truncate position: as in the engine, events at or
+    below it are dropped before compaction, and ``compact`` elects the
+    rest (keys whose last op is DELETE absent)."""
+    env = _envelopes(spark, sf_dir).filter(F.col("lsn") > 5000)
+    return _final_state(env)
 
 
 @_q(
@@ -4869,6 +4838,64 @@ def events_retention_cohorts(spark, sf_dir):
 # ===========================================================================
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A temp directory removed at interpreter exit: the engine-driving
+    entries return lazy DataFrames over the files they write."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+def _typed_content() -> Column:
+    """``<event_type>:<event_id>`` — the repo-form image content the
+    engine-replay and two-merge-lake oracles expect."""
+    return F.concat(
+        F.col("event_type"), F.lit(":"), F.col("event_id").cast("string")
+    )
+
+
+def _repo_rows(users: DataFrame, path_prefix: str, content: str) -> DataFrame:
+    """Repo-table source rows for the snapshot phase, one per
+    ``user_id``: key ``(r<user%8>, <path_prefix><user>)``, content
+    ``<content><user>``, stamped ``commit='c0'``, ``lang='init'``."""
+    return users.select(
+        F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")).alias("repo"),
+        F.concat(F.lit(path_prefix), F.col("user_id").cast("string")).alias("path"),
+        F.lit("c0").alias("commit"),
+        F.lit("init").alias("lang"),
+        F.concat(F.lit(content), F.col("user_id").cast("string")).alias("content"),
+    )
+
+
+def _engine_replay(spark, sf_dir, content: Column, snapshot: DataFrame, batch_lsn_span: int):
+    """Run the full engine: the snapshot phase over ``snapshot``, then
+    the repo-form envelope log of the ``events`` fixture (image content
+    ``content``) replayed in ``batch_lsn_span``-wide fenced batches.
+    Returns the engine."""
+    from debezium_spark.streaming.engine import Engine, EngineConfig
+
+    tmp = _scratch_dir("cdc_replay_")
+    snapshot.write.mode("overwrite").parquet(f"{tmp}/source")
+    log = _envelopes(spark, sf_dir, content=content)
+    log.write.mode("overwrite").parquet(f"{tmp}/changelog")
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=f"{tmp}/changelog",
+            lake_root=f"{tmp}/lake",
+            source_table_path=f"{tmp}/source",
+            batch_lsn_span=batch_lsn_span,
+            n_buckets=8,
+        ),
+    )
+    eng.run()
+    return eng
+
+
 @_q(
     "cdc_replay_final_state",
     f"""
@@ -4908,103 +4935,24 @@ def cdc_replay_final_state(spark, sf_dir):
     (user%5=0) that no stream event touches — they must survive from
     the snapshot phase verbatim. Distinct from
     ``cdc_engine_replay_events`` by exercising MULTI-batch fenced
-    replay (batch_lsn_span splits the log into several commits) and
-    snapshot survivorship, the two behaviors a single dense batch
-    cannot show. Reference: the embedded engine's snapshot-then-
+    replay and snapshot survivorship. Reference: the embedded engine's snapshot-then-
     streaming contract (``ChangeEventSourceCoordinator.java``,
     ``RelationalSnapshotChangeEventSource.java`` FIRST/LAST marker
     protocol)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from debezium_spark.streaming.engine import Engine, EngineConfig
-
-    ev = _t(spark, sf_dir, "events")
-    repo = F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string"))
-    path = F.concat(F.lit("p"), F.col("user_id").cast("string"))
-    img = F.struct(
-        repo.alias("repo"),
-        path.alias("path"),
-        F.md5(F.col("event_id").cast("string")).alias("commit"),
-        F.col("event_type").alias("lang"),
-        F.concat(F.lit("v:"), F.col("event_id").cast("string")).alias(
-            "content"
-        ),
-        F.lit(None).cast("long").alias("size_bytes"),
-    )
-    before_img = F.struct(
-        repo.alias("repo"),
-        path.alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("content"),
-        F.lit(None).cast("long").alias("size_bytes"),
-    )
-    is_del = _op_col() == "d"
-    ts_ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    log = ev.select(
-        (F.col("user_id") % 4).cast("int").alias("partition_id"),
-        (F.col("event_id") + 1).alias("lsn"),
-        _op_col().alias("op"),
-        F.struct(repo.alias("repo"), path.alias("path")).alias("key"),
-        F.when(is_del, before_img).alias("before"),
-        F.when(~is_del, img).alias("after"),
-        F.struct(
-            ts_ms.alias("ts_ms"),
-            F.lit("false").alias("snapshot"),
-            F.lit(-1).cast("long").alias("txId"),
-            F.lit("repo_files").alias("table"),
-        ).alias("source"),
-        ts_ms.alias("ts_ms"),
-        F.lit(0).alias("schema_version"),
-        F.lit(False).alias("is_tombstone"),
-        F.lit(None).cast("string").alias("message"),
-    )
+    users = _t(spark, sf_dir, "events").select("user_id").distinct()
     # snapshot: a p-key base row per user (always overwritten — every
     # user has >=1 stream event) plus untouched q-keys that must
     # survive the whole replay from the snapshot phase alone
-    users = ev.select("user_id").distinct()
-    src = users.select(
-        F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")).alias(
-            "repo"
-        ),
-        F.concat(F.lit("p"), F.col("user_id").cast("string")).alias("path"),
-        F.lit("c0").alias("commit"),
-        F.lit("init").alias("lang"),
-        F.concat(F.lit("init:"), F.col("user_id").cast("string")).alias(
-            "content"
-        ),
-    ).unionByName(
-        users.filter(F.col("user_id") % 5 == 0).select(
-            F.concat(
-                F.lit("r"), (F.col("user_id") % 8).cast("string")
-            ).alias("repo"),
-            F.concat(F.lit("q"), F.col("user_id").cast("string")).alias(
-                "path"
-            ),
-            F.lit("c0").alias("commit"),
-            F.lit("init").alias("lang"),
-            F.concat(
-                F.lit("snap:"), F.col("user_id").cast("string")
-            ).alias("content"),
-        )
+    snapshot = _repo_rows(users, "p", "init:").unionByName(
+        _repo_rows(users.filter(F.col("user_id") % 5 == 0), "q", "snap:")
     )
-    tmp = tempfile.mkdtemp(prefix="cdc_entry_")
-    atexit.register(shutil.rmtree, tmp, True)
-    src.write.mode("overwrite").parquet(f"{tmp}/source")
-    log.write.mode("overwrite").parquet(f"{tmp}/changelog")
-    eng = Engine(
+    eng = _engine_replay(
         spark,
-        EngineConfig(
-            changelog_path=f"{tmp}/changelog",
-            lake_root=f"{tmp}/lake",
-            source_table_path=f"{tmp}/source",
-            batch_lsn_span=4096,  # several fenced stream batches
-            n_buckets=8,
-        ),
+        sf_dir,
+        F.concat(F.lit("v:"), F.col("event_id").cast("string")),
+        snapshot,
+        batch_lsn_span=4096,  # several fenced stream batches
     )
-    eng.run()
     state = eng.final_state()
     return state.select(
         "repo",
@@ -5041,93 +4989,18 @@ def cdc_engine_replay_events(spark, sf_dir):
     absent; the lsn-0 snapshot rows always lose to any streamed
     event). This upgrades the engine path from a rows-only check to a
     value-hash-checked row: every stage the north rule names is inside
-    the measured, oracle-matched pipeline.
-
-    Mapping: key = (repo r<user%8>, path p<user>), lsn = event_id+1,
-    op per the catalog's event_type mapping, row image carries
-    commit = md5(event_id), lang = event_type,
-    content = event_type:event_id; deletes carry a before image (key
-    fields), per the envelope validators. Source table = one lsn-0
-    row per user ('init' content) so the snapshot phase runs for
+    the measured, oracle-matched pipeline. The log is the repo-form
+    :func:`_envelopes` with content ``event_type:event_id``; the source
+    table holds one lsn-0 row per user so the snapshot phase runs for
     real."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from debezium_spark.streaming.engine import Engine, EngineConfig
-
-    ev = _t(spark, sf_dir, "events")
-    repo = F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string"))
-    path = F.concat(F.lit("p"), F.col("user_id").cast("string"))
-    key = F.struct(repo.alias("repo"), path.alias("path"))
-    img = F.struct(
-        repo.alias("repo"),
-        path.alias("path"),
-        F.md5(F.col("event_id").cast("string")).alias("commit"),
-        F.col("event_type").alias("lang"),
-        F.concat(
-            F.col("event_type"), F.lit(":"), F.col("event_id").cast("string")
-        ).alias("content"),
-        F.lit(None).cast("long").alias("size_bytes"),
-    )
-    before_img = F.struct(
-        repo.alias("repo"),
-        path.alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("content"),
-        F.lit(None).cast("long").alias("size_bytes"),
-    )
-    is_del = _op_col() == "d"
-    ts_ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    log = ev.select(
-        (F.col("user_id") % 4).cast("int").alias("partition_id"),
-        (F.col("event_id") + 1).alias("lsn"),
-        _op_col().alias("op"),
-        key.alias("key"),
-        F.when(is_del, before_img).alias("before"),
-        F.when(~is_del, img).alias("after"),
-        F.struct(
-            ts_ms.alias("ts_ms"),
-            F.lit("false").alias("snapshot"),
-            F.lit(-1).cast("long").alias("txId"),
-            F.lit("repo_files").alias("table"),
-        ).alias("source"),
-        ts_ms.alias("ts_ms"),
-        F.lit(0).alias("schema_version"),
-        F.lit(False).alias("is_tombstone"),
-        F.lit(None).cast("string").alias("message"),
-    )
-    src = (
-        ev.select("user_id")
-        .distinct()
-        .select(
-            F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")).alias(
-                "repo"
-            ),
-            F.concat(F.lit("p"), F.col("user_id").cast("string")).alias(
-                "path"
-            ),
-            F.lit("c0").alias("commit"),
-            F.lit("init").alias("lang"),
-            F.lit("init").alias("content"),
-        )
-    )
-    tmp = tempfile.mkdtemp(prefix="cdc_engine_ev_")
-    atexit.register(shutil.rmtree, tmp, True)
-    src.write.mode("overwrite").parquet(f"{tmp}/source")
-    log.write.mode("overwrite").parquet(f"{tmp}/changelog")
-    eng = Engine(
+    users = _t(spark, sf_dir, "events").select("user_id").distinct()
+    eng = _engine_replay(
         spark,
-        EngineConfig(
-            changelog_path=f"{tmp}/changelog",
-            lake_root=f"{tmp}/lake",
-            source_table_path=f"{tmp}/source",
-            batch_lsn_span=10_000_000,  # one dense stream batch
-            n_buckets=8,
-        ),
+        sf_dir,
+        _typed_content(),
+        _repo_rows(users, "p", "init:"),
+        batch_lsn_span=10_000_000,  # one dense stream batch
     )
-    eng.run()
     state = eng.lake.read_state(with_sys=True)
     return state.select(
         F.expr("CAST(substring(path, 2) AS BIGINT)").alias("user_id"),
@@ -5145,35 +5018,22 @@ def _events_two_merge_lake(spark, sf_dir):
     with ``v1`` the version after the first merge. Each half goes in as
     raw change rows; the merge elects the max-LSN event per key, as it
     does for the engine."""
-    import tempfile
-
     from debezium_spark.lake import LakeTable
 
-    ev = _t(spark, sf_dir, "events").select(
-        F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")).alias(
-            "repo"
-        ),
-        F.concat(F.lit("p"), F.col("user_id").cast("string")).alias("path"),
-        F.md5(F.col("event_id").cast("string")).alias("commit"),
-        F.lit("py").alias("lang"),
-        F.concat(
-            F.col("event_type"),
-            F.lit(":"),
-            F.col("event_id").cast("string"),
-        ).alias("content"),
-        _op_col().alias("op"),
-        F.col("event_id").cast("long").alias("lsn"),
+    env = _envelopes(spark, sf_dir, content=_typed_content())
+    ev = env.select(
+        "key.repo",
+        "key.path",
+        "after.commit",
+        "after.lang",
+        "after.content",
+        "op",
+        (F.col("lsn") - 1).alias("lsn"),  # LSN = event_id: no snapshot here
     )
     # bound scan prunes to event_id only
     mn, mx = ev.agg(F.min("lsn"), F.max("lsn")).first()
     bound = (int(mn) + int(mx)) // 2
-
-    import atexit
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="cdc_cdf_")
-    atexit.register(shutil.rmtree, tmp, True)
-    lt = LakeTable(spark, f"{tmp}/lake", n_buckets=8)
+    lt = LakeTable(spark, f"{_scratch_dir('cdc_cdf_')}/lake", n_buckets=8)
     lt.create()
     lt.merge(ev.filter(F.col("lsn") <= bound), 1)
     v1 = lt.manifest()["version"]
@@ -5311,17 +5171,10 @@ def cdc_publish_topic(spark, sf_dir):
     oracle recomputes both commits' feeds from the endpoint LWW folds:
     v1 = first-half fold as creates, v2 = keyed diff + one tombstone
     per delete at ``pre_lsn + 1``."""
-    import tempfile
-
     from debezium_spark.publisher import publish_changes, read_published
 
     lt, _ = _events_two_merge_lake(spark, sf_dir)
-    import atexit
-    import shutil
-
-    base = tempfile.mkdtemp(prefix="cdc_topic_")
-    atexit.register(shutil.rmtree, base, True)
-    out = base + "/topic"
+    out = _scratch_dir("cdc_topic_") + "/topic"
     publish_changes(lt, out)
     rec = read_published(spark, out)
     return rec.select(
@@ -5845,12 +5698,8 @@ def cdc_unwrap_tombstone(spark, sf_dir):
     become key-populated value-NULL tombstone rows; incoming envelope
     tombstones pass through in the same shape. Pure per-row projection
     + a narrow union — no shuffle, whole-stage codegen."""
-    from debezium_spark.operators.transforms import (
-        extract_new_record_state,
-    )
-
     env = _unwrap_envelope(spark, sf_dir)
-    return extract_new_record_state(
+    return T.extract_new_record_state(
         env,
         delete_mode="tombstone",
         row_fields=("repo", "path", "commit"),
@@ -5879,12 +5728,8 @@ def cdc_unwrap_rewrite_tombstone(spark, sf_dir):
     rewrite-with-tombstone``: the rewrite output (deletes keep their
     before image, ``__deleted=true``) PLUS one key-only tombstone row
     per delete with ``__deleted`` NULL (it carries no value image)."""
-    from debezium_spark.operators.transforms import (
-        extract_new_record_state,
-    )
-
     env = _unwrap_envelope(spark, sf_dir)
-    return extract_new_record_state(
+    return T.extract_new_record_state(
         env,
         delete_mode="rewrite-with-tombstone",
         row_fields=("repo", "path", "commit"),

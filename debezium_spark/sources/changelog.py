@@ -22,10 +22,6 @@ from pyspark.sql import functions as F
 from debezium_spark.envelope import EVENT_SCHEMA
 
 
-def read_changelog(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_changelog_range(
     spark: SparkSession, path: str, lsn_lo: int, lsn_hi: int
 ) -> DataFrame:

@@ -65,20 +65,6 @@ def after_key(
     return cond
 
 
-def read_chunk(
-    source: DataFrame, last: tuple[str, str] | None, chunk_size: int
-) -> DataFrame:
-    """Next PK-ordered chunk after ``last`` (exclusive) — the literal
-    per-chunk ``ORDER BY pk LIMIT n`` translation. O(table) per chunk;
-    kept for parity/tests. The engine paginates via
-    :func:`plan_chunk_bounds` + :func:`read_chunk_range` instead."""
-    return (
-        source.filter(after_key(last))
-        .orderBy("repo", "path")
-        .limit(chunk_size)
-    )
-
-
 def plan_chunk_bounds(
     source: DataFrame,
     chunk_size: int,

@@ -244,6 +244,22 @@ class StopEngine(Exception):
     everything already marked processed)."""
 
 
+def await_stream(query, engines) -> None:
+    """Wait for a streaming front-end's query. A ``StopEngine`` raised
+    by one of ``engines``' batch callbacks ends it gracefully and marks
+    that engine stopped; any other failure propagates."""
+    for eng in engines:
+        eng._stop_requested = False
+    try:
+        query.awaitTermination()
+    except Exception:
+        stopping = [e for e in engines if e._stop_requested]
+        if not stopping:
+            raise
+        for eng in stopping:
+            eng._stopped = True
+
+
 class Engine:
     SNAPSHOT_BATCH_ID = 0
 
@@ -1320,48 +1336,9 @@ class Engine:
         )
         applied = {"n": 0}
 
-        # log-carried schema changes apply when their own 'm' row
-        # arrives in-batch (the control-row pass in _apply_batch),
-        # which IS their LSN-ordered apply point — no per-batch
-        # max(lsn) job needed. Config-INJECTED changes
-        # (cfg.schema_changes) have no 'm' rows in the log, so only
-        # they still need the step-1 window gate and its frontier job.
-        need_window = bool(self.cfg.schema_changes)
-
-        stop_requested = {"flag": False}
-
         def apply(batch_df: DataFrame, epoch_id: int) -> None:
-            lsn_hi = None
-            if need_window:
-                row = batch_df.agg(F.max("lsn").alias("m")).collect()[0]
-                lsn_hi = (row["m"] if row["m"] is not None else -1) + 1
-            result = self._apply_batch(
-                batch_df, int(epoch_id) + 1, phase="stream", lsn_hi=lsn_hi
-            )
             applied["n"] += 1
-            if self.cfg.batch_callback is not None:
-                try:
-                    self.cfg.batch_callback(self, result)
-                except StopEngine:
-                    # graceful per the StopEngineException contract:
-                    # the merge commit stands, but the query must die
-                    # BEFORE this epoch checkpoints (returning
-                    # normally would mark it processed and a later
-                    # engine-side gap could never replay). The next
-                    # start re-delivers the epoch and the fence skips
-                    # it — exactly the crash-replay path, minus the
-                    # crash.
-                    stop_requested["flag"] = True
-                    raise
-            # same heartbeat cadence as the batch-replay loop — the
-            # front-end must not silently disable a configured
-            # heartbeat (HeartbeatImpl emits regardless of how the
-            # poll loop is driven)
-            if (
-                self.cfg.heartbeat_interval_batches
-                and applied["n"] % self.cfg.heartbeat_interval_batches == 0
-            ):
-                self._emit_heartbeat(int(epoch_id) + 1)
+            self._apply_stream_epoch(batch_df, int(epoch_id) + 1, applied["n"])
             if (
                 crash_after_batches is not None
                 and applied["n"] >= crash_after_batches
@@ -1376,12 +1353,50 @@ class Engine:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            q.awaitTermination()
-        except Exception:
-            if not stop_requested["flag"]:
+        await_stream(q, [self])
+
+    def _apply_stream_epoch(
+        self, batch_df: DataFrame, batch_id: int, ordinal: int
+    ) -> dict:
+        """One Structured Streaming epoch through the apply — the body
+        both streaming front-ends run (this engine's
+        :meth:`run_streaming` and ``MultiTableEngine.run_streaming``,
+        once per table). ``ordinal`` counts the epochs applied in this
+        run (1-based) for the heartbeat cadence.
+
+        Log-carried schema changes apply when their own 'm' row arrives
+        in-batch (the control-row pass in :meth:`_apply_batch`), which
+        IS their LSN-ordered apply point — no per-batch max(lsn) job.
+        Config-INJECTED changes (``cfg.schema_changes``) have no 'm'
+        rows in the log, so only they need the step-1 window gate and
+        its frontier job."""
+        lsn_hi = None
+        if self.cfg.schema_changes:
+            row = batch_df.agg(F.max("lsn").alias("m")).collect()[0]
+            lsn_hi = (row["m"] if row["m"] is not None else -1) + 1
+        result = self._apply_batch(
+            batch_df, batch_id, phase="stream", lsn_hi=lsn_hi
+        )
+        if self.cfg.batch_callback is not None:
+            try:
+                self.cfg.batch_callback(self, result)
+            except StopEngine:
+                # graceful per the StopEngineException contract: the
+                # merge commit stands, but the query must die BEFORE
+                # this epoch checkpoints (returning normally would mark
+                # it processed and a later engine-side gap could never
+                # replay). The next start re-delivers the epoch and the
+                # fence skips it — exactly the crash-replay path, minus
+                # the crash. :func:`await_stream` swallows the stop.
+                self._stop_requested = True
                 raise
-            self._stopped = True
+        # same heartbeat cadence as the batch-replay loop — a streaming
+        # front-end must not silently disable a configured heartbeat
+        # (HeartbeatImpl emits regardless of how the poll loop is driven)
+        interval = self.cfg.heartbeat_interval_batches
+        if interval and ordinal % interval == 0:
+            self._emit_heartbeat(batch_id)
+        return result
 
     # -- the per-batch pipeline -------------------------------------------
     def _apply_batch(

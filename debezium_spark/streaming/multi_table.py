@@ -47,7 +47,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debezium_spark.streaming.engine import Engine, EngineConfig
+from debezium_spark.streaming.engine import Engine, EngineConfig, await_stream
 
 __all__ = [
     "TableSpec",
@@ -302,7 +302,9 @@ class MultiTableEngine:
         dispatches per-table, EventDispatcher.java:481): each
         micro-batch is split by ``source.table`` in-batch and applied
         through that table's engine with the epoch as the shared
-        fencing batch id.
+        fencing batch id — the same per-epoch body as
+        ``Engine.run_streaming`` (config-injected schema-change gate,
+        ``batch_callback``/``StopEngine``, heartbeats).
 
         Exactly-once under partial fan failure: engines fence
         independently, so a crash after table A's merge but before
@@ -353,12 +355,10 @@ class MultiTableEngine:
                         "injected crash mid-fan: earlier tables"
                         " committed this epoch, later ones not"
                     )
-                eng._apply_batch(
-                    batch_df.filter(
-                        F.col("source.table") == F.lit(name)
-                    ),
+                eng._apply_stream_epoch(
+                    batch_df.filter(F.col("source.table") == F.lit(name)),
                     bid,
-                    phase="stream",
+                    seen["epochs"],
                 )
                 done += 1
             # epoch-boundary poll of the shared file-signal channel
@@ -376,7 +376,7 @@ class MultiTableEngine:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        await_stream(q, engines.values())
 
     def process_signals(self) -> dict[str, list[dict]]:
         """Fan one poll over every captured table's engine. With a

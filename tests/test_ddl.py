@@ -134,7 +134,30 @@ _STATEMENTS = [
 
 
 def test_column_parser_matches_driver_parser(spark):
-    df = spark.createDataFrame([(s,) for s in _STATEMENTS], "ddl string")
+    _assert_codegen_matches_driver(spark, _STATEMENTS)
+
+
+def test_column_parser_ignores_commas_and_parens_in_quoted_defaults(spark):
+    """A string DEFAULT holding ',', '(' or a PRIMARY KEY look-alike is
+    one literal: the codegen item count and PK list must agree with the
+    quote-aware driver parser."""
+    _assert_codegen_matches_driver(
+        spark,
+        [
+            "create table t_q (id bigint, tag varchar default 'a,b', "
+            "n int default 7, primary key (id))",
+            "alter table t_q add column tag varchar default 'x,(y', "
+            "drop column b",
+            "CREATE TABLE t_r (id bigint, note varchar "
+            "DEFAULT 'primary key (z)')",
+            "CREATE TABLE t_s (id bigint, a varchar DEFAULT '),(', "
+            "PRIMARY KEY (id))",
+        ],
+    )
+
+
+def _assert_codegen_matches_driver(spark, statements):
+    df = spark.createDataFrame([(s,) for s in statements], "ddl string")
     import pyspark.sql.functions as F
 
     cols = parse_ddl_cols(F.col("ddl"))
@@ -148,7 +171,7 @@ def test_column_parser_matches_driver_parser(spark):
             "ddl", *[c.alias(n) for c, n in zip(cols, names)]
         ).collect()
     }
-    for s in _STATEMENTS:
+    for s in statements:
         try:
             full = parse_ddl(s)
             exp = {k: full.get(k) for k in names[:5]}

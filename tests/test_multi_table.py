@@ -30,7 +30,7 @@ T2 = "repo_files_archive"
 T3 = "audit.events-v2"  # needs sanitizing for a path
 
 
-def _mixed_log(spark, tmp_root, tables, n_events=3000):
+def _mixed_log(spark, tmp_root, tables, n_events=3000, **gen_kwargs):
     """Interleaved multi-table log: independently generated per-table
     streams (different seeds ⇒ different content), retagged and
     unioned. Per-topic LSN order is what the consumer model guarantees
@@ -44,6 +44,7 @@ def _mixed_log(spark, tmp_root, tables, n_events=3000):
             n_events=n_events,
             seed=42 + i,
             partitions=4,
+            **gen_kwargs,
         )
         parts.append(with_table_name(log, t))
     df = parts[0]
@@ -327,6 +328,42 @@ def test_streaming_multi_table_matches_batch_replay(spark, tmp_root):
         assert got == _rows(
             _single_table_final(spark, tmp_root, log_path, t, f"st{i}")
         )
+
+
+def test_streaming_multi_table_applies_config_injected_schema_changes(
+    spark, tmp_root
+):
+    """Schema changes injected through the engine config carry no 'm'
+    row in the log; the multi-table streaming front-end must gate them
+    by each epoch's LSN window like the single-table one, so the
+    evolved column's values reach every table's lake (and equal the
+    batch replay's)."""
+    change = {
+        "lsn": 100 + 900,
+        "schema_version": 1,
+        "change_type": "ALTER_ADD_COLUMN",
+        "column_name": "size_bytes",
+        "new_type": "bigint",
+    }
+    tables = [TABLE_NAME, T2]
+    log_path = _mixed_log(
+        spark, tmp_root, tables, n_events=900,
+        schema_change_lsns={1: change["lsn"]},
+    )
+    opts = dict(
+        route="filter", snapshot_mode="never", n_buckets=4, partitions=4,
+        schema_changes=[change],
+    )
+    mt = MultiTableEngine(spark, log_path, f"{tmp_root}/lake_sc_s", **opts)
+    mt.run_streaming(f"{tmp_root}/ckpt_sc", max_files_per_trigger=4)
+    batch = MultiTableEngine(spark, log_path, f"{tmp_root}/lake_sc_b", **opts)
+    batch.run()
+    for t in tables:
+        assert mt.engines()[t].lake.table_schema().version == 1
+        got = _rows(mt.final_state(t))
+        assert got == _rows(batch.final_state(t))
+        sized = mt.final_state(t).filter(F.col("size_bytes").isNotNull())
+        assert sized.count() > 0, t
 
 
 def test_streaming_shared_signal_fires_once_per_consumer(
