@@ -36,8 +36,78 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.expr_cache import built_once, columns_key
 from debezium_spark.operators.compaction import compact
 from debezium_spark.schema_evolution import TableSchema
+
+
+@built_once
+def _bucket_expr(n_buckets: int):
+    return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), n_buckets).cast("int")
+
+
+@built_once
+def _change_projection(cols_json: str, n_buckets: int) -> list:
+    """``op``, ``lsn``, every physical column cast to its table type,
+    and the key's ``bucket``: the merge's view of a batch's changes."""
+    return [
+        F.col("op"),
+        F.col("lsn"),
+        *[
+            F.col(c["physical"]).cast(c["type"]).alias(c["physical"])
+            for c in json.loads(cols_json)
+        ],
+        _bucket_expr(n_buckets).alias("bucket"),
+    ]
+
+
+@built_once
+def _distinct_keys():
+    return F.countDistinct("repo", "path").alias("keys")
+
+
+@built_once
+def _state_projection(
+    file_cols: tuple[tuple[str, str], ...],
+    cols_json: str,
+    logical: bool,
+    with_sys: bool,
+    retain_tombstones: bool,
+) -> tuple:
+    """How :meth:`LakeTable.read_state` reads files whose physical
+    columns are ``file_cols`` (``(physical, type)`` pairs of the schema
+    that wrote them) as the table schema ``cols_json``:
+    ``(read DDL, row filter or None, projection)``.
+
+    The read DDL is the files' physical schema plus the system columns;
+    a file written by a non-retaining merge has no ``_deleted`` column
+    and reads it as NULL, which counts as live."""
+    present = {p for p, _ in file_cols}
+    read_ddl = ", ".join(
+        [f"`{p}` {t}" for p, t in file_cols]
+        + ["`_lsn` bigint", "`_deleted` boolean"]
+    )
+    dead = F.coalesce(F.col("_deleted"), F.lit(False))
+    project = []
+    for c in json.loads(cols_json):
+        name = c["name"] if logical else c["physical"]
+        if c["physical"] in present:
+            project.append(F.col(c["physical"]).cast(c["type"]).alias(name))
+        else:
+            # file predates the column: Iceberg initial-default
+            # semantics — project the column's default (NULL when
+            # none). Rows written AFTER the add with an explicit NULL
+            # take the branch above and stay NULL.
+            project.append(F.lit(c.get("default")).cast(c["type"]).alias(name))
+    if with_sys:
+        project.append(F.col("_lsn"))
+        if retain_tombstones:
+            project.append(dead.alias("_deleted"))
+    # consumer-facing reads never see tombstones; a NON-retaining lake
+    # drops them even from merge reads (retention switched off ⇒ they
+    # are just garbage)
+    keep = None if with_sys and retain_tombstones else ~dead
+    return read_ddl, keep, project
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -153,8 +223,8 @@ class LakeTable:
         return TableSchema(m["schema"], m["schema_version"])
 
     # -- read ----------------------------------------------------------
-    def _bucket_col(self, repo="repo", path="path"):
-        return F.pmod(F.xxhash64(F.col(repo), F.col(path)), self.n_buckets).cast("int")
+    def _bucket_col(self):
+        return _bucket_expr(self.n_buckets)
 
     def read_state(
         self,
@@ -197,50 +267,24 @@ class LakeTable:
             )
             return self.spark.createDataFrame([], ddl)
 
-        by_version: dict[int, list[str]] = {}
+        # one scan per physical file schema: every file is read with the
+        # schema of the manifest that wrote it, so no footer is inferred
+        by_schema: dict[tuple, list[str]] = {}
         for e in entries:
-            by_version.setdefault(e["version"], []).append(
-                os.path.join(self.root, e["path"])
-            )
-
+            written = self.manifest(e["version"])["schema"]
+            by_schema.setdefault(
+                tuple((c["physical"], c["type"]) for c in written), []
+            ).append(os.path.join(self.root, e["path"]))
+        cur = columns_key(schema.columns)
         parts = []
-        for v, paths in by_version.items():
-            file_schema = TableSchema(
-                self.manifest(v)["schema"], self.manifest(v)["schema_version"]
+        for file_cols, paths in by_schema.items():
+            read_ddl, keep, project = _state_projection(
+                file_cols, cur, logical, with_sys, self.retain_tombstones
             )
-            present = {c["physical"]: c for c in file_schema.columns}
-            df = self.spark.read.parquet(*paths)
-            cols = []
-            for c in schema.columns:
-                name = c["name"] if logical else c["physical"]
-                if c["physical"] in present:
-                    cols.append(F.col(c["physical"]).cast(c["type"]).alias(name))
-                else:
-                    # file predates the column: Iceberg initial-default
-                    # semantics — project the column's default (NULL
-                    # when none). Rows written AFTER the add with an
-                    # explicit NULL take the branch above and stay NULL.
-                    cols.append(
-                        F.lit(c.get("default")).cast(c["type"]).alias(name)
-                    )
-            for n, t in sys_cols:
-                # `_deleted` may predate retention being switched on
-                # (or the file was written by a non-retaining merge) —
-                # absent means "live row"
-                src = (
-                    F.col(n)
-                    if n != "_deleted" or "_deleted" in df.columns
-                    else F.lit(False)
-                )
-                cols.append(src.cast(t).alias(n))
-            if "_deleted" in df.columns and (
-                not with_sys or not self.retain_tombstones
-            ):
-                # consumer-facing reads never see tombstones; a
-                # NON-retaining lake drops them even from merge reads
-                # (retention switched off ⇒ they are just garbage)
-                df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            parts.append(df.select(*cols))
+            df = self.spark.read.schema(read_ddl).parquet(*paths)
+            if keep is not None:
+                df = df.filter(keep)
+            parts.append(df.select(*project))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -629,24 +673,15 @@ class LakeTable:
         schema = self.table_schema()
         new_version = man["version"] + 1
         changes = changes.select(
-            "op",
-            "lsn",
-            *[
-                F.col(c["physical"]).cast(c["type"]).alias(c["physical"])
-                for c in schema.columns
-            ],
-        ).withColumn("bucket", self._bucket_col())
+            *_change_projection(columns_key(schema.columns), self.n_buckets)
+        )
         # Persist the change rows ONCE: one ≤n_buckets-row job yields the
         # touched buckets and the changed-key count (buckets partition
         # keys, so per-bucket distinct counts sum exactly), and the
         # cached rows feed the election without re-running the upstream
         # scan and transforms.
         changes.persist()
-        rows = (
-            changes.groupBy("bucket")
-            .agg(F.countDistinct("repo", "path").alias("keys"))
-            .collect()
-        )
+        rows = changes.groupBy("bucket").agg(_distinct_keys()).collect()
         touched = sorted(r["bucket"] for r in rows)
         n_changes = int(sum(r["keys"] for r in rows))
         if truncate_lsn is not None:

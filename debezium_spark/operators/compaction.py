@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from debezium_spark.expr_cache import built_once
+
 KEY = ("repo", "path")
 
 
@@ -50,30 +52,61 @@ def compact(
     already collapses custom-key winners, and ``pk_change_split``
     stamps the CREATE half ``lsn + 1`` so the two halves never tie.
     """
-    payload = [c for c in changes.columns if c not in (*KEY, "op", "lsn")]
-    rows = changes.select(*KEY, "op", "lsn", F.lit(0).alias("src"), *payload)
-    if state is not None:
+    payload = tuple(c for c in changes.columns if c not in (*KEY, "op", "lsn"))
+    has_state = state is not None
+    e = _election(
+        payload,
+        has_state,
+        has_state and "_deleted" in state.columns,
+        retain_tombstones,
+    )
+    rows = changes.select(*e["changes"])
+    if has_state:
+        rows = state.select(*e["state"]).unionByName(rows)
+    won = rows.groupBy(*e["key"]).agg(e["winner"])
+    if not retain_tombstones:
+        won = won.filter(e["live"])
+    return won.select(*e["output"])
+
+
+@built_once
+def _election(
+    payload: tuple[str, ...],
+    has_state: bool,
+    state_has_deleted: bool,
+    retain_tombstones: bool,
+) -> dict:
+    """The election's expressions: depend only on the payload columns,
+    whether (and how) state enters, and retention. Column names are
+    built as Columns too: a name in a select list costs a round trip."""
+    key = [F.col(k) for k in KEY]
+    cols = [F.col(p) for p in payload]
+    e = {
+        "key": key,
+        "changes": [*key, F.col("op"), F.col("lsn"), F.lit(0).alias("src"), *cols],
+    }
+    if has_state:
         dead = (
             F.coalesce(F.col("_deleted"), F.lit(False))
-            if "_deleted" in state.columns
+            if state_has_deleted
             else F.lit(False)
         )
-        rows = state.select(
-            *KEY,
+        e["state"] = [
+            *key,
             F.when(dead, "d").otherwise("u").alias("op"),
             F.col("_lsn").alias("lsn"),
             F.lit(1).alias("src"),
-            *payload,
-        ).unionByName(rows)
-    won = rows.groupBy(*KEY).agg(
-        F.max_by(F.struct("op", "lsn", *payload), F.struct("lsn", "src")).alias("w")
-    )
+            *cols,
+        ]
+    e["winner"] = F.max_by(
+        F.struct("op", "lsn", *payload), F.struct("lsn", "src")
+    ).alias("w")
     deleted = F.col("w.op") == "d"
-    if not retain_tombstones:
-        won = won.filter(~deleted)
-    return won.select(
-        *KEY,
+    e["live"] = ~deleted
+    e["output"] = [
+        *key,
         *[F.when(~deleted, F.col(f"w.{p}")).alias(p) for p in payload],
         F.col("w.lsn").cast("bigint").alias("_lsn"),
         *([deleted.alias("_deleted")] if retain_tombstones else []),
-    )
+    ]
+    return e

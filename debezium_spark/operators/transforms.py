@@ -11,8 +11,10 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from debezium_spark.envelope import OP_CREATE, OP_DELETE, OP_UPDATE
+from debezium_spark.expr_cache import built_once
 
 
 # ---------------------------------------------------------------------------
@@ -23,7 +25,12 @@ def drop_tombstones(df: DataFrame) -> DataFrame:
     """Drop Kafka-log-compaction tombstones; the table effect of a delete
     is the ``d`` event itself (EventDispatcher.java:496-508). Analogue of
     ExtractNewRecordState's drop-tombstones mode."""
-    return df.filter(~F.col("is_tombstone"))
+    return df.filter(_not_tombstone())
+
+
+@built_once
+def _not_tombstone() -> Column:
+    return ~F.col("is_tombstone")
 
 
 def skip_operations(df: DataFrame, skipped: tuple[str, ...]) -> DataFrame:
@@ -112,13 +119,19 @@ def _target_key(df: DataFrame, key_columns: tuple[str, ...]) -> Column:
     columns: before-image for deletes, after-image otherwise; tombstones
     / imageless rows fall back to the log key (custom columns absent
     from it are NULL — such rows are dropped upstream anyway)."""
+    return _target_key_expr(
+        df.schema["after"].dataType, df.schema["key"].dataType, tuple(key_columns)
+    )
+
+
+@built_once
+def _target_key_expr(
+    after_type: StructType, key_type: StructType, key_columns: tuple[str, ...]
+) -> Column:
     # the fallback's missing-column NULLs must carry the IMAGE field's
     # type (a bigint key column typed string here would make the
     # when/otherwise branches incompatible at analysis time)
-    after_types = {
-        f.name: f.dataType for f in df.schema["after"].dataType.fields
-    }
-    key_names = df.schema["key"].dataType.names
+    after_types = {f.name: f.dataType for f in after_type.fields}
     return (
         F.when(F.col("op") == OP_DELETE, _image_key("before", key_columns))
         .when(F.col("after").isNotNull(), _image_key("after", key_columns))
@@ -127,7 +140,7 @@ def _target_key(df: DataFrame, key_columns: tuple[str, ...]) -> Column:
                 *[
                     (
                         F.col(f"key.{c}")
-                        if c in key_names
+                        if c in key_type.names
                         else F.lit(None).cast(after_types[c])
                     ).alias(c)
                     for c in key_columns
@@ -152,7 +165,12 @@ def pk_change_split(
     RelationalDatabaseConnectorConfig.java:321): the key is built from
     these row-image columns instead of the default PK.
     """
-    cols = df.columns
+    return df.select(_split_rows(df.schema, tuple(key_columns)))
+
+
+@built_once
+def _split_rows(schema: StructType, key_columns: tuple[str, ...]) -> Column:
+    cols = schema.names
     moved = [
         F.col(f"before.{c}") != F.col(f"after.{c}") for c in key_columns
     ]
@@ -168,21 +186,24 @@ def pk_change_split(
 
     delete_part = ev(
         op=F.lit(OP_DELETE),
-        after=F.lit(None).cast(df.schema["after"].dataType),
+        after=F.lit(None).cast(schema["after"].dataType),
         key=_image_key("before", key_columns),
     )
     create_part = ev(
         op=F.lit(OP_CREATE),
         lsn=F.col("lsn") + 1,
-        before=F.lit(None).cast(df.schema["before"].dataType),
+        before=F.lit(None).cast(schema["before"].dataType),
         key=_image_key("after", key_columns),
     )
     # the pass-through branch must carry the SAME key struct type as the
     # split branches (custom key columns), so normalize it here too
-    arr = F.when(is_pk_change, F.array(delete_part, create_part)).otherwise(
-        F.array(ev(key=_target_key(df, key_columns)))
+    target = _target_key_expr(
+        schema["after"].dataType, schema["key"].dataType, key_columns
     )
-    return df.select(F.inline(arr))
+    arr = F.when(is_pk_change, F.array(delete_part, create_part)).otherwise(
+        F.array(ev(key=target))
+    )
+    return F.inline(arr)
 
 
 def normalize_target_key(
@@ -201,6 +222,7 @@ def normalize_target_key(
 # EventDispatcher failure modes :319-335 — fail / warn / skip)
 # ---------------------------------------------------------------------------
 
+@built_once
 def _invalid_rules() -> list[tuple[str, str, Column]]:
     """Envelope-shape violations (VerifyRecord.java:129-227 rules) as an
     ordered ``(stage, message, predicate)`` list — evaluation order
@@ -240,6 +262,11 @@ def _invalid_rules() -> list[tuple[str, str, Column]]:
 def event_invalid(df: DataFrame) -> Column:
     """OR of every :func:`_invalid_rules` predicate — True when the
     envelope is malformed under any rule."""
+    return _any_invalid()
+
+
+@built_once
+def _any_invalid() -> Column:
     rules = _invalid_rules()
     out = rules[0][2]
     for _, _, pred in rules[1:]:
@@ -302,23 +329,31 @@ def enforce_valid(df: DataFrame, mode: str = "fail") -> DataFrame:
       :func:`dead_letter_records` (Connect ``errors.tolerance=all`` +
       ``errors.deadletterqueue.topic.name``).
     """
-    invalid = event_invalid(df)
     if mode == "fail":
-        # the guard rides the (always-used) lsn column so the optimizer
-        # cannot dead-code-eliminate it
-        guard = F.when(
-            invalid,
-            F.raise_error(
-                F.concat(
-                    F.lit("invalid envelope at lsn="),
-                    F.col("lsn").cast("string"),
-                )
-            ).cast("long"),
-        ).otherwise(F.col("lsn"))
-        return df.withColumn("lsn", guard)
+        return df.withColumn("lsn", _fail_guard())
     if mode in ("warn", "skip", "dlq"):
-        return df.filter(~invalid)
+        return df.filter(_valid())
     raise ValueError(f"unknown error mode {mode!r}")
+
+
+@built_once
+def _fail_guard() -> Column:
+    # the guard rides the (always-used) lsn column so the optimizer
+    # cannot dead-code-eliminate it
+    return F.when(
+        _any_invalid(),
+        F.raise_error(
+            F.concat(
+                F.lit("invalid envelope at lsn="),
+                F.col("lsn").cast("string"),
+            )
+        ).cast("long"),
+    ).otherwise(F.col("lsn"))
+
+
+@built_once
+def _valid() -> Column:
+    return ~_any_invalid()
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from debezium_spark.lake import LakeTable
+from debezium_spark.expr_cache import built_once
+from debezium_spark.lake import LakeTable, _bucket_expr
 
 
 def _wire_read_schema():
@@ -166,32 +167,7 @@ def publish_changes(
                 f"commit v{v} expired before publish (run publish "
                 "before expire_snapshots, or accept the gap explicitly)"
             )
-        feed = lake.table_changes(v - 1, v)
-        key_json = F.to_json(F.struct("repo", "path"))
-        value = F.to_json(
-            F.struct(
-                F.col("before"),
-                F.col("after"),
-                F.col("op"),
-                F.coalesce(F.col("lsn_post"), F.col("lsn_pre")).alias("lsn"),
-            )
-        )
-        bucket = lake._bucket_col()
-        offset = F.coalesce(F.col("lsn_post"), F.col("lsn_pre"))
-        records = feed.select(
-            key_json.alias("key_json"),
-            value.alias("value_json"),
-            bucket.alias("partition"),
-            offset.cast("long").alias("offset"),
-        )
-        if tombstones_on_delete:
-            tombs = feed.filter(F.col("op") == "d").select(
-                key_json.alias("key_json"),
-                F.lit(None).cast("string").alias("value_json"),
-                bucket.alias("partition"),
-                (F.col("lsn_pre") + 1).cast("long").alias("offset"),
-            )
-            records = records.unionByName(tombs)
+        records = _version_records(lake, v, tombstones_on_delete)
         final = os.path.join(out_dir, f"v{v:08d}")
         tmp = os.path.join(out_dir, f".tmp-v{v:08d}")
         if os.path.isdir(tmp):
@@ -200,6 +176,50 @@ def publish_changes(
         os.rename(tmp, final)
         published.append(v)
     return {"published": published, "up_to": current}
+
+
+def _version_records(lake: LakeTable, v: int, tombstones_on_delete: bool):
+    """Commit ``v``'s wire records, in one pass over its change feed: a
+    delete's tombstone companion is emitted from the delete's own row."""
+    feed = lake.table_changes(v - 1, v)
+    return feed.select(*_wire_columns(lake.n_buckets, tombstones_on_delete))
+
+
+@built_once
+def _wire_columns(n_buckets: int, tombstones_on_delete: bool) -> list:
+    key_json = F.to_json(F.struct("repo", "path"))
+    value = F.to_json(
+        F.struct(
+            F.col("before"),
+            F.col("after"),
+            F.col("op"),
+            F.coalesce(F.col("lsn_post"), F.col("lsn_pre")).alias("lsn"),
+        )
+    )
+    partition = _bucket_expr(n_buckets)
+    offset = F.coalesce(F.col("lsn_post"), F.col("lsn_pre"))
+    fields = [
+        key_json.alias("key_json"),
+        value.alias("value_json"),
+        partition.alias("partition"),
+        offset.cast("long").alias("offset"),
+    ]
+    if not tombstones_on_delete:
+        return fields
+    tomb = F.struct(
+        key_json.alias("key_json"),
+        F.lit(None).cast("string").alias("value_json"),
+        partition.alias("partition"),
+        (F.col("lsn_pre") + 1).cast("long").alias("offset"),
+    )
+    rec = F.struct(*fields)
+    return [
+        F.inline(
+            F.when(F.col("op") == "d", F.array(rec, tomb)).otherwise(
+                F.array(rec)
+            )
+        )
+    ]
 
 
 def compact_published(

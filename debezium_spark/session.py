@@ -8,6 +8,42 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_memory_mb() -> int:
+    """Physical memory of the host in MiB (on Linux, ``MemTotal``)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
+def _memory_mb(spec: str) -> float:
+    """A JVM memory string (``512m``, ``4g``, ``2048``: MiB by default,
+    like ``spark.driver.memory``) in MiB."""
+    units = {"k": 2**-10, "m": 1, "g": 2**10, "t": 2**20}
+    s = spec.strip().lower().removesuffix("b")
+    if s and s[-1] in units:
+        return float(s[:-1]) * units[s[-1]]
+    return float(s)
+
+
+def driver_memory(requested: str | None = None) -> str:
+    """The driver heap to launch with: ``requested`` (or
+    ``$SPARK_DRIVER_MEM``) if the host can hold it, else half the
+    host's ``MemTotal``. A heap larger than physical memory does not
+    fail at start-up: it fails half-way through a run, when the heap
+    grows into memory the host does not have. So it is refused here,
+    before the JVM launches."""
+    total = host_memory_mb()
+    requested = requested or os.environ.get("SPARK_DRIVER_MEM")
+    if requested is None:
+        return f"{total // 2}m"
+    if _memory_mb(requested) > total:
+        raise ValueError(
+            f"driver memory {requested!r} exceeds this host's {total} MiB "
+            "of physical memory; set SPARK_DRIVER_MEM (or "
+            "spark.driver.memory) to at most that, or unset it to use "
+            f"half of it ({total // 2}m)"
+        )
+    return requested
+
+
 def get_spark(
     app_name: str = "debezium_spark",
     cores: int | None = None,
@@ -22,7 +58,14 @@ def get_spark(
     other setting below is cluster-valid. ``master`` overrides the
     local[N] default (e.g. ``local-cluster[4,8,16384]`` to emulate a
     multi-executor cluster with real executor JVMs).
+
+    The driver heap is ``spark.driver.memory`` from ``extra_conf``, else
+    ``$SPARK_DRIVER_MEM``, else half the host's memory; a heap larger
+    than the host raises ``ValueError`` before the JVM launches (see
+    :func:`driver_memory`).
     """
+    extra_conf = dict(extra_conf or {})
+    memory = driver_memory(extra_conf.pop("spark.driver.memory", None))
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
@@ -36,7 +79,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Every micro-batch re-plans the same apply + publish plans; their
@@ -45,7 +88,7 @@ def get_spark(
         # and a batch recompiles (and runs cold) a varying share of it.
         .config("spark.sql.codegen.cache.maxEntries", "512")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,12 +25,14 @@ Per-batch dataflow (SURVEY §7.1)::
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.expr_cache import built_once, columns_key
 from debezium_spark.lake import LakeTable
 # perfbench/trace.py looks `compact` up here; re-point the trace, then delete
 from debezium_spark.operators.compaction import compact  # noqa: F401
@@ -258,6 +260,86 @@ def await_stream(query, engines) -> None:
             raise
         for eng in stopping:
             eng._stopped = True
+
+
+@built_once
+def _control_op():
+    return F.col("op").isin("t", "m")
+
+
+@built_once
+def _not_schema_op():
+    return F.col("op").isNull() | (F.col("op") != "m")
+
+
+@built_once
+def _row_count():
+    return F.count(F.lit(1)).alias("n")
+
+
+@built_once
+def _flat_projection() -> list:
+    return [
+        F.col("key.repo").alias("repo"),
+        F.col("key.path").alias("path"),
+        F.col("lsn"),
+        F.col("op"),
+        F.col("after"),
+        F.col("schema_version"),
+    ]
+
+
+@built_once
+def _frontier_aggs(partitions: int) -> list:
+    """The offset-frontier Observation's aggregates: per source
+    partition max LSN and event count, plus per-op and transaction
+    counters for the JMX-metrics analogue
+    (pipeline/metrics/traits/CommonEventMetricsMXBean.java,
+    StreamingMetricsMXBean.java) — one observation, zero extra jobs."""
+    aggs = [F.max("partition_id").alias("max_pid")]
+    for p in range(partitions):
+        is_p = F.col("partition_id") == p
+        aggs.append(F.max(F.when(is_p, F.col("lsn"))).alias(f"max_{p}"))
+        aggs.append(F.count(F.when(is_p, True)).alias(f"cnt_{p}"))
+    for opc in ("c", "u", "d", "r"):
+        aggs.append(F.count(F.when(F.col("op") == opc, True)).alias(f"op_{opc}"))
+    aggs.append(F.max("ts_ms").alias("max_source_ts"))
+    aggs.append(F.max_by(F.col("source.txId"), F.col("lsn")).alias("last_tx"))
+    aggs.append(F.min_by(F.col("source.txId"), F.col("lsn")).alias("first_tx"))
+    aggs.append(F.approx_count_distinct(F.col("source.txId")).alias("n_tx"))
+    return aggs
+
+
+@built_once
+def _aligned(
+    cols_json: str, added_at: tuple[int, ...], present: tuple[str, ...]
+) -> list:
+    """:meth:`Engine._align`'s projection for the lake schema
+    ``cols_json``, each column's ADD COLUMN version ``added_at`` (0 =
+    base column) and the image fields ``present`` in the batch."""
+    cols = [F.col("op"), F.col("lsn")]
+    for c, va in zip(json.loads(cols_json), added_at):
+        p = c["physical"]
+        if p in ("repo", "path"):
+            cols.append(F.col(p).cast(c["type"]).alias(p))
+            continue
+        if p not in present:
+            # columns removed by the column filter are absent from the
+            # image struct — they land as NULL in the lake (never
+            # captured)
+            cols.append(F.lit(None).cast(c["type"]).alias(p))
+            continue
+        val = F.col("after").getField(p)
+        if va > 0:
+            # events predating the ADD COLUMN contribute the column's
+            # DEFAULT (DefaultValueConverter semantics — a pre-alter
+            # row reads as the default after the alter), NULL when none
+            # is declared
+            val = F.when(F.col("schema_version") >= va, val).otherwise(
+                F.lit(c.get("default"))
+            )
+        cols.append(val.cast(c["type"]).alias(p))
+    return cols
 
 
 class Engine:
@@ -719,6 +801,10 @@ class Engine:
             else lo
         )
         span = self.cfg.batch_lsn_span
+        # one footer read per call, not per batch: every window of the
+        # log is read with the schema resolved here (as DDL, which the
+        # reader takes in one round trip)
+        log_schema = self.spark.read.parquet(self.cfg.changelog_path).schema.toDDL()
         results = []
         store = None
         if self.cfg.offset_store_path:
@@ -743,7 +829,11 @@ class Engine:
             batch_lo = lo + k * span
             batch_hi = batch_lo + span
             events = read_changelog_range(
-                self.spark, self.cfg.changelog_path, batch_lo, batch_hi
+                self.spark,
+                self.cfg.changelog_path,
+                batch_lo,
+                batch_hi,
+                schema=log_schema,
             )
             results.append(
                 self._apply_batch(events, k + 1, phase="stream", lsn_hi=batch_hi)
@@ -1442,11 +1532,7 @@ class Engine:
             + (["message"] if "message" in events.columns else [])
             + (["ts_ms"] if "ts_ms" in events.columns else [])
         )
-        ctl = (
-            events.filter(F.col("op").isin("t", "m"))
-            .select(*ctl_cols)
-            .collect()
-        )
+        ctl = events.filter(_control_op()).select(*ctl_cols).collect()
         from debezium_spark.signals import parse_source_signal
 
         deferred_signals: list[dict] = []
@@ -1567,32 +1653,7 @@ class Engine:
         from pyspark.sql import Observation
 
         obs = Observation()
-        aggs = [F.max("partition_id").alias("max_pid")]
-        for p in range(self.cfg.partitions):
-            is_p = F.col("partition_id") == p
-            aggs.append(
-                F.max(F.when(is_p, F.col("lsn"))).alias(f"max_{p}")
-            )
-            aggs.append(F.count(F.when(is_p, True)).alias(f"cnt_{p}"))
-        # per-op + transaction counters for the JMX-metrics analogue
-        # (pipeline/metrics/traits/CommonEventMetricsMXBean.java,
-        # StreamingMetricsMXBean.java) — ride the same observation,
-        # zero extra jobs
-        for opc in ("c", "u", "d", "r"):
-            aggs.append(
-                F.count(F.when(F.col("op") == opc, True)).alias(f"op_{opc}")
-            )
-        aggs.append(F.max("ts_ms").alias("max_source_ts"))
-        aggs.append(
-            F.max_by(F.col("source.txId"), F.col("lsn")).alias("last_tx")
-        )
-        aggs.append(
-            F.min_by(F.col("source.txId"), F.col("lsn")).alias("first_tx")
-        )
-        aggs.append(
-            F.approx_count_distinct(F.col("source.txId")).alias("n_tx")
-        )
-        events = events.observe(obs, *aggs)
+        events = events.observe(obs, *_frontier_aggs(self.cfg.partitions))
         # No cache here: the single consumer is the merge, which
         # persists the aligned change rows; the observation fires when
         # its bucket-discovery job materializes that cache.
@@ -1607,9 +1668,7 @@ class Engine:
             ev = ev.filter(F.col("lsn") > truncate_lsn)
         # schema-change events (op='m') were dispatched to the schema
         # path above — keep them out of the data pipeline
-        ev = ev.filter(
-            F.col("op").isNull() | (F.col("op") != "m")
-        )
+        ev = ev.filter(_not_schema_op())
         if self.cfg.table_include_regex:
             ev = table_filter(ev, include_regex=self.cfg.table_include_regex)
         if self.cfg.column_include_regex or self.cfg.column_exclude_regex:
@@ -1624,12 +1683,12 @@ class Engine:
                 always_keep=tuple(self.cfg.key_columns),
             )
         obs_pre_valid = Observation()
-        ev = ev.observe(obs_pre_valid, F.count(F.lit(1)).alias("n"))
+        ev = ev.observe(obs_pre_valid, _row_count())
         if self.cfg.error_mode == "dlq":
             self._write_dead_letters(ev, batch_id, phase)
         ev = enforce_valid(ev, self.cfg.error_mode)
         obs_post_valid = Observation()
-        ev = ev.observe(obs_post_valid, F.count(F.lit(1)).alias("n"))
+        ev = ev.observe(obs_post_valid, _row_count())
         ev = drop_tombstones(ev)
         if self.cfg.skipped_operations:
             ev = skip_operations(ev, self.cfg.skipped_operations)
@@ -1637,7 +1696,7 @@ class Engine:
             # PostProcessor SPI — see EngineConfig.post_processors
             ev = pp(ev)
         obs_survived = Observation()
-        ev = ev.observe(obs_survived, F.count(F.lit(1)).alias("n"))
+        ev = ev.observe(obs_survived, _row_count())
         ev = pk_change_split(ev, self.cfg.key_columns)
         ev = normalize_target_key(ev, self.cfg.key_columns)
 
@@ -1720,14 +1779,7 @@ class Engine:
 
         # the merge elects the LWW winner per key over the touched
         # buckets' state and these raw change rows
-        flat = ev.select(
-            F.col("key.repo").alias("repo"),
-            F.col("key.path").alias("path"),
-            "lsn",
-            "op",
-            "after",
-            "schema_version",
-        )
+        flat = ev.select(*_flat_projection())
         result = self.lake.merge(
             self._align(flat),
             batch_id,
@@ -1773,33 +1825,19 @@ class Engine:
         events that predate an ADD COLUMN contribute NULL for it
         (mixed-schema batches, SURVEY §7.4)."""
         schema = self.lake.table_schema()
-        # columns removed by the column filter are absent from the image
-        # struct — they land as NULL in the lake (never captured)
-        present = set(flat.schema["after"].dataType.names)
-        cols = [F.col("op"), F.col("lsn")]
+        added_at = []
         for c in schema.columns:
-            p = c["physical"]
-            if p in ("repo", "path"):
-                cols.append(F.col(p).cast(c["type"]).alias(p))
-                continue
-            if p not in present:
-                cols.append(F.lit(None).cast(c["type"]).alias(p))
-                continue
-            val = F.col("after").getField(p)
             try:
-                va = self.tracker.added_at_version(p)
+                added_at.append(self.tracker.added_at_version(c["physical"]))
             except KeyError:
-                va = 0
-            if va > 0:
-                # events predating the ADD COLUMN contribute the
-                # column's DEFAULT (DefaultValueConverter semantics —
-                # a pre-alter row reads as the default after the
-                # alter), NULL when none is declared
-                val = F.when(F.col("schema_version") >= va, val).otherwise(
-                    F.lit(c.get("default"))
-                )
-            cols.append(val.cast(c["type"]).alias(p))
-        return flat.select(*cols)
+                added_at.append(0)
+        return flat.select(
+            *_aligned(
+                columns_key(schema.columns),
+                tuple(added_at),
+                tuple(flat.schema["after"].dataType.names),
+            )
+        )
 
     # -- introspection ------------------------------------------------------
     @property

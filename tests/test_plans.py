@@ -703,3 +703,92 @@ def test_logical_messages_is_pure_projection(spark):
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "\n* " in plan  # codegen star present
+
+
+def n_scans(plan: str) -> int:
+    import re
+
+    return len(re.findall(r"\(\d+\) Scan parquet", plan))
+
+
+def _lake_rows(spark, rows):
+    ddl = (
+        "repo: string, path: string, commit: string, lang: string, "
+        "content: string, op: string, lsn: long"
+    )
+    return spark.createDataFrame(rows, ddl)
+
+
+def test_read_state_is_schema_bound_one_scan_no_jobs(spark, tmp_path_factory):
+    """Touched buckets whose files come from three data versions of one
+    schema: building the read launches no Spark job (no parquet footer
+    is inferred — files are read with their manifest's schema) and
+    plans one file scan, not one per data version."""
+    from debezium_spark.lake import LakeTable
+
+    root = str(tmp_path_factory.mktemp("boundread") / "lake")
+    lt = LakeTable(spark, root, n_buckets=4)
+    lt.create()
+    keys = [(f"r{i % 2}", f"p{i}") for i in range(16)]
+    lt.merge(_lake_rows(spark, [(r, p, "c", "py", "x", "c", 100) for r, p in keys]), 1)
+    bucket_of = {
+        (r["repo"], r["path"]): r["b"]
+        for r in lt.read_state(logical=False)
+        .select("repo", "path", lt._bucket_col().alias("b"))
+        .collect()
+    }
+    buckets = sorted(set(bucket_of.values()))
+    assert len(buckets) >= 3
+    # rewrite one bucket per merge: its files move to the new data version
+    for batch_id, b in enumerate(buckets[:2], start=2):
+        r, p = next(k for k, kb in bucket_of.items() if kb == b)
+        lt.merge(_lake_rows(spark, [(r, p, "c", "py", "y", "u", 200)]), batch_id)
+    touched = buckets[:3]
+    files = lt.manifest()["files"]
+    assert len({files[str(b)]["version"] for b in touched}) == 3
+
+    sc = spark.sparkContext
+    group = "read-state-build-probe"
+    sc.setJobGroup(group, "building read_state only")
+    try:
+        state = lt.read_state(buckets=touched, logical=False, with_sys=True)
+        plan = plan_of(state)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert n_scans(plan) == 1
+    assert {(r["repo"], r["path"]) for r in state.collect()} == {
+        k for k, b in bucket_of.items() if b in touched
+    }
+
+
+def test_publish_is_one_pass_over_the_feed(spark, tmp_path_factory):
+    """A published version's records, a delete's tombstone companion
+    included, come from ONE pass over the version's change feed: the
+    feed's two pinned reads (two scans) and its diff join's two
+    exchanges — not a second, filtered copy of the feed."""
+    from debezium_spark.lake import LakeTable
+    from debezium_spark.publisher import _version_records
+
+    root = str(tmp_path_factory.mktemp("pubpass") / "lake")
+    lt = LakeTable(spark, root, n_buckets=2)
+    lt.create()
+    lt.merge(
+        _lake_rows(spark, [(f"r{i % 2}", f"p{i}", "c", "py", "x", "c", 100 + i)
+                           for i in range(8)]),
+        1,
+    )
+    lt.merge(
+        _lake_rows(spark, [("r1", "p1", "c", "py", "upd", "u", 900),
+                           ("r0", "p2", "c", "py", "", "d", 901)]),
+        2,
+    )
+    records = _version_records(lt, lt.current_version(), True)
+    plan = plan_of(records)
+    assert n_scans(plan) == 2
+    assert n_exchanges(plan) == 2
+    rows = records.collect()
+    tombs = [r for r in rows if r["value_json"] is None]
+    assert len(rows) == 3 and len(tombs) == 1
+    assert tombs[0]["offset"] == 102 + 1  # the deleted row's pre-image LSN + 1

@@ -262,3 +262,31 @@ def test_any_batch_partition_and_order_converges(spark, evs, rnd):
     }
     want = {k: v for k, v in expected.items()}
     assert got == want
+
+
+def test_lake_written_without_retention_reads_live_when_reopened_retaining(
+    spark, tmp_root
+):
+    """Files written by a non-retaining merge have no ``_deleted``
+    column. Reopened with retention on, every row of them reads live
+    (``_deleted`` false) to the merge reader and to consumers, and the
+    next retaining merge keeps its delete as a tombstone."""
+    root = os.path.join(tmp_root, "reopen")
+    plain = _seed(spark, root, False)
+    plain.merge(_ch(spark, [_row(3, "d", 400, "del")]), 2)
+    expected = {(f"r{k % 4}", f"p{k:03d}") for k in range(8) if k != 3}
+
+    lt = LakeTable(spark, root, n_buckets=4, retain_tombstones=True)
+    sys_rows = lt.read_state(logical=False, with_sys=True).collect()
+    assert {(r["repo"], r["path"]) for r in sys_rows} == expected
+    assert all(r["_deleted"] is False for r in sys_rows)
+    assert _live_keys(lt) == expected
+
+    lt.merge(_ch(spark, [_row(5, "d", 500, "del")]), 3)
+    assert _live_keys(lt) == expected - {("r1", "p005")}
+    dead = {
+        (r["repo"], r["path"])
+        for r in lt.read_state(logical=False, with_sys=True).collect()
+        if r["_deleted"]
+    }
+    assert dead == {("r1", "p005")}
