@@ -739,9 +739,11 @@ class LakeTable:
             "metrics": {**(metrics or {}), "changes": n_changes},
             "ts": time.time(),
         }
-        self._write_manifest(manifest)
+        # lineage first: until the manifest commits it, :meth:`lineage`
+        # hides the file, and a rerun of the batch rewrites it
         if lineage_rows:
             self._append_lineage(batch_id, lineage_rows, phase)
+        self._write_manifest(manifest)
         return {"skipped": False, "version": new_version, "batch_id": batch_id}
 
     # perfbench/trace.py looks this name up; re-point the trace, then delete
@@ -796,9 +798,19 @@ class LakeTable:
         os.rename(tmp, path)
 
     def lineage(self) -> list[dict]:
+        """Lineage rows of the committed batches. A batch's file is
+        written just before its manifest, so a file whose batch id is
+        past its phase's committed fence belongs to a batch that
+        crashed before its commit; it is not reported, and the batch's
+        rerun rewrites it."""
+        fences = self.manifest().get("last_batch_ids", {})
         rows = []
         for n in sorted(os.listdir(self._lineage_dir)):
-            if n.endswith(".json"):
-                with open(os.path.join(self._lineage_dir, n)) as f:
-                    rows.extend(json.loads(line) for line in f if line.strip())
+            if not n.endswith(".json"):
+                continue
+            phase, batch_id = n[: -len(".json")].rsplit("_", 1)
+            if int(batch_id) > int(fences.get(phase, -1)):
+                continue
+            with open(os.path.join(self._lineage_dir, n)) as f:
+                rows.extend(json.loads(line) for line in f if line.strip())
         return rows
