@@ -59,16 +59,35 @@ def changelog_absent(path: str) -> bool:
     return True
 
 
-def lsn_bounds(spark: SparkSession, path: str) -> tuple[int, int] | None:
-    """(min, max) LSN of the log, or ``None`` for a log that does not
-    exist yet or holds zero events — a streaming-tail deployment starts
-    consuming before the first segment lands, and the engine must treat
-    that as a clean no-op rather than crash on ``int(None)``."""
+def changelog_schema(spark: SparkSession, path: str) -> str | None:
+    """The log's schema as DDL, read from its parquet footers (one
+    Spark job), or ``None`` for a log that does not exist yet."""
     from pyspark.errors import AnalysisException
 
     try:
+        return spark.read.parquet(path).schema.toDDL()
+    except AnalysisException:
+        if changelog_absent(path):
+            return None
+        raise
+
+
+def lsn_bounds(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> tuple[int, int] | None:
+    """(min, max) LSN of the log, or ``None`` for a log that does not
+    exist yet or holds zero events — a streaming-tail deployment starts
+    consuming before the first segment lands, and the engine must treat
+    that as a clean no-op rather than crash on ``int(None)``.
+
+    ``schema``: the log's schema when the caller already resolved it
+    (see :func:`changelog_schema`); without it the footers are read."""
+    from pyspark.errors import AnalysisException
+
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
         row = (
-            spark.read.parquet(path)
+            reader.parquet(path)
             .agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi"))
             .collect()[0]
         )

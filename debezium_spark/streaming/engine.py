@@ -46,6 +46,7 @@ from debezium_spark.operators.transforms import (
 )
 from debezium_spark.schema_evolution import SchemaTracker
 from debezium_spark.sources.changelog import (
+    changelog_schema,
     lsn_bounds,
     read_changelog_range,
     stream_changelog,
@@ -780,8 +781,14 @@ class Engine:
         commit policy exposes (EmbeddedEngine.java:815-836)."""
         if self.cfg.snapshot_mode == "initial_only":
             return []
-        self._recover_source_signals()
-        bounds = lsn_bounds(self.spark, self.cfg.changelog_path)
+        # one footer read per call, not per batch: signal recovery, the
+        # bounds job and every window of the log read with the schema
+        # resolved here (as DDL, which the reader takes in one round trip)
+        log_schema = changelog_schema(self.spark, self.cfg.changelog_path)
+        if log_schema is None:
+            return []  # no log yet (see below)
+        self._recover_source_signals(log_schema)
+        bounds = lsn_bounds(self.spark, self.cfg.changelog_path, log_schema)
         if bounds is None:
             # empty / not-yet-written log: nothing to replay (clean
             # no-op — the WAL tail starting before the first segment)
@@ -801,10 +808,6 @@ class Engine:
             else lo
         )
         span = self.cfg.batch_lsn_span
-        # one footer read per call, not per batch: every window of the
-        # log is read with the schema resolved here (as DDL, which the
-        # reader takes in one round trip)
-        log_schema = self.spark.read.parquet(self.cfg.changelog_path).schema.toDDL()
         results = []
         store = None
         if self.cfg.offset_store_path:
@@ -1352,7 +1355,7 @@ class Engine:
                 stacklevel=2,
             )
 
-    def _recover_source_signals(self) -> list[dict]:
+    def _recover_source_signals(self, log_schema: str | None = None) -> list[dict]:
         """Re-fire delivered-but-unprocessed SOURCE-channel signals at
         stream start — the crash window where a batch's merge committed
         but a deferred signal action (e.g. its execute-snapshot) did
@@ -1364,18 +1367,16 @@ class Engine:
         which of those completed. One column-pruned (op='m') scan.
 
         Signal rows ABOVE the frontier are left alone — their own batch
-        delivers them at their LSN position."""
-        from pyspark.errors import AnalysisException
-
+        delivers them at their LSN position. ``log_schema``: the log's
+        schema when the caller already resolved it."""
         from debezium_spark.signals import parse_source_signal
-        from debezium_spark.sources.changelog import changelog_absent
 
-        try:
-            df = self.spark.read.parquet(self.cfg.changelog_path)
-        except AnalysisException:
-            if changelog_absent(self.cfg.changelog_path):
-                return []
-            raise
+        log_schema = log_schema or changelog_schema(
+            self.spark, self.cfg.changelog_path
+        )
+        if log_schema is None:
+            return []
+        df = self.spark.read.schema(log_schema).parquet(self.cfg.changelog_path)
         if "message" not in df.columns:
             return []
         rows = (

@@ -792,3 +792,42 @@ def test_publish_is_one_pass_over_the_feed(spark, tmp_path_factory):
     tombs = [r for r in rows if r["value_json"] is None]
     assert len(rows) == 3 and len(tombs) == 1
     assert tombs[0]["offset"] == 102 + 1  # the deleted row's pre-image LSN + 1
+
+
+def test_stream_setup_reads_the_log_footers_once(spark, tmp_path_factory):
+    """``Engine.stream``'s set-up over a fully applied log reads the
+    log's parquet footers in one job: signal recovery, the LSN-bounds
+    job and every window read reuse the resolved schema."""
+    from debezium_spark.streaming.engine import Engine, EngineConfig
+
+    root = tmp_path_factory.mktemp("streamsetup")
+    log = str(root / "log")
+    gen_change_log(spark, 2, 10, n_events=200).write.parquet(log)
+    engine = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=log,
+            lake_root=str(root / "lake"),
+            snapshot_mode="never",
+            batch_lsn_span=1000,
+            n_buckets=4,
+        ),
+    )
+    assert engine.stream()  # applies the log
+
+    sc = spark.sparkContext
+    group = "stream-setup-probe"
+    sc.setJobGroup(group, "stream() over an applied log")
+    try:
+        assert engine.stream() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(s).name
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    # a footer read is a one-stage job named after the parquet reader
+    assert sum(name.startswith("parquet at ") for name in stages) == 1
