@@ -1,16 +1,23 @@
-"""Bucketed copy-on-write lake table with manifest commits — the MERGE
-INTO sink.
+"""Bucketed lake table with manifest commits — the MERGE INTO sink.
 
 Stands in for an Iceberg table (Iceberg jars aren't in this sandbox;
 the layout below is deliberately Iceberg-shaped so the production path
 is a drop-in ``MERGE INTO``):
 
-- data files live under ``data/v{N}/bucket={b}/``, hash-bucketed on the
+- base files live under ``data/v{N}/bucket={b}/``, hash-bucketed on the
   key ``(repo, path)`` — the analogue of Iceberg's bucket partition
   transform. A merge (:meth:`LakeTable.merge`, a merge-as-compaction
-  of state and change rows) only rewrites **touched buckets**; untouched
+  of state and change rows) only writes **touched buckets**; untouched
   buckets are carried forward by reference in the manifest, so merge
-  cost scales with the change set, not the table (copy-on-write).
+  cost scales with the change set, not the table.
+- **merge-on-read deltas** (Iceberg v2 delete files / Delta deletion
+  vectors): a bucket that a batch changes sparsely is not rewritten.
+  The batch's elected rows of all such buckets go into ONE delta file,
+  ``data/v{N}/delta/``, and each of those buckets' manifest entries
+  lists it under ``deltas``; reads combine a bucket's base with its
+  deltas (:func:`~debezium_spark.operators.compaction.elect_sources`).
+  A bucket is folded back into a new base (copy-on-write) when a batch
+  is dense in it or once the table holds ``MAX_DELTAS`` delta files.
 - a numbered JSON manifest per commit under ``_commits/`` records the
   live file set, the field-id table schema (see
   :mod:`debezium_spark.schema_evolution`), cumulative per-partition
@@ -24,7 +31,8 @@ is a drop-in ``MERGE INTO``):
 - per-batch lineage rows under ``_lineage/`` (events applied, max LSN
   per source partition — the analogue of Debezium's
   SnapshotMeter/StreamingMeter JMX metrics,
-  ``pipeline/meters/StreamingMeter.java:30-66``).
+  ``pipeline/meters/StreamingMeter.java:30-66``), written just before
+  the batch's manifest and reported once the manifest commits.
 """
 
 from __future__ import annotations
@@ -37,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.expr_cache import built_once, columns_key
-from debezium_spark.operators.compaction import compact
+from debezium_spark.operators.compaction import compact, elect_sources
 from debezium_spark.schema_evolution import TableSchema
 
 
@@ -108,6 +116,65 @@ def _state_projection(
     # are just garbage)
     keep = None if with_sys and retain_tombstones else ~dead
     return read_ddl, keep, project
+
+
+@built_once
+def _merged_output(
+    cols_json: str, logical: bool, with_sys: bool, retain_tombstones: bool
+) -> tuple:
+    """How :meth:`LakeTable.read_state` presents the election of a
+    merge-on-read bucket (physical columns, ``_lsn`` and, under
+    retention, ``_deleted``): ``(row filter or None, projection)``,
+    the same contract as :func:`_state_projection`."""
+    project = [
+        F.col(c["physical"]).alias(c["name"] if logical else c["physical"])
+        for c in json.loads(cols_json)
+    ]
+    if with_sys:
+        project.append(F.col("_lsn"))
+        if retain_tombstones:
+            project.append(F.col("_deleted"))
+    keep = ~F.col("_deleted") if retain_tombstones and not with_sys else None
+    return keep, project
+
+
+# Merge-on-read fold rule, from a sweep on the 4-core benchmark host
+# (see CHANGES.md). A bucket in which a batch changes at least
+# FOLD_MIN_KEYS keys is rewritten (copy-on-write); a sparser one gets
+# the batch's delta file. Once the table holds MAX_DELTAS delta files,
+# the next merge rewrites every bucket that lists one. Either constant
+# at 0 is pure copy-on-write.
+FOLD_MIN_KEYS = 8
+MAX_DELTAS = 8
+
+
+def _fold_plan(
+    files: dict, keys_in: dict[int, int], truncate: bool
+) -> tuple[list[int], list[int]]:
+    """Split a batch's touched buckets (``keys_in``: changed keys per
+    bucket) into ``(rewrite, delta)`` under the fold rule. A TRUNCATE
+    rewrites every live bucket; a bucket with no base file is always
+    written as a base."""
+    if truncate:
+        return sorted(set(keys_in) | {int(b) for b in files}), []
+    listed = {d["path"] for e in files.values() for d in e.get("deltas", ())}
+    if len(listed) >= MAX_DELTAS:
+        folded = {int(b) for b, e in files.items() if e.get("deltas")}
+        return sorted(set(keys_in) | folded), []
+    rewrite = sorted(
+        b for b, n in keys_in.items() if n >= FOLD_MIN_KEYS or str(b) not in files
+    )
+    return rewrite, sorted(set(keys_in) - set(rewrite))
+
+
+def _is_data_dir(name: str) -> bool:
+    """A bucket's base directory or a batch's delta directory."""
+    return name.startswith("bucket=") or name == "delta"
+
+
+def _bucket_in(buckets: list[int]) -> str:
+    """A ``bucket IN (...)`` row filter (SQL text: one round trip)."""
+    return f"bucket IN ({', '.join(map(str, buckets))})"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -240,20 +307,30 @@ class LakeTable:
         includes the hidden ``_lsn`` column (the LSN that wrote each
         row — the merge guard).
 
+        A bucket with no deltas is a plain scan of its base file. A
+        bucket that lists deltas is read merge-on-read: its base and
+        its deltas' rows are combined by
+        :func:`~debezium_spark.operators.compaction.elect_sources`, which
+        equals applying the deltas one by one, in commit order, with
+        the merge's rule (a row is dropped when a later delta deletes
+        its key at a higher LSN; the highest LSN wins, ties going to
+        the earlier source; a delete is kept as a tombstone only in a
+        retaining lake).
+
         ``version`` pins a historical manifest — TIME TRAVEL, the
         Iceberg ``VERSION AS OF`` read: every commit's manifest is an
         immutable snapshot whose file entries point at the exact data
         files that were live then (untouched buckets keep their older
-        ``data/v{k}`` paths), so a pinned read reproduces the table
-        byte-for-byte as of that commit. Raises ``FileNotFoundError``
-        if the version has been expired (:meth:`expire_snapshots`)."""
+        ``data/v{k}`` paths and deltas), so a pinned read reproduces the
+        table as of that commit. Raises ``FileNotFoundError`` if the
+        version has been expired (:meth:`expire_snapshots`)."""
         man = self.manifest(version)
         schema = self.table_schema(version)
-        entries = [
-            e
+        entries = {
+            int(b): e
             for b, e in man["files"].items()
             if buckets is None or int(b) in buckets
-        ]
+        }
         sys_cols = [("_lsn", "bigint")] if with_sys else []
         if with_sys and self.retain_tombstones:
             sys_cols.append(("_deleted", "boolean"))
@@ -266,29 +343,137 @@ class LakeTable:
                 + [f"`{n}` {t}" for n, t in sys_cols]
             )
             return self.spark.createDataFrame([], ddl)
+        if version is not None:
+            # an expired manifest can survive as a schema source while
+            # its data dirs are gone: fail eagerly (O(entries) stat
+            # calls, metadata scale) instead of mid-job
+            for e in entries.values():
+                for path in (e["path"], *(d["path"] for d in e.get("deltas", ()))):
+                    if not os.path.isdir(os.path.join(self.root, path)):
+                        raise FileNotFoundError(
+                            f"version {man['version']} data expired: {path}"
+                        )
 
-        # one scan per physical file schema: every file is read with the
-        # schema of the manifest that wrote it, so no footer is inferred
+        cur = columns_key(schema.columns)
+        plain = [e for e in entries.values() if not e.get("deltas")]
+        merged = {b: e for b, e in entries.items() if e.get("deltas")}
+        parts = []
+        if plain:
+            parts.extend(
+                self._scan(plain, cur, logical, with_sys, self.retain_tombstones)
+            )
+        if merged:
+            parts.append(self._read_merged(merged, cur, logical, with_sys))
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def _scan(
+        self,
+        entries: list[dict],
+        cur: str,
+        logical: bool,
+        with_sys: bool,
+        retain_tombstones: bool,
+    ) -> list[DataFrame]:
+        """The base files of ``entries`` as the table schema ``cur``:
+        one scan per physical file schema, every file read with the
+        schema of the manifest that wrote it, so no footer is
+        inferred."""
         by_schema: dict[tuple, list[str]] = {}
         for e in entries:
             written = self.manifest(e["version"])["schema"]
             by_schema.setdefault(
                 tuple((c["physical"], c["type"]) for c in written), []
             ).append(os.path.join(self.root, e["path"]))
-        cur = columns_key(schema.columns)
         parts = []
         for file_cols, paths in by_schema.items():
             read_ddl, keep, project = _state_projection(
-                file_cols, cur, logical, with_sys, self.retain_tombstones
+                file_cols, cur, logical, with_sys, retain_tombstones
             )
             df = self.spark.read.schema(read_ddl).parquet(*paths)
             if keep is not None:
                 df = df.filter(keep)
             parts.append(df.select(*project))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return parts
+
+    def _read_merged(
+        self, entries: dict[int, dict], cur: str, logical: bool, with_sys: bool
+    ) -> DataFrame:
+        """Buckets that list deltas: their base files and the rows of
+        their deltas, combined by :func:`elect_sources` (merge-on-read).
+        Sources are ordered by the version that wrote them: a bucket's
+        base predates every delta it lists. Each delta file is read
+        once, for the requested buckets that list it.
+
+        A source's deletes stand as tombstones only if its merge
+        retained them, and only until a merge that did not retain them
+        touched the bucket: copy-on-write under such a merge drops every
+        tombstone of the buckets it rewrites."""
+
+        def retained(version: int) -> bool:
+            return self.manifest(version)["retain_tombstones"]
+
+        cleared = {
+            b: max(
+                (d["version"] for d in e["deltas"] if not retained(d["version"])),
+                default=0,
+            )
+            for b, e in entries.items()
+        }
+        sources = []
+        for kept in (True, False):
+            group = [e for b, e in entries.items() if (cleared[b] == 0) is kept]
+            if group:
+                sources.extend(
+                    df.select(
+                        "*", F.lit(0).alias("_src"), F.lit(kept).alias("_tombstones")
+                    )
+                    for df in self._scan(group, cur, False, True, True)
+                )
+        readers: dict[str, list] = {}
+        for b, e in entries.items():
+            for d in e["deltas"]:
+                readers.setdefault(d["path"], [d["version"], []])[1].append(b)
+        for path, (version, bucket_ids) in sorted(readers.items()):
+            writer = self.manifest(version)
+            file_cols = tuple((c["physical"], c["type"]) for c in writer["schema"])
+            read_ddl, _, project = _state_projection(
+                file_cols, cur, False, True, True
+            )
+            # a delta always holds its deletes (they must drop earlier
+            # rows); they are tombstones only as said above
+            kept = (
+                [b for b in bucket_ids if version > cleared[b]]
+                if retained(version)
+                else []
+            )
+            tombstones = (
+                F.lit(len(kept) == len(bucket_ids))
+                if len(kept) in (0, len(bucket_ids))
+                else F.expr(_bucket_in(sorted(kept)))
+            )
+            sources.append(
+                self.spark.read.schema(read_ddl + ", `bucket` int")
+                .parquet(os.path.join(self.root, path))
+                .filter(_bucket_in(sorted(bucket_ids)))
+                .select(
+                    *project,
+                    F.lit(version).alias("_src"),
+                    tombstones.alias("_tombstones"),
+                )
+            )
+        rows = sources[0]
+        for df in sources[1:]:
+            rows = rows.unionByName(df)
+        keep, project = _merged_output(
+            cur, logical, with_sys, self.retain_tombstones
+        )
+        won = elect_sources(rows, self.retain_tombstones)
+        if keep is not None:
+            won = won.filter(keep)
+        return won.select(*project)
 
     def versions(self) -> list[int]:
         """All commit versions currently on disk, ascending."""
@@ -319,18 +504,18 @@ class LakeTable:
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Iceberg-style snapshot expiry (``expireSnapshots`` +
         orphan-file removal): retain the newest ``keep_last`` commits,
-        delete every data directory no retained manifest references,
-        then drop the expired manifest JSONs.
+        delete every base or delta directory no retained manifest
+        references, then drop the expired manifest JSONs.
 
-        Without this, the copy-on-write merge grows storage with every
+        Without this, the merge grows storage with every
         commit forever — at a 100 TB table with per-minute batches
         that is the difference between ~1× and ~1440× daily storage.
 
         Correctness under crash at any point:
 
-        * data dirs are deleted only if NO retained manifest references
-          them, so retained reads (current + time travel within the
-          window) never lose a file;
+        * base and delta dirs are deleted only if NO retained manifest
+          references them, so retained reads (current + time travel
+          within the window) never lose a file;
         * manifest JSONs are kept while EITHER retained or still
           referenced as a file-schema source by a retained manifest's
           entries (untouched buckets keep old ``data/v{k}`` paths whose
@@ -353,8 +538,9 @@ class LakeTable:
         referenced_dirs: set[str] = set()
         for v in retained:
             for e in self.manifest(v)["files"].values():
-                needed.add(int(e["version"]))
-                referenced_dirs.add(e["path"])
+                for f in (e, *e.get("deltas", ())):
+                    needed.add(int(f["version"]))
+                    referenced_dirs.add(f["path"])
 
         removed_dirs = 0
         data_root = os.path.join(self.root, "data")
@@ -364,18 +550,15 @@ class LakeTable:
                 if not os.path.isdir(vpath):
                     continue
                 for bdir in sorted(os.listdir(vpath)):
-                    rel = f"data/{vdir}/{bdir}"
                     if (
-                        bdir.startswith("bucket=")
-                        and rel not in referenced_dirs
+                        _is_data_dir(bdir)
+                        and f"data/{vdir}/{bdir}" not in referenced_dirs
                     ):
                         shutil.rmtree(os.path.join(vpath, bdir))
                         removed_dirs += 1
-                # once no bucket dir survives, drop the whole version
-                # dir (removes Hadoop _SUCCESS/.crc markers too)
-                if not any(
-                    n.startswith("bucket=") for n in os.listdir(vpath)
-                ):
+                # once no bucket or delta dir survives, drop the whole
+                # version dir (removes Hadoop _SUCCESS/.crc markers too)
+                if not any(map(_is_data_dir, os.listdir(vpath))):
                     shutil.rmtree(vpath)
 
         removed_manifests = 0
@@ -395,8 +578,9 @@ class LakeTable:
         Kafka's ``delete.retention.ms`` compaction analogue. Safe once
         every consumer/redelivery frontier has passed ``below_lsn``:
         an event older than that can no longer arrive, so the
-        tombstone has nothing left to guard. One COW commit rewriting
-        only the buckets that actually hold purgeable tombstones.
+        tombstone has nothing left to guard. One commit rewriting only
+        the buckets that actually hold purgeable tombstones (their
+        deltas folded into the new base).
         """
         if not self.retain_tombstones:
             raise ValueError("lake does not retain tombstones")
@@ -509,17 +693,17 @@ class LakeTable:
     def table_changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Incremental read of the committed NET changes between two
         versions — the Delta CDF / Iceberg incremental-scan analogue,
-        computed on read from the bucket-COW manifests (no stored
-        change files). Downstream consumers poll this instead of
+        computed on read from the bucket manifests (no stored change
+        files). Downstream consumers poll this instead of
         re-diffing full table snapshots; it is the stream the
         reference engine itself would publish onward (SURVEY §2.4 —
         Debezium's emitted topic, re-derived here from any two lake
         commits).
 
         Scale: bucket pruning is METADATA-ONLY — a bucket is read (in
-        both versions) iff its file entry differs between the two
-        manifests, so at 100 TB with sparse batches the scan touches
-        only rewritten buckets, never the table. Within those buckets
+        both versions) iff its file entry (base or deltas) differs
+        between the two manifests, so at 100 TB with sparse batches
+        the scan touches only changed buckets, never the table. Within those buckets
         the diff joins the two pinned reads per key and keeps rows
         whose guarding ``_lsn`` changed: carried-over neighbours of a
         rewritten bucket (same key, same ``_lsn``) are filtered out,
@@ -550,18 +734,6 @@ class LakeTable:
             for b in set(m_from["files"]) | set(m_to["files"])
             if m_from["files"].get(b) != m_to["files"].get(b)
         )
-        # an expired manifest can survive as a schema source while its
-        # data dirs are gone — fail eagerly (O(touched) stat calls,
-        # metadata scale) instead of mid-job
-        for m in (m_from, m_to):
-            for b in touched:
-                e = m["files"].get(str(b))
-                if e is not None and not os.path.isdir(
-                    os.path.join(self.root, e["path"])
-                ):
-                    raise FileNotFoundError(
-                        f"version {m['version']} data expired: {e['path']}"
-                    )
         schema = self.table_schema(v_to)
         non_key = [
             c for c in schema.columns if c["name"] not in ("repo", "path")
@@ -643,17 +815,30 @@ class LakeTable:
               WHEN MATCHED AND c.lsn > t._lsn THEN UPDATE SET *
               WHEN NOT MATCHED AND op<>'d' THEN INSERT *
 
-        computed in one plan: the touched buckets' state is read, unioned
-        with the change rows, and :func:`compact` elects one winner per
-        key; only those buckets are rewritten (copy-on-write), the rest
-        are carried forward by reference. A batch touching every bucket
-        is a full rewrite.
+        One ≤n_buckets-row job finds the touched buckets and the keys
+        the batch changes in each, then the fold rule splits them:
+
+        - a bucket in which the batch changes at least ``FOLD_MIN_KEYS``
+          keys, or that has no base file yet, is rewritten
+          (copy-on-write): its state (base + deltas) is read, unioned
+          with the change rows, and :func:`compact` elects one winner
+          per key;
+        - every other touched bucket is left as it is: the batch's rows
+          for them are elected alone (deletes kept as ``_deleted``
+          rows, whatever the retention) and written once, as one delta
+          file sorted by bucket, which each of their manifest entries
+          appends to its ``deltas``. No state is read;
+        - once the table holds ``MAX_DELTAS`` delta files, the merge
+          rewrites every bucket that lists one, with the batch's own.
+
+        Untouched buckets are carried forward by reference. Reads see
+        the same table either way (:meth:`read_state`).
 
         ``truncate_lsn``: a TRUNCATE event at that LSN was seen in the
         batch (data/Envelope.java:319 — no image; table effect = delete
         every row written below it). State rows with
         ``_lsn < truncate_lsn`` are wiped; the caller pre-filters change
-        rows to ``lsn > truncate_lsn``. Every live bucket becomes touched.
+        rows to ``lsn > truncate_lsn``. Every live bucket is rewritten.
 
         ``frontier_fn`` (the engine's offset/lineage callback) returns
         ``(offsets, lineage_rows, n_events, counters)``; it is called
@@ -682,26 +867,25 @@ class LakeTable:
         # scan and transforms.
         changes.persist()
         rows = changes.groupBy("bucket").agg(_distinct_keys()).collect()
-        touched = sorted(r["bucket"] for r in rows)
-        n_changes = int(sum(r["keys"] for r in rows))
-        if truncate_lsn is not None:
-            # every live bucket must be rewritten (or dropped)
-            touched = sorted(set(touched) | {int(b) for b in man["files"]})
+        keys_in = {r["bucket"]: r["keys"] for r in rows}
+        n_changes = int(sum(keys_in.values()))
         offsets, lineage_rows = {}, None
         if frontier_fn is not None:
             offsets, lineage_rows, n_events, counters = frontier_fn()
             metrics = {**(metrics or {}), "events": n_events, **counters}
         files = dict(man["files"])
-        if touched:
-            old = self.read_state(buckets=touched, logical=False, with_sys=True)
+        rewrite, delta = _fold_plan(files, keys_in, truncate_lsn is not None)
+        out_dir = os.path.join(self.root, f"data/v{new_version}")
+        if rewrite:
+            cow = changes if not delta else changes.filter(_bucket_in(rewrite))
+            old = self.read_state(buckets=rewrite, logical=False, with_sys=True)
             if truncate_lsn is not None:
                 old = old.filter(F.col("_lsn") > truncate_lsn)
             new_state = compact(
-                changes.drop("bucket"), old, self.retain_tombstones
+                cow.drop("bucket"), old, self.retain_tombstones
             ).withColumn("bucket", self._bucket_col())
-            out_dir = os.path.join(self.root, f"data/v{new_version}")
             (
-                new_state.repartition(len(touched), "bucket")
+                new_state.repartition(len(rewrite), "bucket")
                 .write.partitionBy("bucket")
                 .mode("overwrite")
                 .parquet(out_dir)
@@ -711,7 +895,7 @@ class LakeTable:
                 for n in os.listdir(out_dir)
                 if n.startswith("bucket=")
             }
-            for b in touched:
+            for b in rewrite:
                 if b in written:
                     files[str(b)] = {
                         "path": f"data/v{new_version}/bucket={b}",
@@ -720,6 +904,21 @@ class LakeTable:
                 else:
                     # bucket emptied out entirely (all keys deleted)
                     files.pop(str(b), None)
+        if delta:
+            # after the rewrite: its overwrite clears data/v{N}
+            sparse = changes if not rewrite else changes.filter(_bucket_in(delta))
+            (
+                compact(sparse.drop("bucket"), None, retain_tombstones=True)
+                .withColumn("bucket", self._bucket_col())
+                .coalesce(1)
+                .sortWithinPartitions("bucket")
+                .write.mode("overwrite")
+                .parquet(os.path.join(out_dir, "delta"))
+            )
+            ref = {"path": f"data/v{new_version}/delta", "version": new_version}
+            for b in delta:
+                e = files[str(b)]
+                files[str(b)] = {**e, "deltas": [*e.get("deltas", ()), ref]}
         changes.unpersist()
 
         new_offsets = dict(man["offsets"])
@@ -737,6 +936,7 @@ class LakeTable:
             "schema_version": schema.version,
             "offsets": new_offsets,
             "metrics": {**(metrics or {}), "changes": n_changes},
+            "retain_tombstones": self.retain_tombstones,
             "ts": time.time(),
         }
         # lineage first: until the manifest commits it, :meth:`lineage`

@@ -20,7 +20,7 @@ exchange, so even a million-update key costs O(1) post-shuffle memory
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.expr_cache import built_once
@@ -67,6 +67,73 @@ def compact(
     if not retain_tombstones:
         won = won.filter(e["live"])
     return won.select(*e["output"])
+
+
+def elect_sources(rows: DataFrame, retain_tombstones: bool = False) -> DataFrame:
+    """The state that a base and its deltas stand for (merge-on-read).
+
+    ``rows``: ``repo``, ``path``, payload, ``_lsn``, ``_deleted``,
+    ``_src``, the source's position in commit order (the base first,
+    then the deltas), and ``_tombstones``, whether the merge that wrote
+    the source retained its deletes. A source holds at most one row per
+    key, as :func:`compact` leaves it. The result equals applying the
+    sources one by one with :func:`compact`'s rule:
+
+    - a row is dropped when a LATER source holds a delete of its key at
+      a higher LSN (without retention a delete removes the state, so a
+      late lower-LSN event after it revives the key, exactly as a
+      merge would have);
+    - a delete is a candidate only if its source retained it and
+      ``retain_tombstones`` is set;
+    - the highest LSN wins, ties going to the earlier source (state
+      wins ties).
+
+    Output as :func:`compact`'s: ``repo``, ``path``, payload, ``_lsn``
+    and, with retention, ``_deleted``.
+    """
+    payload = tuple(
+        c
+        for c in rows.columns
+        if c not in (*KEY, "_lsn", "_deleted", "_src", "_tombstones")
+    )
+    e = _source_election(payload, retain_tombstones)
+    return (
+        rows.withColumn("_later_delete", e["later_delete"])
+        .filter(e["candidate"])
+        .groupBy(*e["key"])
+        .agg(e["winner"])
+        .select(*e["output"])
+    )
+
+
+@built_once
+def _source_election(payload: tuple[str, ...], retain_tombstones: bool) -> dict:
+    key = [F.col(k) for k in KEY]
+    later = (
+        Window.partitionBy(*key)
+        .orderBy(F.col("_src").desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    undropped = F.coalesce(F.col("_lsn") >= F.col("_later_delete"), F.lit(True))
+    live = ~F.col("_deleted")
+    if retain_tombstones:
+        live = live | F.col("_tombstones")
+    return {
+        "key": key,
+        # the highest delete LSN among the key's later sources
+        "later_delete": F.max(F.when(F.col("_deleted"), F.col("_lsn"))).over(later),
+        "candidate": undropped & live,
+        "winner": F.max_by(
+            F.struct(*payload, "_lsn", "_deleted"),
+            F.struct("_lsn", (-F.col("_src")).alias("_first")),
+        ).alias("w"),
+        "output": [
+            *key,
+            *[F.col(f"w.{p}").alias(p) for p in payload],
+            F.col("w._lsn").alias("_lsn"),
+            *([F.col("w._deleted").alias("_deleted")] if retain_tombstones else []),
+        ],
+    }
 
 
 @built_once

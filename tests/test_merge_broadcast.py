@@ -99,10 +99,16 @@ def test_merge_elects_within_a_batch(spark, tmp_root):
     assert lt.manifest()["metrics"]["changes"] == 3
 
 
-def test_sparse_merge_scans_only_touched_buckets(spark, tmp_root):
+def test_sparse_merge_scans_only_touched_buckets(spark, tmp_root, monkeypatch):
     """Plan pin: a batch touching one bucket reads only that bucket's
     directory, rewrites only it, and carries every other bucket
     forward by reference."""
+    # pins the copy-on-write layout: fold every bucket (both fold
+    # constants at 0 make every merge copy-on-write)
+    from debezium_spark import lake as lake_mod
+
+    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
+    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
     lt = _seed(spark, os.path.join(tmp_root, "prune"))
     before = lt.manifest()["files"]
     scans = []

@@ -75,6 +75,11 @@ def _crash_before_fold_manifest(lake, manifest):
 CRASH_POINTS = {
     "after_data_write_before_manifest": (_crash_before_manifest, False, {}),
     "after_manifest_before_lineage": (_crash_before_manifest, True, {}),
+    "after_fold_rewrite_before_manifest": (
+        _crash_before_fold_manifest,
+        False,
+        {"FOLD_MIN_KEYS": 10**9, "MAX_DELTAS": 2},
+    ),
 }
 
 

@@ -719,11 +719,19 @@ def _lake_rows(spark, rows):
     return spark.createDataFrame(rows, ddl)
 
 
-def test_read_state_is_schema_bound_one_scan_no_jobs(spark, tmp_path_factory):
+def test_read_state_is_schema_bound_one_scan_no_jobs(
+    spark, tmp_path_factory, monkeypatch
+):
     """Touched buckets whose files come from three data versions of one
     schema: building the read launches no Spark job (no parquet footer
     is inferred — files are read with their manifest's schema) and
     plans one file scan, not one per data version."""
+    # pins the copy-on-write layout: fold every bucket (both fold
+    # constants at 0 make every merge copy-on-write)
+    from debezium_spark import lake as lake_mod
+
+    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
+    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
     from debezium_spark.lake import LakeTable
 
     root = str(tmp_path_factory.mktemp("boundread") / "lake")
@@ -763,11 +771,17 @@ def test_read_state_is_schema_bound_one_scan_no_jobs(spark, tmp_path_factory):
     }
 
 
-def test_publish_is_one_pass_over_the_feed(spark, tmp_path_factory):
+def test_publish_is_one_pass_over_the_feed(spark, tmp_path_factory, monkeypatch):
     """A published version's records, a delete's tombstone companion
     included, come from ONE pass over the version's change feed: the
     feed's two pinned reads (two scans) and its diff join's two
     exchanges — not a second, filtered copy of the feed."""
+    # pins the copy-on-write layout: fold every bucket (both fold
+    # constants at 0 make every merge copy-on-write)
+    from debezium_spark import lake as lake_mod
+
+    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
+    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
     from debezium_spark.lake import LakeTable
     from debezium_spark.publisher import _version_records
 

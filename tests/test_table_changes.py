@@ -94,10 +94,16 @@ def test_carried_over_bucket_mates_not_reported(spark, tmp_root):
     assert set(feed) == {("r1", "p005")}
 
 
-def test_metadata_bucket_pruning(spark, tmp_root):
+def test_metadata_bucket_pruning(spark, tmp_root, monkeypatch):
     # the diff's scan must touch ONLY buckets whose manifest entry
     # changed — at scale this is what keeps a sparse-batch feed from
     # reading the whole table
+    # pins the copy-on-write layout: fold every bucket (both fold
+    # constants at 0 make every merge copy-on-write)
+    from debezium_spark import lake as lake_mod
+
+    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
+    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
     lt = _seed(spark, tmp_root + "/l", n=40)
     v1 = lt.manifest()["version"]
     lt.merge(_ch(spark, [_row(7, "u", 900, "touch")]), 2)
@@ -211,7 +217,13 @@ def test_feed_replay_reconstructs_state(spark, tmp_root):
     assert base == want
 
 
-def test_expired_version_raises(spark, tmp_root):
+def test_expired_version_raises(spark, tmp_root, monkeypatch):
+    # pins the copy-on-write layout: fold every bucket (both fold
+    # constants at 0 make every merge copy-on-write)
+    from debezium_spark import lake as lake_mod
+
+    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
+    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
     lt = _seed(spark, tmp_root + "/l")
     lt.merge(_ch(spark, [_row(0, "u", 500, "a")]), 2)
     lt.merge(_ch(spark, [_row(1, "u", 600, "b")]), 3)
