@@ -22,7 +22,8 @@ is a drop-in ``MERGE INTO``):
   live file set, the field-id table schema (see
   :mod:`debezium_spark.schema_evolution`), cumulative per-partition
   offsets, and ``last_batch_id``. Commit = write-temp + atomic rename —
-  the analogue of an Iceberg snapshot commit.
+  the analogue of an Iceberg snapshot commit. ``_expiry.json`` records
+  the oldest version that snapshot expiry retained.
 - **fencing**: batch ids are monotone; re-delivery of an
   already-committed batch (``foreachBatch`` crash-replay) is detected
   against ``last_batch_id`` and skipped — this upgrades the reference's
@@ -37,6 +38,7 @@ is a drop-in ``MERGE INTO``):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -177,6 +179,10 @@ def _bucket_in(buckets: list[int]) -> str:
     return f"bucket IN ({', '.join(map(str, buckets))})"
 
 
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this manifest version first (optimistic
     concurrency, Iceberg ``CommitFailedException`` analogue)."""
@@ -213,6 +219,10 @@ class LakeTable:
     @property
     def _lineage_dir(self) -> str:
         return os.path.join(self.root, "_lineage")
+
+    @property
+    def _expiry_path(self) -> str:
+        return os.path.join(self.root, "_expiry.json")
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self._commits_dir, f"{version:08d}.json")
@@ -323,7 +333,10 @@ class LakeTable:
         files that were live then (untouched buckets keep their older
         ``data/v{k}`` paths and deltas), so a pinned read reproduces the
         table as of that commit. Raises ``FileNotFoundError`` if the
-        version has been expired (:meth:`expire_snapshots`)."""
+        version has been expired (:meth:`expire_snapshots`), even when
+        its manifest and files survive as sources of retained versions."""
+        if version is not None and version < self._retained_from():
+            raise FileNotFoundError(f"version {version} has been expired")
         man = self.manifest(version)
         schema = self.table_schema(version)
         entries = {
@@ -343,17 +356,6 @@ class LakeTable:
                 + [f"`{n}` {t}" for n, t in sys_cols]
             )
             return self.spark.createDataFrame([], ddl)
-        if version is not None:
-            # an expired manifest can survive as a schema source while
-            # its data dirs are gone: fail eagerly (O(entries) stat
-            # calls, metadata scale) instead of mid-job
-            for e in entries.values():
-                for path in (e["path"], *(d["path"] for d in e.get("deltas", ()))):
-                    if not os.path.isdir(os.path.join(self.root, path)):
-                        raise FileNotFoundError(
-                            f"version {man['version']} data expired: {path}"
-                        )
-
         cur = columns_key(schema.columns)
         plain = [e for e in entries.values() if not e.get("deltas")]
         merged = {b: e for b, e in entries.items() if e.get("deltas")}
@@ -364,10 +366,7 @@ class LakeTable:
             )
         if merged:
             parts.append(self._read_merged(merged, cur, logical, with_sys))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     def _scan(
         self,
@@ -405,7 +404,8 @@ class LakeTable:
         their deltas, combined by :func:`elect_sources` (merge-on-read).
         Sources are ordered by the version that wrote them: a bucket's
         base predates every delta it lists. Each delta file is read
-        once, for the requested buckets that list it.
+        once, for the requested buckets that list it; only base rows of
+        keys that a delta holds enter the election.
 
         A source's deletes stand as tombstones only if its merge
         retained them, and only until a merge that did not retain them
@@ -422,11 +422,11 @@ class LakeTable:
             )
             for b, e in entries.items()
         }
-        sources = []
+        bases, deltas = [], []
         for kept in (True, False):
             group = [e for b, e in entries.items() if (cleared[b] == 0) is kept]
             if group:
-                sources.extend(
+                bases.extend(
                     df.select(
                         "*", F.lit(0).alias("_src"), F.lit(kept).alias("_tombstones")
                     )
@@ -454,7 +454,7 @@ class LakeTable:
                 if len(kept) in (0, len(bucket_ids))
                 else F.expr(_bucket_in(sorted(kept)))
             )
-            sources.append(
+            deltas.append(
                 self.spark.read.schema(read_ddl + ", `bucket` int")
                 .parquet(os.path.join(self.root, path))
                 .filter(_bucket_in(sorted(bucket_ids)))
@@ -464,24 +464,35 @@ class LakeTable:
                     tombstones.alias("_tombstones"),
                 )
             )
-        rows = sources[0]
-        for df in sources[1:]:
-            rows = rows.unionByName(df)
         keep, project = _merged_output(
             cur, logical, with_sys, self.retain_tombstones
         )
-        won = elect_sources(rows, self.retain_tombstones)
+        won = elect_sources(_union(bases), _union(deltas), self.retain_tombstones)
         if keep is not None:
             won = won.filter(keep)
         return won.select(*project)
 
-    def versions(self) -> list[int]:
-        """All commit versions currently on disk, ascending."""
+    def _on_disk(self) -> list[int]:
         return sorted(
             int(n.split(".")[0])
             for n in os.listdir(self._commits_dir)
             if n.endswith(".json")
         )
+
+    def versions(self) -> list[int]:
+        """The readable commit versions, ascending: every manifest on
+        disk that :meth:`expire_snapshots` has not expired."""
+        floor = self._retained_from()
+        return [v for v in self._on_disk() if v >= floor]
+
+    def _retained_from(self) -> int:
+        """The oldest version the last :meth:`expire_snapshots`
+        retained; 0 before any expiry."""
+        try:
+            with open(self._expiry_path) as f:
+                return int(json.load(f)["retained_from"])
+        except FileNotFoundError:
+            return 0
 
     def version_as_of(self, ts: float) -> int:
         """``TIMESTAMP AS OF``: the latest commit whose manifest
@@ -504,8 +515,11 @@ class LakeTable:
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Iceberg-style snapshot expiry (``expireSnapshots`` +
         orphan-file removal): retain the newest ``keep_last`` commits,
-        delete every base or delta directory no retained manifest
-        references, then drop the expired manifest JSONs.
+        record the oldest of them in ``_expiry.json`` beside
+        ``_commits/``, delete every base or delta directory no retained
+        manifest references, then drop the expired manifest JSONs.
+        Reads of a version below the record raise, whether or not its
+        files survive.
 
         Without this, the merge grows storage with every
         commit forever — at a 100 TB table with per-minute batches
@@ -513,6 +527,9 @@ class LakeTable:
 
         Correctness under crash at any point:
 
+        * the record is written (atomically) before anything is
+          deleted, so no read of an expired version can reach a
+          half-deleted file set;
         * base and delta dirs are deleted only if NO retained manifest
           references them, so retained reads (current + time travel
           within the window) never lose a file;
@@ -529,10 +546,13 @@ class LakeTable:
         """
         import shutil
 
-        all_versions = self.versions()
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        retained = set(all_versions[-keep_last:])
+        retained = set(self.versions()[-keep_last:])
+        tmp = self._expiry_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"retained_from": min(retained)}, f)
+        os.replace(tmp, self._expiry_path)
         # manifests needed as schema sources by retained file entries
         needed = set(retained)
         referenced_dirs: set[str] = set()
@@ -562,7 +582,7 @@ class LakeTable:
                     shutil.rmtree(vpath)
 
         removed_manifests = 0
-        for v in all_versions:
+        for v in self._on_disk():
             if v not in needed:
                 os.unlink(self._manifest_path(v))
                 self._manifest_cache.pop(v, None)

@@ -63,15 +63,16 @@ def _steps(draw):
     (so no two events of a key tie), drawn from one small range so
     late lower-LSN events after deletes are common; TRUNCATE, ADD
     COLUMN and reopening the lake with the other retention setting in
-    between."""
-    kinds = draw(
+    between. It opens with a one-event batch, which any fold rule with
+    ``FOLD_MIN_KEYS`` ≥ 2 writes as a delta."""
+    kinds = ["batch"] + draw(
         st.lists(
             st.sampled_from(["batch", "batch", "batch", "truncate", "add", "reopen"]),
-            min_size=2,
-            max_size=6,
+            min_size=1,
+            max_size=5,
         )
     )
-    sizes = [draw(st.integers(1, 5)) for _ in kinds]
+    sizes = [1] + [draw(st.integers(1, 5)) for _ in kinds[1:]]
     lsns = draw(
         st.lists(
             st.integers(N_KEYS + 1, 400),
@@ -139,7 +140,7 @@ def _run(spark, steps, retain, min_keys, max_deltas):
 @given(
     _steps(),
     st.booleans(),
-    st.integers(1, 4),
+    st.integers(2, 6),
     st.integers(1, 5),
     st.randoms(use_true_random=False),
 )
@@ -150,6 +151,9 @@ def test_any_fold_rule_reads_like_copy_on_write(
     cow = _run(spark, steps, retain, 0, 0)
     versions = cow.versions()
     assert mor.versions() == versions
+    assert any(
+        e.get("deltas") for v in versions for e in mor.manifest(v)["files"].values()
+    )
     assert _rows(mor.read_state()) == _rows(cow.read_state())
     assert _rows(mor.read_state(logical=False, with_sys=True)) == _rows(
         cow.read_state(logical=False, with_sys=True)
@@ -301,3 +305,45 @@ def test_expiry_keeps_referenced_deltas(spark, tmp_root):
     }
     assert len(listed) == 3
     assert all(os.path.isdir(os.path.join(lt.root, p)) for p in listed)
+
+
+def test_expired_version_raises_while_its_files_survive(spark, tmp_root):
+    """With deltas, a retained manifest keeps the base of an expired
+    version listed, so its files survive expiry; reading that version
+    or a change feed from it still raises."""
+    lt = _sparse_lake(spark, os.path.join(tmp_root, "l"))
+    v_seed = lt.current_version()
+    lt.merge(_changes(spark, [(1, "u", 901)], False), 2)
+    lt.merge(_changes(spark, [(2, "u", 902)], False), 3)
+    lt.expire_snapshots(keep_last=2)
+    base = lt.manifest()["files"]["0"]
+    assert base["version"] == v_seed
+    assert os.path.isdir(os.path.join(lt.root, base["path"]))
+    assert v_seed not in lt.versions()
+    for read in (
+        lambda: lt.read_state(version=v_seed),
+        lambda: lt.table_changes(v_seed),
+    ):
+        try:
+            read()
+            raise AssertionError("expired version still readable")
+        except FileNotFoundError:
+            pass
+    assert lt.read_state(version=v_seed + 1).count() == 40
+
+
+def test_merged_read_elects_only_keys_the_deltas_hold(spark, tmp_root):
+    """Plan pin: a read over buckets with deltas shuffles only the base
+    rows of keys that a delta holds (a broadcast semi join on the
+    deltas' keys); every other base row passes through a broadcast
+    anti join without an exchange."""
+    from test_plans import plan_of
+
+    lt = _sparse_lake(spark, os.path.join(tmp_root, "l"))
+    lt.merge(_changes(spark, [(1, "u", 900)], False), 2)
+    state = lt.read_state(logical=False, with_sys=True)
+    plan = plan_of(state)
+    assert "Join type: LeftAnti" in plan and "Join type: LeftSemi" in plan
+    assert "SortMergeJoin" not in plan
+    assert plan.count("Arguments: hashpartitioning") == 1
+    assert state.count() == 40

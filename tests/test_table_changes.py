@@ -217,13 +217,7 @@ def test_feed_replay_reconstructs_state(spark, tmp_root):
     assert base == want
 
 
-def test_expired_version_raises(spark, tmp_root, monkeypatch):
-    # pins the copy-on-write layout: fold every bucket (both fold
-    # constants at 0 make every merge copy-on-write)
-    from debezium_spark import lake as lake_mod
-
-    monkeypatch.setattr(lake_mod, "FOLD_MIN_KEYS", 0)
-    monkeypatch.setattr(lake_mod, "MAX_DELTAS", 0)
+def test_expired_version_raises(spark, tmp_root):
     lt = _seed(spark, tmp_root + "/l")
     lt.merge(_ch(spark, [_row(0, "u", 500, "a")]), 2)
     lt.merge(_ch(spark, [_row(1, "u", 600, "b")]), 3)
