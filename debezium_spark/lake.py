@@ -179,6 +179,16 @@ def _bucket_in(buckets: list[int]) -> str:
     return f"bucket IN ({', '.join(map(str, buckets))})"
 
 
+def _by_bucket(values: dict[int, int], default: str) -> str:
+    """SQL text mapping a row's ``bucket`` to ``values[bucket]`` and
+    every other bucket to ``default``: one branch per distinct value."""
+    groups: dict[int, list[int]] = {}
+    for b, v in sorted(values.items()):
+        groups.setdefault(v, []).append(b)
+    branches = " ".join(f"WHEN {_bucket_in(bs)} THEN {v}" for v, bs in groups.items())
+    return f"CASE {branches} ELSE {default} END" if branches else default
+
+
 def _union(parts: list[DataFrame]) -> DataFrame:
     return functools.reduce(DataFrame.unionByName, parts)
 
@@ -403,9 +413,9 @@ class LakeTable:
         """Buckets that list deltas: their base files and the rows of
         their deltas, combined by :func:`elect_sources` (merge-on-read).
         Sources are ordered by the version that wrote them: a bucket's
-        base predates every delta it lists. Each delta file is read
-        once, for the requested buckets that list it; only base rows of
-        keys that a delta holds enter the election.
+        base predates every delta it lists. The deltas are read in one
+        scan per writer schema, whose rows carry the ``_version`` that
+        wrote them.
 
         A source's deletes stand as tombstones only if its merge
         retained them, and only until a merge that did not retain them
@@ -422,7 +432,7 @@ class LakeTable:
             )
             for b, e in entries.items()
         }
-        bases, deltas = [], []
+        bases = []
         for kept in (True, False):
             group = [e for b, e in entries.items() if (cleared[b] == 0) is kept]
             if group:
@@ -432,42 +442,51 @@ class LakeTable:
                     )
                     for df in self._scan(group, cur, False, True, True)
                 )
-        readers: dict[str, list] = {}
-        for b, e in entries.items():
-            for d in e["deltas"]:
-                readers.setdefault(d["path"], [d["version"], []])[1].append(b)
-        for path, (version, bucket_ids) in sorted(readers.items()):
-            writer = self.manifest(version)
-            file_cols = tuple((c["physical"], c["type"]) for c in writer["schema"])
+        listed = {
+            d["path"]: d["version"] for e in entries.values() for d in e["deltas"]
+        }
+        # a bucket lists exactly the deltas that hold its rows and were
+        # written after its base, so a delta row counts iff its
+        # _version is above its bucket's base version
+        after_base = "_version > " + _by_bucket(
+            {b: e["version"] for b, e in entries.items()}, "NULL"
+        )
+        # a delta always holds its deletes (they must drop earlier
+        # rows); they are tombstones only as said above
+        not_retained = sorted({v for v in listed.values() if not retained(v)})
+        tombstones = (
+            F.expr(
+                f"_version NOT IN ({', '.join(map(str, not_retained))}) AND "
+                f"_version > {_by_bucket({b: c for b, c in cleared.items() if c}, '0')}"
+            )
+            if not_retained
+            else F.lit(True)
+        )
+        by_schema: dict[tuple, list[str]] = {}
+        for path, version in sorted(listed.items()):
+            written = self.manifest(version)["schema"]
+            by_schema.setdefault(
+                tuple((c["physical"], c["type"]) for c in written), []
+            ).append(os.path.join(self.root, path))
+        deltas = []
+        for file_cols, paths in by_schema.items():
             read_ddl, _, project = _state_projection(
                 file_cols, cur, False, True, True
             )
-            # a delta always holds its deletes (they must drop earlier
-            # rows); they are tombstones only as said above
-            kept = (
-                [b for b in bucket_ids if version > cleared[b]]
-                if retained(version)
-                else []
-            )
-            tombstones = (
-                F.lit(len(kept) == len(bucket_ids))
-                if len(kept) in (0, len(bucket_ids))
-                else F.expr(_bucket_in(sorted(kept)))
-            )
             deltas.append(
-                self.spark.read.schema(read_ddl + ", `bucket` int")
-                .parquet(os.path.join(self.root, path))
-                .filter(_bucket_in(sorted(bucket_ids)))
+                self.spark.read.schema(read_ddl + ", `bucket` int, `_version` int")
+                .parquet(*paths)
+                .filter(after_base)
                 .select(
                     *project,
-                    F.lit(version).alias("_src"),
+                    F.col("_version").alias("_src"),
                     tombstones.alias("_tombstones"),
                 )
             )
         keep, project = _merged_output(
             cur, logical, with_sys, self.retain_tombstones
         )
-        won = elect_sources(_union(bases), _union(deltas), self.retain_tombstones)
+        won = elect_sources(_union(bases + deltas), self.retain_tombstones)
         if keep is not None:
             won = won.filter(keep)
         return won.select(*project)
@@ -846,8 +865,9 @@ class LakeTable:
         - every other touched bucket is left as it is: the batch's rows
           for them are elected alone (deletes kept as ``_deleted``
           rows, whatever the retention) and written once, as one delta
-          file sorted by bucket, which each of their manifest entries
-          appends to its ``deltas``. No state is read;
+          file sorted by bucket (rows carry ``bucket`` and the
+          ``_version`` that wrote them), which each of their manifest
+          entries appends to its ``deltas``. No state is read;
         - once the table holds ``MAX_DELTAS`` delta files, the merge
           rewrites every bucket that lists one, with the batch's own.
 
@@ -929,7 +949,9 @@ class LakeTable:
             sparse = changes if not rewrite else changes.filter(_bucket_in(delta))
             (
                 compact(sparse.drop("bucket"), None, retain_tombstones=True)
-                .withColumn("bucket", self._bucket_col())
+                .withColumns(
+                    {"bucket": self._bucket_col(), "_version": F.lit(new_version)}
+                )
                 .coalesce(1)
                 .sortWithinPartitions("bucket")
                 .write.mode("overwrite")

@@ -69,17 +69,15 @@ def compact(
     return won.select(*e["output"])
 
 
-def elect_sources(
-    base: DataFrame, deltas: DataFrame, retain_tombstones: bool = False
-) -> DataFrame:
+def elect_sources(rows: DataFrame, retain_tombstones: bool = False) -> DataFrame:
     """The state that a base and its deltas stand for (merge-on-read).
 
-    ``base`` and ``deltas``: ``repo``, ``path``, payload, ``_lsn``,
-    ``_deleted``, ``_src``, the source's position in commit order (0
-    for the base, then the deltas'), and ``_tombstones``, whether the
-    merge that wrote the source retained its deletes. A source holds at
-    most one row per key, as :func:`compact` leaves it. The result
-    equals applying the deltas one by one with :func:`compact`'s rule:
+    ``rows``: ``repo``, ``path``, payload, ``_lsn``, ``_deleted``,
+    ``_src``, the source's position in commit order (the base first,
+    then the deltas), and ``_tombstones``, whether the merge that wrote
+    the source retained its deletes. A source holds at most one row per
+    key, as :func:`compact` leaves it. The result equals applying the
+    sources one by one with :func:`compact`'s rule:
 
     - a row is dropped when a LATER source holds a delete of its key at
       a higher LSN (without retention a delete removes the state, so a
@@ -90,32 +88,22 @@ def elect_sources(
     - the highest LSN wins, ties going to the earlier source (state
       wins ties).
 
-    Only base rows of keys that some delta holds are elected (a
-    broadcast semi join on the deltas' keys); every other base row is
-    its key's only candidate and passes through without a shuffle, so
-    the election costs the size of the deltas, not of the base.
-
     Output as :func:`compact`'s: ``repo``, ``path``, payload, ``_lsn``
     and, with retention, ``_deleted``.
     """
     payload = tuple(
         c
-        for c in base.columns
+        for c in rows.columns
         if c not in (*KEY, "_lsn", "_deleted", "_src", "_tombstones")
     )
     e = _source_election(payload, retain_tombstones)
-    keys = F.broadcast(deltas.select(*e["key"]))
-    alone = base.join(keys, list(KEY), "left_anti").filter(e["live"])
-    won = (
-        base.join(keys, list(KEY), "left_semi")
-        .unionByName(deltas)
-        .withColumn("_later_delete", e["later_delete"])
+    return (
+        rows.withColumn("_later_delete", e["later_delete"])
         .filter(e["candidate"])
         .groupBy(*e["key"])
         .agg(e["winner"])
         .select(*e["output"])
     )
-    return alone.select(*e["alone"]).unionByName(won)
 
 
 @built_once
@@ -132,7 +120,6 @@ def _source_election(payload: tuple[str, ...], retain_tombstones: bool) -> dict:
         live = live | F.col("_tombstones")
     return {
         "key": key,
-        "live": live,
         # the highest delete LSN among the key's later sources
         "later_delete": F.max(F.when(F.col("_deleted"), F.col("_lsn"))).over(later),
         "candidate": undropped & live,
@@ -145,12 +132,6 @@ def _source_election(payload: tuple[str, ...], retain_tombstones: bool) -> dict:
             *[F.col(f"w.{p}").alias(p) for p in payload],
             F.col("w._lsn").alias("_lsn"),
             *([F.col("w._deleted").alias("_deleted")] if retain_tombstones else []),
-        ],
-        "alone": [
-            *key,
-            *[F.col(p) for p in payload],
-            F.col("_lsn"),
-            *([F.col("_deleted")] if retain_tombstones else []),
         ],
     }
 

@@ -332,18 +332,24 @@ def test_expired_version_raises_while_its_files_survive(spark, tmp_root):
     assert lt.read_state(version=v_seed + 1).count() == 40
 
 
-def test_merged_read_elects_only_keys_the_deltas_hold(spark, tmp_root):
-    """Plan pin: a read over buckets with deltas shuffles only the base
-    rows of keys that a delta holds (a broadcast semi join on the
-    deltas' keys); every other base row passes through a broadcast
-    anti join without an exchange."""
-    from test_plans import plan_of
+def test_merged_read_scans_deltas_once_per_writer_schema(spark, tmp_root):
+    """Plan pin: a read over buckets with deltas scans the base files
+    once and the delta files once per schema that wrote them, not once
+    per delta."""
+    from test_plans import n_scans, plan_of
+
+    def with_deltas():
+        return [int(b) for b, e in lt.manifest()["files"].items() if e.get("deltas")]
 
     lt = _sparse_lake(spark, os.path.join(tmp_root, "l"))
-    lt.merge(_changes(spark, [(1, "u", 900)], False), 2)
-    state = lt.read_state(logical=False, with_sys=True)
-    plan = plan_of(state)
-    assert "Join type: LeftAnti" in plan and "Join type: LeftSemi" in plan
-    assert "SortMergeJoin" not in plan
-    assert plan.count("Arguments: hashpartitioning") == 1
-    assert state.count() == 40
+    for bid, k in enumerate((1, 2, 3), start=2):
+        lt.merge(_changes(spark, [(k, "u", 900 + k)], False), bid)
+    state = lt.read_state(buckets=with_deltas(), logical=False, with_sys=True)
+    assert n_scans(plan_of(state)) == 2
+    lt.apply_schema_change(ADD_STARS)
+    lt.merge(_changes(spark, [(4, "u", 904)], True), 5)
+    state = lt.read_state(buckets=with_deltas())
+    assert n_scans(plan_of(state)) == 3
+    got = {r["path"]: (r["content"], r["stars"]) for r in state.collect()}
+    assert [got[f"p0{k}"] for k in (1, 4)] == [("u901", None), ("u904", 904)]
+    assert lt.read_state().count() == 40
