@@ -40,53 +40,66 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debezium_spark.expr_cache import built_once, columns_key
 from debezium_spark.operators.compaction import compact, elect_sources
 from debezium_spark.schema_evolution import TableSchema
 
 
-@built_once
-def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), n_buckets).cast("int")
+def _ident(name: str) -> str:
+    """A SQL identifier: backtick-quoted, embedded backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-@built_once
-def _change_projection(cols_json: str, n_buckets: int) -> list:
+def _literal(value) -> str:
+    """A SQL literal for a JSON scalar (a column default): ``NULL``, a
+    boolean, a number (a float as a DOUBLE, like ``F.lit``) or a string
+    quoted with ``\\`` and ``'`` escaped."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _bucket_expr(n_buckets: int) -> str:
+    """A key's bucket (existing lakes are partitioned by exactly this)."""
+    return f"CAST(pmod(xxhash64(repo, path), {n_buckets}) AS INT)"
+
+
+def _change_projection(columns: list[dict], n_buckets: int) -> list[str]:
     """``op``, ``lsn``, every physical column cast to its table type,
     and the key's ``bucket``: the merge's view of a batch's changes."""
     return [
-        F.col("op"),
-        F.col("lsn"),
+        "op",
+        "lsn",
         *[
-            F.col(c["physical"]).cast(c["type"]).alias(c["physical"])
-            for c in json.loads(cols_json)
+            f"CAST({_ident(c['physical'])} AS {c['type']}) AS {_ident(c['physical'])}"
+            for c in columns
         ],
-        _bucket_expr(n_buckets).alias("bucket"),
+        f"{_bucket_expr(n_buckets)} AS bucket",
     ]
 
 
-@built_once
-def _distinct_keys():
-    return F.countDistinct("repo", "path").alias("keys")
-
-
-@built_once
 def _state_projection(
     file_cols: tuple[tuple[str, str], ...],
-    cols_json: str,
+    columns: list[dict],
     logical: bool,
     with_sys: bool,
     retain_tombstones: bool,
-) -> tuple:
+) -> tuple[str, str | None, list[str]]:
     """How :meth:`LakeTable.read_state` reads files whose physical
     columns are ``file_cols`` (``(physical, type)`` pairs of the schema
-    that wrote them) as the table schema ``cols_json``:
+    that wrote them) as the table schema ``columns``:
     ``(read DDL, row filter or None, projection)``.
 
     The read DDL is the files' physical schema plus the system columns;
@@ -94,49 +107,48 @@ def _state_projection(
     and reads it as NULL, which counts as live."""
     present = {p for p, _ in file_cols}
     read_ddl = ", ".join(
-        [f"`{p}` {t}" for p, t in file_cols]
+        [f"{_ident(p)} {t}" for p, t in file_cols]
         + ["`_lsn` bigint", "`_deleted` boolean"]
     )
-    dead = F.coalesce(F.col("_deleted"), F.lit(False))
+    dead = "coalesce(_deleted, false)"
     project = []
-    for c in json.loads(cols_json):
-        name = c["name"] if logical else c["physical"]
+    for c in columns:
+        name = _ident(c["name"] if logical else c["physical"])
         if c["physical"] in present:
-            project.append(F.col(c["physical"]).cast(c["type"]).alias(name))
+            project.append(f"CAST({_ident(c['physical'])} AS {c['type']}) AS {name}")
         else:
             # file predates the column: Iceberg initial-default
             # semantics — project the column's default (NULL when
             # none). Rows written AFTER the add with an explicit NULL
             # take the branch above and stay NULL.
-            project.append(F.lit(c.get("default")).cast(c["type"]).alias(name))
+            project.append(f"CAST({_literal(c.get('default'))} AS {c['type']}) AS {name}")
     if with_sys:
-        project.append(F.col("_lsn"))
+        project.append("_lsn")
         if retain_tombstones:
-            project.append(dead.alias("_deleted"))
+            project.append(f"{dead} AS _deleted")
     # consumer-facing reads never see tombstones; a NON-retaining lake
     # drops them even from merge reads (retention switched off ⇒ they
     # are just garbage)
-    keep = None if with_sys and retain_tombstones else ~dead
+    keep = None if with_sys and retain_tombstones else f"NOT {dead}"
     return read_ddl, keep, project
 
 
-@built_once
 def _merged_output(
-    cols_json: str, logical: bool, with_sys: bool, retain_tombstones: bool
-) -> tuple:
+    columns: list[dict], logical: bool, with_sys: bool, retain_tombstones: bool
+) -> tuple[str | None, list[str]]:
     """How :meth:`LakeTable.read_state` presents the election of a
     merge-on-read bucket (physical columns, ``_lsn`` and, under
     retention, ``_deleted``): ``(row filter or None, projection)``,
     the same contract as :func:`_state_projection`."""
     project = [
-        F.col(c["physical"]).alias(c["name"] if logical else c["physical"])
-        for c in json.loads(cols_json)
+        f"{_ident(c['physical'])} AS {_ident(c['name'] if logical else c['physical'])}"
+        for c in columns
     ]
     if with_sys:
-        project.append(F.col("_lsn"))
+        project.append("_lsn")
         if retain_tombstones:
-            project.append(F.col("_deleted"))
-    keep = ~F.col("_deleted") if retain_tombstones and not with_sys else None
+            project.append("_deleted")
+    keep = "NOT _deleted" if retain_tombstones and not with_sys else None
     return keep, project
 
 
@@ -311,7 +323,7 @@ class LakeTable:
 
     # -- read ----------------------------------------------------------
     def _bucket_col(self):
-        return _bucket_expr(self.n_buckets)
+        return F.expr(_bucket_expr(self.n_buckets))
 
     def read_state(
         self,
@@ -360,13 +372,13 @@ class LakeTable:
         if not entries:
             ddl = ", ".join(
                 [
-                    f"`{c['name' if logical else 'physical']}` {c['type']}"
+                    f"{_ident(c['name' if logical else 'physical'])} {c['type']}"
                     for c in schema.columns
                 ]
-                + [f"`{n}` {t}" for n, t in sys_cols]
+                + [f"{_ident(n)} {t}" for n, t in sys_cols]
             )
             return self.spark.createDataFrame([], ddl)
-        cur = columns_key(schema.columns)
+        cur = schema.columns
         plain = [e for e in entries.values() if not e.get("deltas")]
         merged = {b: e for b, e in entries.items() if e.get("deltas")}
         parts = []
@@ -381,7 +393,7 @@ class LakeTable:
     def _scan(
         self,
         entries: list[dict],
-        cur: str,
+        cur: list[dict],
         logical: bool,
         with_sys: bool,
         retain_tombstones: bool,
@@ -404,11 +416,11 @@ class LakeTable:
             df = self.spark.read.schema(read_ddl).parquet(*paths)
             if keep is not None:
                 df = df.filter(keep)
-            parts.append(df.select(*project))
+            parts.append(df.selectExpr(*project))
         return parts
 
     def _read_merged(
-        self, entries: dict[int, dict], cur: str, logical: bool, with_sys: bool
+        self, entries: dict[int, dict], cur: list[dict], logical: bool, with_sys: bool
     ) -> DataFrame:
         """Buckets that list deltas: their base files and the rows of
         their deltas, combined by :func:`elect_sources` (merge-on-read).
@@ -437,9 +449,7 @@ class LakeTable:
             group = [e for b, e in entries.items() if (cleared[b] == 0) is kept]
             if group:
                 bases.extend(
-                    df.select(
-                        "*", F.lit(0).alias("_src"), F.lit(kept).alias("_tombstones")
-                    )
+                    df.selectExpr("*", "0 AS _src", f"{_literal(kept)} AS _tombstones")
                     for df in self._scan(group, cur, False, True, True)
                 )
         listed = {
@@ -455,12 +465,10 @@ class LakeTable:
         # rows); they are tombstones only as said above
         not_retained = sorted({v for v in listed.values() if not retained(v)})
         tombstones = (
-            F.expr(
-                f"_version NOT IN ({', '.join(map(str, not_retained))}) AND "
-                f"_version > {_by_bucket({b: c for b, c in cleared.items() if c}, '0')}"
-            )
+            f"_version NOT IN ({', '.join(map(str, not_retained))}) AND "
+            f"_version > {_by_bucket({b: c for b, c in cleared.items() if c}, '0')}"
             if not_retained
-            else F.lit(True)
+            else "true"
         )
         by_schema: dict[tuple, list[str]] = {}
         for path, version in sorted(listed.items()):
@@ -477,10 +485,8 @@ class LakeTable:
                 self.spark.read.schema(read_ddl + ", `bucket` int, `_version` int")
                 .parquet(*paths)
                 .filter(after_base)
-                .select(
-                    *project,
-                    F.col("_version").alias("_src"),
-                    tombstones.alias("_tombstones"),
+                .selectExpr(
+                    *project, "_version AS _src", f"{tombstones} AS _tombstones"
                 )
             )
         keep, project = _merged_output(
@@ -489,7 +495,7 @@ class LakeTable:
         won = elect_sources(_union(bases + deltas), self.retain_tombstones)
         if keep is not None:
             won = won.filter(keep)
-        return won.select(*project)
+        return won.selectExpr(*project)
 
     def _on_disk(self) -> list[int]:
         return sorted(
@@ -625,7 +631,7 @@ class LakeTable:
             raise ValueError("lake does not retain tombstones")
         man = self.manifest()
         state = self.read_state(logical=False, with_sys=True)
-        dead = F.col("_deleted") & (F.col("_lsn") < F.lit(below_lsn))
+        dead = f"_deleted AND _lsn < {_literal(below_lsn)}"
         touched = [
             r["bucket"]
             for r in state.filter(dead)
@@ -639,7 +645,7 @@ class LakeTable:
         new_version = man["version"] + 1
         keep = self.read_state(
             buckets=touched, logical=False, with_sys=True
-        ).filter(~dead)
+        ).filter(f"NOT ({dead})")
         out_dir = os.path.join(self.root, f"data/v{new_version}")
         (
             keep.withColumn("bucket", self._bucket_col())
@@ -786,50 +792,30 @@ class LakeTable:
                 version=version,
             )
             if "_deleted" in df.columns:
-                df = df.filter(
-                    ~F.coalesce(F.col("_deleted"), F.lit(False))
-                )
-            img = [
-                (
-                    F.col(c["physical"])
-                    if c["physical"] in df.columns
-                    else F.lit(None)
-                )
-                .cast(c["type"])
-                .alias(c["name"])
+                df = df.filter("NOT coalesce(_deleted, false)")
+            img = ", ".join(
+                f"CAST({_ident(c['physical']) if c['physical'] in df.columns else 'NULL'}"
+                f" AS {c['type']}) AS {_ident(c['name'])}"
                 for c in non_key
-            ]
-            return df.select(
-                "repo",
-                "path",
-                F.struct(*img).alias(f"_{tag}_img"),
-                F.col("_lsn").alias(f"_{tag}_lsn"),
+            )
+            return df.selectExpr(
+                "repo", "path", f"struct({img}) AS _{tag}_img", f"_lsn AS _{tag}_lsn"
             )
 
         j = _side(v_from, "o").join(
             _side(v_to, "n"), ["repo", "path"], "full_outer"
         )
-        op = (
-            F.when(F.col("_o_lsn").isNull(), "c")
-            .when(F.col("_n_lsn").isNull(), "d")
-            .otherwise("u")
-        )
         return j.filter(
-            F.col("_o_lsn").isNull()
-            | F.col("_n_lsn").isNull()
-            | (F.col("_o_lsn") != F.col("_n_lsn"))
-        ).select(
+            "_o_lsn IS NULL OR _n_lsn IS NULL OR _o_lsn != _n_lsn"
+        ).selectExpr(
             "repo",
             "path",
-            op.alias("op"),
-            F.when(F.col("_o_lsn").isNotNull(), F.col("_o_img")).alias(
-                "before"
-            ),
-            F.when(F.col("_n_lsn").isNotNull(), F.col("_n_img")).alias(
-                "after"
-            ),
-            F.col("_o_lsn").alias("lsn_pre"),
-            F.col("_n_lsn").alias("lsn_post"),
+            "CASE WHEN _o_lsn IS NULL THEN 'c' WHEN _n_lsn IS NULL THEN 'd' "
+            "ELSE 'u' END AS op",
+            "CASE WHEN _o_lsn IS NOT NULL THEN _o_img END AS `before`",
+            "CASE WHEN _n_lsn IS NOT NULL THEN _n_img END AS `after`",
+            "_o_lsn AS lsn_pre",
+            "_n_lsn AS lsn_post",
         )
 
     # -- merge (the MERGE INTO analogue) --------------------------------
@@ -897,16 +883,18 @@ class LakeTable:
 
         schema = self.table_schema()
         new_version = man["version"] + 1
-        changes = changes.select(
-            *_change_projection(columns_key(schema.columns), self.n_buckets)
-        )
+        changes = changes.selectExpr(*_change_projection(schema.columns, self.n_buckets))
         # Persist the change rows ONCE: one ≤n_buckets-row job yields the
         # touched buckets and the changed-key count (buckets partition
         # keys, so per-bucket distinct counts sum exactly), and the
         # cached rows feed the election without re-running the upstream
         # scan and transforms.
         changes.persist()
-        rows = changes.groupBy("bucket").agg(_distinct_keys()).collect()
+        rows = (
+            changes.groupBy("bucket")
+            .agg(F.expr("count(DISTINCT repo, path) AS keys"))
+            .collect()
+        )
         keys_in = {r["bucket"]: r["keys"] for r in rows}
         n_changes = int(sum(keys_in.values()))
         offsets, lineage_rows = {}, None
@@ -920,7 +908,7 @@ class LakeTable:
             cow = changes if not delta else changes.filter(_bucket_in(rewrite))
             old = self.read_state(buckets=rewrite, logical=False, with_sys=True)
             if truncate_lsn is not None:
-                old = old.filter(F.col("_lsn") > truncate_lsn)
+                old = old.filter(f"_lsn > {truncate_lsn}")
             new_state = compact(
                 cow.drop("bucket"), old, self.retain_tombstones
             ).withColumn("bucket", self._bucket_col())
@@ -949,8 +937,10 @@ class LakeTable:
             sparse = changes if not rewrite else changes.filter(_bucket_in(delta))
             (
                 compact(sparse.drop("bucket"), None, retain_tombstones=True)
-                .withColumns(
-                    {"bucket": self._bucket_col(), "_version": F.lit(new_version)}
+                .selectExpr(
+                    "*",
+                    f"{_bucket_expr(self.n_buckets)} AS bucket",
+                    f"{new_version} AS _version",
                 )
                 .coalesce(1)
                 .sortWithinPartitions("bucket")

@@ -20,10 +20,8 @@ exchange, so even a million-update key costs O(1) post-shuffle memory
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from debezium_spark.expr_cache import built_once
 
 KEY = ("repo", "path")
 
@@ -52,21 +50,31 @@ def compact(
     already collapses custom-key winners, and ``pk_change_split``
     stamps the CREATE half ``lsn + 1`` so the two halves never tie.
     """
-    payload = tuple(c for c in changes.columns if c not in (*KEY, "op", "lsn"))
-    has_state = state is not None
-    e = _election(
-        payload,
-        has_state,
-        has_state and "_deleted" in state.columns,
-        retain_tombstones,
+    from debezium_spark.lake import _ident  # lake imports this module
+
+    payload = [_ident(c) for c in changes.columns if c not in (*KEY, "op", "lsn")]
+    rows = changes.selectExpr(*KEY, "op", "lsn", "0 AS src", *payload)
+    if state is not None:
+        dead = "coalesce(_deleted, false)" if "_deleted" in state.columns else "false"
+        rows = state.selectExpr(
+            *KEY,
+            f"CASE WHEN {dead} THEN 'd' ELSE 'u' END AS op",
+            "_lsn AS lsn",
+            "1 AS src",
+            *payload,
+        ).unionByName(rows)
+    deleted = "w.op = 'd'"
+    won = rows.groupBy(*KEY).agg(
+        F.expr(f"max_by(struct({', '.join(['op', 'lsn', *payload])}), struct(lsn, src)) AS w")
     )
-    rows = changes.select(*e["changes"])
-    if has_state:
-        rows = state.select(*e["state"]).unionByName(rows)
-    won = rows.groupBy(*e["key"]).agg(e["winner"])
     if not retain_tombstones:
-        won = won.filter(e["live"])
-    return won.select(*e["output"])
+        won = won.filter(f"NOT ({deleted})")
+    return won.selectExpr(
+        *KEY,
+        *[f"CASE WHEN NOT ({deleted}) THEN w.{p} END AS {p}" for p in payload],
+        "CAST(w.lsn AS BIGINT) AS _lsn",
+        *([f"{deleted} AS _deleted"] if retain_tombstones else []),
+    )
 
 
 def elect_sources(rows: DataFrame, retain_tombstones: bool = False) -> DataFrame:
@@ -91,89 +99,35 @@ def elect_sources(rows: DataFrame, retain_tombstones: bool = False) -> DataFrame
     Output as :func:`compact`'s: ``repo``, ``path``, payload, ``_lsn``
     and, with retention, ``_deleted``.
     """
-    payload = tuple(
-        c
+    from debezium_spark.lake import _ident  # lake imports this module
+
+    payload = [
+        _ident(c)
         for c in rows.columns
         if c not in (*KEY, "_lsn", "_deleted", "_src", "_tombstones")
-    )
-    e = _source_election(payload, retain_tombstones)
-    return (
-        rows.withColumn("_later_delete", e["later_delete"])
-        .filter(e["candidate"])
-        .groupBy(*e["key"])
-        .agg(e["winner"])
-        .select(*e["output"])
-    )
-
-
-@built_once
-def _source_election(payload: tuple[str, ...], retain_tombstones: bool) -> dict:
-    key = [F.col(k) for k in KEY]
-    later = (
-        Window.partitionBy(*key)
-        .orderBy(F.col("_src").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    undropped = F.coalesce(F.col("_lsn") >= F.col("_later_delete"), F.lit(True))
-    live = ~F.col("_deleted")
-    if retain_tombstones:
-        live = live | F.col("_tombstones")
-    return {
-        "key": key,
-        # the highest delete LSN among the key's later sources
-        "later_delete": F.max(F.when(F.col("_deleted"), F.col("_lsn"))).over(later),
-        "candidate": undropped & live,
-        "winner": F.max_by(
-            F.struct(*payload, "_lsn", "_deleted"),
-            F.struct("_lsn", (-F.col("_src")).alias("_first")),
-        ).alias("w"),
-        "output": [
-            *key,
-            *[F.col(f"w.{p}").alias(p) for p in payload],
-            F.col("w._lsn").alias("_lsn"),
-            *([F.col("w._deleted").alias("_deleted")] if retain_tombstones else []),
-        ],
-    }
-
-
-@built_once
-def _election(
-    payload: tuple[str, ...],
-    has_state: bool,
-    state_has_deleted: bool,
-    retain_tombstones: bool,
-) -> dict:
-    """The election's expressions: depend only on the payload columns,
-    whether (and how) state enters, and retention. Column names are
-    built as Columns too: a name in a select list costs a round trip."""
-    key = [F.col(k) for k in KEY]
-    cols = [F.col(p) for p in payload]
-    e = {
-        "key": key,
-        "changes": [*key, F.col("op"), F.col("lsn"), F.lit(0).alias("src"), *cols],
-    }
-    if has_state:
-        dead = (
-            F.coalesce(F.col("_deleted"), F.lit(False))
-            if state_has_deleted
-            else F.lit(False)
-        )
-        e["state"] = [
-            *key,
-            F.when(dead, "d").otherwise("u").alias("op"),
-            F.col("_lsn").alias("lsn"),
-            F.lit(1).alias("src"),
-            *cols,
-        ]
-    e["winner"] = F.max_by(
-        F.struct("op", "lsn", *payload), F.struct("lsn", "src")
-    ).alias("w")
-    deleted = F.col("w.op") == "d"
-    e["live"] = ~deleted
-    e["output"] = [
-        *key,
-        *[F.when(~deleted, F.col(f"w.{p}")).alias(p) for p in payload],
-        F.col("w.lsn").cast("bigint").alias("_lsn"),
-        *([deleted.alias("_deleted")] if retain_tombstones else []),
     ]
-    return e
+    live = "(NOT _deleted OR _tombstones)" if retain_tombstones else "NOT _deleted"
+    return (
+        # the highest delete LSN among the key's later sources
+        rows.withColumn(
+            "_later_delete",
+            F.expr(
+                "max(CASE WHEN _deleted THEN _lsn END) OVER (PARTITION BY repo, path "
+                "ORDER BY _src DESC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+            ),
+        )
+        .filter(f"coalesce(_lsn >= _later_delete, true) AND {live}")
+        .groupBy(*KEY)
+        .agg(
+            F.expr(
+                f"max_by(struct({', '.join([*payload, '_lsn', '_deleted'])}), "
+                "struct(_lsn, -_src AS _first)) AS w"
+            )
+        )
+        .selectExpr(
+            *KEY,
+            *[f"w.{p} AS {p}" for p in payload],
+            "w._lsn AS _lsn",
+            *(["w._deleted AS _deleted"] if retain_tombstones else []),
+        )
+    )

@@ -11,10 +11,17 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from debezium_spark.envelope import OP_CREATE, OP_DELETE, OP_UPDATE
-from debezium_spark.expr_cache import built_once
+from debezium_spark.envelope import (
+    ALL_OPS,
+    OP_CREATE,
+    OP_DELETE,
+    OP_MESSAGE,
+    OP_TRUNCATE,
+    OP_UPDATE,
+)
+from debezium_spark.lake import _ident, _literal
 
 
 # ---------------------------------------------------------------------------
@@ -25,12 +32,7 @@ def drop_tombstones(df: DataFrame) -> DataFrame:
     """Drop Kafka-log-compaction tombstones; the table effect of a delete
     is the ``d`` event itself (EventDispatcher.java:496-508). Analogue of
     ExtractNewRecordState's drop-tombstones mode."""
-    return df.filter(_not_tombstone())
-
-
-@built_once
-def _not_tombstone() -> Column:
-    return ~F.col("is_tombstone")
+    return df.filter("NOT is_tombstone")
 
 
 def skip_operations(df: DataFrame, skipped: tuple[str, ...]) -> DataFrame:
@@ -108,45 +110,50 @@ def skip_unchanged_updates(df: DataFrame) -> DataFrame:
 DEFAULT_KEY_COLUMNS = ("repo", "path")
 
 
-def _image_key(image_col: str, key_columns: tuple[str, ...]) -> Column:
-    return F.struct(
-        *[F.col(f"{image_col}.{c}").alias(c) for c in key_columns]
-    )
+def _image_key(image_col: str, key_columns: tuple[str, ...]) -> str:
+    return "struct(" + ", ".join(
+        f"{_ident(image_col)}.{_ident(c)} AS {_ident(c)}" for c in key_columns
+    ) + ")"
 
 
-def _target_key(df: DataFrame, key_columns: tuple[str, ...]) -> Column:
+def _sql_type(t: DataType) -> str:
+    """``t`` as a SQL type, struct field names quoted."""
+    if isinstance(t, StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_ident(f.name)}: {_sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in t.fields
+        ) + ">"
+    if isinstance(t, ArrayType):
+        return f"ARRAY<{_sql_type(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"MAP<{_sql_type(t.keyType)}, {_sql_type(t.valueType)}>"
+    return t.simpleString()
+
+
+def _target_key(schema: StructType, key_columns: tuple[str, ...]) -> str:
     """Key of the row the event affects, built from the configured key
     columns: before-image for deletes, after-image otherwise; tombstones
     / imageless rows fall back to the log key (custom columns absent
     from it are NULL — such rows are dropped upstream anyway)."""
-    return _target_key_expr(
-        df.schema["after"].dataType, df.schema["key"].dataType, tuple(key_columns)
-    )
-
-
-@built_once
-def _target_key_expr(
-    after_type: StructType, key_type: StructType, key_columns: tuple[str, ...]
-) -> Column:
     # the fallback's missing-column NULLs must carry the IMAGE field's
     # type (a bigint key column typed string here would make the
-    # when/otherwise branches incompatible at analysis time)
-    after_types = {f.name: f.dataType for f in after_type.fields}
-    return (
-        F.when(F.col("op") == OP_DELETE, _image_key("before", key_columns))
-        .when(F.col("after").isNotNull(), _image_key("after", key_columns))
-        .otherwise(
-            F.struct(
-                *[
-                    (
-                        F.col(f"key.{c}")
-                        if c in key_type.names
-                        else F.lit(None).cast(after_types[c])
-                    ).alias(c)
-                    for c in key_columns
-                ]
-            )
+    # CASE branches incompatible at analysis time)
+    after = schema["after"].dataType
+    key_names = schema["key"].dataType.names
+    fallback = ", ".join(
+        (
+            f"`key`.{_ident(c)}"
+            if c in key_names
+            else f"CAST(NULL AS {_sql_type(after[c].dataType)})"
         )
+        + f" AS {_ident(c)}"
+        for c in key_columns
+    )
+    return (
+        f"CASE WHEN op = {_literal(OP_DELETE)} THEN {_image_key('before', key_columns)} "
+        f"WHEN `after` IS NOT NULL THEN {_image_key('after', key_columns)} "
+        f"ELSE struct({fallback}) END"
     )
 
 
@@ -165,45 +172,35 @@ def pk_change_split(
     RelationalDatabaseConnectorConfig.java:321): the key is built from
     these row-image columns instead of the default PK.
     """
-    return df.select(_split_rows(df.schema, tuple(key_columns)))
-
-
-@built_once
-def _split_rows(schema: StructType, key_columns: tuple[str, ...]) -> Column:
-    cols = schema.names
-    moved = [
-        F.col(f"before.{c}") != F.col(f"after.{c}") for c in key_columns
-    ]
-    any_moved = moved[0]
-    for m in moved[1:]:
-        any_moved = any_moved | m
-    is_pk_change = (
-        (F.col("op") == OP_UPDATE) & F.col("before").isNotNull() & any_moved
+    schema = df.schema
+    moved = " OR ".join(
+        f"`before`.{_ident(c)} != `after`.{_ident(c)}" for c in key_columns
     )
+    is_pk_change = f"op = {_literal(OP_UPDATE)} AND `before` IS NOT NULL AND ({moved})"
 
-    def ev(**overrides) -> Column:
-        return F.struct(*[overrides.get(c, F.col(c)).alias(c) for c in cols])
+    def ev(**overrides: str) -> str:
+        return "struct(" + ", ".join(
+            f"{overrides.get(c, _ident(c))} AS {_ident(c)}" for c in schema.names
+        ) + ")"
 
     delete_part = ev(
-        op=F.lit(OP_DELETE),
-        after=F.lit(None).cast(schema["after"].dataType),
+        op=f"{_literal(OP_DELETE)}",
+        after=f"CAST(NULL AS {_sql_type(schema['after'].dataType)})",
         key=_image_key("before", key_columns),
     )
     create_part = ev(
-        op=F.lit(OP_CREATE),
-        lsn=F.col("lsn") + 1,
-        before=F.lit(None).cast(schema["before"].dataType),
+        op=f"{_literal(OP_CREATE)}",
+        lsn="lsn + 1",
+        before=f"CAST(NULL AS {_sql_type(schema['before'].dataType)})",
         key=_image_key("after", key_columns),
     )
     # the pass-through branch must carry the SAME key struct type as the
     # split branches (custom key columns), so normalize it here too
-    target = _target_key_expr(
-        schema["after"].dataType, schema["key"].dataType, key_columns
+    passthrough = ev(key=_target_key(schema, key_columns))
+    return df.selectExpr(
+        f"inline(CASE WHEN {is_pk_change} THEN array({delete_part}, {create_part}) "
+        f"ELSE array({passthrough}) END)"
     )
-    arr = F.when(is_pk_change, F.array(delete_part, create_part)).otherwise(
-        F.array(ev(key=target))
-    )
-    return F.inline(arr)
 
 
 def normalize_target_key(
@@ -214,7 +211,7 @@ def normalize_target_key(
     relational/TableSchema.java:126; key columns configurable per
     ``message.key.columns``, relational/Key.java:27-70). Run after
     :func:`pk_change_split`."""
-    return df.withColumn("key", _target_key(df, key_columns))
+    return df.withColumn("key", F.expr(_target_key(df.schema, key_columns)))
 
 
 # ---------------------------------------------------------------------------
@@ -222,56 +219,47 @@ def normalize_target_key(
 # EventDispatcher failure modes :319-335 — fail / warn / skip)
 # ---------------------------------------------------------------------------
 
-@built_once
-def _invalid_rules() -> list[tuple[str, str, Column]]:
-    """Envelope-shape violations (VerifyRecord.java:129-227 rules) as an
-    ordered ``(stage, message, predicate)`` list — evaluation order
-    mirrors the Connect task pipeline (key converter, then value
-    converter), and the FIRST matching rule names a record's failure
-    (DeadLetterQueueReporter attaches exactly one error context per
-    record). Tombstones are exempt (null value side by design); control
-    ops 't'/'m' carry no row images and no table key (Envelope.java:319
-    truncate has no image)."""
-    from debezium_spark.envelope import ALL_OPS, OP_DELETE, OP_MESSAGE, OP_TRUNCATE
-
-    not_tomb = ~F.col("is_tombstone")
-    control = F.coalesce(
-        F.col("op").isin(OP_TRUNCATE, OP_MESSAGE), F.lit(False)
-    )
-    bad_key = ~control & (
-        F.col("key").isNull()
-        | F.col("key.repo").isNull()
-        | F.col("key.path").isNull()
-    )
-    bad_op = not_tomb & (
-        F.col("op").isNull() | ~F.col("op").isin(*ALL_OPS)
-    )
-    needs_after = not_tomb & F.col("op").isin("r", "c", "u")
-    bad_after = needs_after & F.col("after").isNull()
-    bad_before = (
-        not_tomb & (F.col("op") == OP_DELETE) & F.col("before").isNull()
-    )
-    return [
-        ("KEY_CONVERTER", "missing or incomplete key", bad_key),
-        ("VALUE_CONVERTER", "unknown or missing op code", bad_op),
-        ("VALUE_CONVERTER", "c/r/u event without after image", bad_after),
-        ("VALUE_CONVERTER", "delete event without before image", bad_before),
-    ]
+# Envelope-shape violations (VerifyRecord.java:129-227 rules) as an
+# ordered ``(stage, message, predicate)`` list — evaluation order
+# mirrors the Connect task pipeline (key converter, then value
+# converter), and the FIRST matching rule names a record's failure
+# (DeadLetterQueueReporter attaches exactly one error context per
+# record). Tombstones are exempt (null value side by design); control
+# ops 't'/'m' carry no row images and no table key (Envelope.java:319
+# truncate has no image).
+_NOT_TOMB = "NOT is_tombstone"
+_INVALID_RULES = [
+    (
+        "KEY_CONVERTER",
+        "missing or incomplete key",
+        f"NOT coalesce(op IN ({_literal(OP_TRUNCATE)}, {_literal(OP_MESSAGE)}), false) AND "
+        "(`key` IS NULL OR `key`.repo IS NULL OR `key`.path IS NULL)",
+    ),
+    (
+        "VALUE_CONVERTER",
+        "unknown or missing op code",
+        f"{_NOT_TOMB} AND (op IS NULL OR op NOT IN "
+        f"({', '.join(map(_literal, ALL_OPS))}))",
+    ),
+    (
+        "VALUE_CONVERTER",
+        "c/r/u event without after image",
+        f"{_NOT_TOMB} AND op IN ('r', 'c', 'u') AND `after` IS NULL",
+    ),
+    (
+        "VALUE_CONVERTER",
+        "delete event without before image",
+        f"{_NOT_TOMB} AND op = {_literal(OP_DELETE)} AND `before` IS NULL",
+    ),
+]
+# True when the envelope is malformed under any rule
+_ANY_INVALID = " OR ".join(f"({pred})" for _, _, pred in _INVALID_RULES)
 
 
 def event_invalid(df: DataFrame) -> Column:
-    """OR of every :func:`_invalid_rules` predicate — True when the
+    """OR of every ``_INVALID_RULES`` predicate — True when the
     envelope is malformed under any rule."""
-    return _any_invalid()
-
-
-@built_once
-def _any_invalid() -> Column:
-    rules = _invalid_rules()
-    out = rules[0][2]
-    for _, _, pred in rules[1:]:
-        out = out | pred
-    return out
+    return F.expr(_ANY_INVALID)
 
 
 # Connect's DeadLetterQueueReporter error-context header keys
@@ -292,29 +280,30 @@ def dead_letter_records(
     map<string,string> ``headers`` column. The record VALUE is the
     original envelope unchanged — like the reference, the DLQ keeps
     the raw record so it can be repaired and replayed. Stage/message
-    come from the first matching :func:`_invalid_rules` entry.
+    come from the first matching ``_INVALID_RULES`` entry.
 
     Pure scan→filter→project (codegen, no shuffle): at scale this is
     the produce-to-DLQ-topic side channel, not a join."""
-    rules = _invalid_rules()
-    stage = F.lit(None).cast("string")
-    msg = F.lit(None).cast("string")
-    for st, m, pred in reversed(rules):
-        stage = F.when(pred, F.lit(st)).otherwise(stage)
-        msg = F.when(pred, F.lit(m)).otherwise(msg)
-    headers = F.create_map(
-        F.lit("__connect.errors.topic"), F.lit(source_topic),
-        F.lit("__connect.errors.partition"),
-        F.col("partition_id").cast("string"),
-        F.lit("__connect.errors.offset"), F.col("lsn").cast("string"),
-        F.lit("__connect.errors.connector.name"), F.lit(connector),
-        F.lit("__connect.errors.task.id"), F.lit(str(task_id)),
-        F.lit("__connect.errors.stage"), stage,
-        F.lit("__connect.errors.exception.class.name"),
-        F.lit(DLQ_EXCEPTION_CLASS),
-        F.lit("__connect.errors.exception.message"), msg,
-    )
-    return df.filter(event_invalid(df)).withColumn("headers", headers)
+    def first_rule(pick) -> str:
+        whens = " ".join(
+            f"WHEN {pred} THEN {_literal(pick(st, m))}" for st, m, pred in _INVALID_RULES
+        )
+        return f"CASE {whens} ELSE CAST(NULL AS STRING) END"
+
+    entries = [
+        ("topic", _literal(source_topic)),
+        ("partition", "CAST(partition_id AS STRING)"),
+        ("offset", "CAST(lsn AS STRING)"),
+        ("connector.name", _literal(connector)),
+        ("task.id", _literal(str(task_id))),
+        ("stage", first_rule(lambda st, m: st)),
+        ("exception.class.name", _literal(DLQ_EXCEPTION_CLASS)),
+        ("exception.message", first_rule(lambda st, m: m)),
+    ]
+    headers = "map(" + ", ".join(
+        f"{_literal('__connect.errors.' + k)}, {v}" for k, v in entries
+    ) + ")"
+    return df.filter(_ANY_INVALID).withColumn("headers", F.expr(headers))
 
 
 def enforce_valid(df: DataFrame, mode: str = "fail") -> DataFrame:
@@ -330,30 +319,19 @@ def enforce_valid(df: DataFrame, mode: str = "fail") -> DataFrame:
       ``errors.deadletterqueue.topic.name``).
     """
     if mode == "fail":
-        return df.withColumn("lsn", _fail_guard())
+        # the guard rides the (always-used) lsn column so the optimizer
+        # cannot dead-code-eliminate it
+        return df.withColumn(
+            "lsn",
+            F.expr(
+                f"CASE WHEN {_ANY_INVALID} THEN CAST(raise_error(concat("
+                "'invalid envelope at lsn=', CAST(lsn AS STRING))) AS BIGINT) "
+                "ELSE lsn END"
+            ),
+        )
     if mode in ("warn", "skip", "dlq"):
-        return df.filter(_valid())
+        return df.filter(f"NOT ({_ANY_INVALID})")
     raise ValueError(f"unknown error mode {mode!r}")
-
-
-@built_once
-def _fail_guard() -> Column:
-    # the guard rides the (always-used) lsn column so the optimizer
-    # cannot dead-code-eliminate it
-    return F.when(
-        _any_invalid(),
-        F.raise_error(
-            F.concat(
-                F.lit("invalid envelope at lsn="),
-                F.col("lsn").cast("string"),
-            )
-        ).cast("long"),
-    ).otherwise(F.col("lsn"))
-
-
-@built_once
-def _valid() -> Column:
-    return ~_any_invalid()
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,6 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from debezium_spark.expr_cache import built_once
 from debezium_spark.lake import LakeTable, _bucket_expr
 
 
@@ -182,44 +181,27 @@ def _version_records(lake: LakeTable, v: int, tombstones_on_delete: bool):
     """Commit ``v``'s wire records, in one pass over its change feed: a
     delete's tombstone companion is emitted from the delete's own row."""
     feed = lake.table_changes(v - 1, v)
-    return feed.select(*_wire_columns(lake.n_buckets, tombstones_on_delete))
+    return feed.selectExpr(*_wire_columns(lake.n_buckets, tombstones_on_delete))
 
 
-@built_once
-def _wire_columns(n_buckets: int, tombstones_on_delete: bool) -> list:
-    key_json = F.to_json(F.struct("repo", "path"))
-    value = F.to_json(
-        F.struct(
-            F.col("before"),
-            F.col("after"),
-            F.col("op"),
-            F.coalesce(F.col("lsn_post"), F.col("lsn_pre")).alias("lsn"),
-        )
-    )
-    partition = _bucket_expr(n_buckets)
-    offset = F.coalesce(F.col("lsn_post"), F.col("lsn_pre"))
+def _wire_columns(n_buckets: int, tombstones_on_delete: bool) -> list[str]:
+    key_json = "to_json(struct(repo, path)) AS key_json"
+    partition = f"{_bucket_expr(n_buckets)} AS `partition`"
     fields = [
-        key_json.alias("key_json"),
-        value.alias("value_json"),
-        partition.alias("partition"),
-        offset.cast("long").alias("offset"),
+        key_json,
+        "to_json(struct(`before`, `after`, op, coalesce(lsn_post, lsn_pre) AS lsn))"
+        " AS value_json",
+        partition,
+        "CAST(coalesce(lsn_post, lsn_pre) AS BIGINT) AS `offset`",
     ]
     if not tombstones_on_delete:
         return fields
-    tomb = F.struct(
-        key_json.alias("key_json"),
-        F.lit(None).cast("string").alias("value_json"),
-        partition.alias("partition"),
-        (F.col("lsn_pre") + 1).cast("long").alias("offset"),
+    rec = f"struct({', '.join(fields)})"
+    tomb = (
+        f"struct({key_json}, CAST(NULL AS STRING) AS value_json, {partition}, "
+        "CAST(lsn_pre + 1 AS BIGINT) AS `offset`)"
     )
-    rec = F.struct(*fields)
-    return [
-        F.inline(
-            F.when(F.col("op") == "d", F.array(rec, tomb)).otherwise(
-                F.array(rec)
-            )
-        )
-    ]
+    return [f"inline(CASE WHEN op = 'd' THEN array({rec}, {tomb}) ELSE array({rec}) END)"]
 
 
 def compact_published(

@@ -87,6 +87,10 @@ def get_spark(
         # At the default 100 entries the working set overflows the LRU
         # and a batch recompiles (and runs cold) a varying share of it.
         .config("spark.sql.codegen.cache.maxEntries", "512")
+        # PySpark records the Python call site of every Column it builds,
+        # at ~4x the Py4J round trips of the Column itself. It reads this
+        # flag once per process, at the first Column, so it is set here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

@@ -42,21 +42,10 @@ from debezium_spark.lake import LakeTable
 _STATE_SCHEMA = "g string, live_rows bigint, agg_bytes bigint"
 
 
-class MaterializedAggView:
-    """Per-group ``(live_rows, agg_bytes)`` over a :class:`LakeTable`.
-
-    ``group_col`` names a logical column whose value buckets rows
-    (NULL groups as its own bucket); the measure is
-    ``length(measure_col)`` in bytes (0 for NULL) — e.g. bytes of
-    ``content`` per ``lang``, the corpus-composition view an ingest
-    operator watches. The configured names are resolved ONCE against
-    the lake schema and pinned by FIELD ID in the view pointer
-    (Iceberg column identity): a schema-change rename between
-    refreshes re-resolves to the column's current logical name —
-    which is the name ``table_changes`` emits — so the view keeps
-    folding the same column, not whatever now happens to wear the
-    old name.
-    """
+class _View:
+    """What both views share: the pointer file that commits a state
+    directory together with the applied lake version, and the field-id
+    pinning of the configured columns."""
 
     def __init__(
         self,
@@ -88,12 +77,22 @@ class MaterializedAggView:
     def applied_version(self) -> int:
         return self._pointer()["applied_version"]
 
-    def state(self) -> DataFrame:
-        """Current view contents ``(g, live_rows, agg_bytes)``."""
-        p = self._pointer()
-        if p["state"] is None:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
-        return self.spark.read.parquet(os.path.join(self.root, p["state"]))
+    def _commit(self, version: int, rel: str, fids: list[int]) -> None:
+        """Point the view at the state directory ``rel``, folded through
+        lake ``version``: the pointer's atomic ``os.replace`` is the
+        commit point; the previous state directory is removed after."""
+        tmp = tempfile.NamedTemporaryFile(
+            "w", dir=self.root, suffix=".json.tmp", delete=False
+        )
+        with tmp as f:
+            json.dump(
+                {"applied_version": version, "state": rel, "field_ids": fids},
+                f,
+            )
+        prev = self._pointer()["state"]
+        os.replace(tmp.name, self._pointer_path())
+        if prev and prev != rel:
+            shutil.rmtree(os.path.join(self.root, prev), ignore_errors=True)
 
     # -- column identity ------------------------------------------------
 
@@ -116,6 +115,30 @@ class MaterializedAggView:
             schema.col(self.measure_col)["field_id"],
         ]
         return self.group_col, self.measure_col, fids
+
+
+class MaterializedAggView(_View):
+    """Per-group ``(live_rows, agg_bytes)`` over a :class:`LakeTable`.
+
+    ``group_col`` names a logical column whose value buckets rows
+    (NULL groups as its own bucket); the measure is
+    ``length(measure_col)`` in bytes (0 for NULL) — e.g. bytes of
+    ``content`` per ``lang``, the corpus-composition view an ingest
+    operator watches. The configured names are resolved ONCE against
+    the lake schema and pinned by FIELD ID in the view pointer
+    (Iceberg column identity): a schema-change rename between
+    refreshes re-resolves to the column's current logical name —
+    which is the name ``table_changes`` emits — so the view keeps
+    folding the same column, not whatever now happens to wear the
+    old name.
+    """
+
+    def state(self) -> DataFrame:
+        """Current view contents ``(g, live_rows, agg_bytes)``."""
+        p = self._pointer()
+        if p["state"] is None:
+            return self.spark.createDataFrame([], _STATE_SCHEMA)
+        return self.spark.read.parquet(os.path.join(self.root, p["state"]))
 
     # -- the fold -------------------------------------------------------
 
@@ -180,19 +203,7 @@ class MaterializedAggView:
         rel = f"state_v{cur}"
         out = os.path.join(self.root, rel)
         merged.coalesce(1).write.mode("overwrite").parquet(out)
-
-        tmp = tempfile.NamedTemporaryFile(
-            "w", dir=self.root, suffix=".json.tmp", delete=False
-        )
-        with tmp as f:
-            json.dump(
-                {"applied_version": cur, "state": rel, "field_ids": fids},
-                f,
-            )
-        prev = self._pointer()["state"]
-        os.replace(tmp.name, self._pointer_path())  # the commit point
-        if prev and prev != rel:
-            shutil.rmtree(os.path.join(self.root, prev), ignore_errors=True)
+        self._commit(cur, rel, fids)
         return {
             "skipped": False,
             "applied_version": cur,
@@ -248,7 +259,7 @@ def _gout(col: Column) -> Column:
     return F.when(col == _NULLG, F.lit(None)).otherwise(col)
 
 
-class MaterializedTopKView:
+class MaterializedTopKView(_View):
     """Incrementally-maintained per-group TOP-K — the non-linear
     sibling of :class:`MaterializedAggView`.
 
@@ -307,27 +318,9 @@ class MaterializedTopKView:
         group_col: str = "lang",
         measure_col: str = "content",
     ):
-        self.spark = spark
-        self.lake = lake
-        self.root = root
+        super().__init__(spark, lake, root, group_col, measure_col)
         self.k = int(k)
         self.slack = int(slack)
-        self.group_col = group_col
-        self.measure_col = measure_col
-        os.makedirs(root, exist_ok=True)
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.root, "VIEW_POINTER.json")
-
-    def _pointer(self) -> dict:
-        try:
-            with open(self._pointer_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"applied_version": 0, "state": None}
-
-    def applied_version(self) -> int:
-        return self._pointer()["applied_version"]
 
     def _buffer(self) -> DataFrame:
         p = self._pointer()
@@ -337,26 +330,6 @@ class MaterializedTopKView:
         if "fr" not in df.columns:  # state written before frontiers
             df = df.withColumn("fr", F.lit(None).cast(self._FR_T))
         return df
-
-    def _resolved_cols(self) -> tuple[str, str, list[int]]:
-        """(group_name, measure_name, [group_fid, measure_fid]) in the
-        lake's CURRENT schema — field-id pinned like
-        :meth:`MaterializedAggView._resolved_cols`."""
-        schema = self.lake.table_schema()
-        fids = self._pointer().get("field_ids")
-        if fids:
-            by_id = {c["field_id"]: c["name"] for c in schema.columns}
-            try:
-                return by_id[fids[0]], by_id[fids[1]], fids
-            except KeyError as e:
-                raise ValueError(
-                    f"view column (field id {e}) dropped from the lake"
-                ) from None
-        fids = [
-            schema.col(self.group_col)["field_id"],
-            schema.col(self.measure_col)["field_id"],
-        ]
-        return self.group_col, self.measure_col, fids
 
     def topk(self) -> DataFrame:
         """Current answer: ``(g, rank, v, repo, path)``, rank 1..k."""
@@ -553,18 +526,7 @@ class MaterializedTopKView:
             os.path.join(self.root, rel)
         )
         deltas.unpersist()
-        tmp = tempfile.NamedTemporaryFile(
-            "w", dir=self.root, suffix=".json.tmp", delete=False
-        )
-        with tmp as f:
-            json.dump(
-                {"applied_version": cur, "state": rel, "field_ids": fids},
-                f,
-            )
-        prev = self._pointer()["state"]
-        os.replace(tmp.name, self._pointer_path())
-        if prev and prev != rel:
-            shutil.rmtree(os.path.join(self.root, prev), ignore_errors=True)
+        self._commit(cur, rel, fids)
         return {
             "skipped": False,
             "applied_version": cur,

@@ -32,8 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debezium_spark.expr_cache import built_once, columns_key
-from debezium_spark.lake import LakeTable
+from debezium_spark.lake import LakeTable, _ident, _literal
 # perfbench/trace.py looks `compact` up here; re-point the trace, then delete
 from debezium_spark.operators.compaction import compact  # noqa: F401
 from debezium_spark.operators.transforms import (
@@ -263,83 +262,52 @@ def await_stream(query, engines) -> None:
             eng._stopped = True
 
 
-@built_once
-def _control_op():
-    return F.col("op").isin("t", "m")
-
-
-@built_once
-def _not_schema_op():
-    return F.col("op").isNull() | (F.col("op") != "m")
-
-
-@built_once
-def _row_count():
-    return F.count(F.lit(1)).alias("n")
-
-
-@built_once
-def _flat_projection() -> list:
-    return [
-        F.col("key.repo").alias("repo"),
-        F.col("key.path").alias("path"),
-        F.col("lsn"),
-        F.col("op"),
-        F.col("after"),
-        F.col("schema_version"),
-    ]
-
-
-@built_once
-def _frontier_aggs(partitions: int) -> list:
+def _frontier_aggs(partitions: int) -> str:
     """The offset-frontier Observation's aggregates: per source
     partition max LSN and event count, plus per-op and transaction
     counters for the JMX-metrics analogue
     (pipeline/metrics/traits/CommonEventMetricsMXBean.java,
-    StreamingMetricsMXBean.java) — one observation, zero extra jobs."""
-    aggs = [F.max("partition_id").alias("max_pid")]
+    StreamingMetricsMXBean.java) — one observation, zero extra jobs.
+    One struct ``m``, so the observation is built from one Column."""
+    aggs = ["max(partition_id) AS max_pid"]
     for p in range(partitions):
-        is_p = F.col("partition_id") == p
-        aggs.append(F.max(F.when(is_p, F.col("lsn"))).alias(f"max_{p}"))
-        aggs.append(F.count(F.when(is_p, True)).alias(f"cnt_{p}"))
+        aggs.append(f"max(CASE WHEN partition_id = {p} THEN lsn END) AS max_{p}")
+        aggs.append(f"count(CASE WHEN partition_id = {p} THEN true END) AS cnt_{p}")
     for opc in ("c", "u", "d", "r"):
-        aggs.append(F.count(F.when(F.col("op") == opc, True)).alias(f"op_{opc}"))
-    aggs.append(F.max("ts_ms").alias("max_source_ts"))
-    aggs.append(F.max_by(F.col("source.txId"), F.col("lsn")).alias("last_tx"))
-    aggs.append(F.min_by(F.col("source.txId"), F.col("lsn")).alias("first_tx"))
-    aggs.append(F.approx_count_distinct(F.col("source.txId")).alias("n_tx"))
-    return aggs
+        aggs.append(f"count(CASE WHEN op = '{opc}' THEN true END) AS op_{opc}")
+    aggs.append("max(ts_ms) AS max_source_ts")
+    aggs.append("max_by(source.txId, lsn) AS last_tx")
+    aggs.append("min_by(source.txId, lsn) AS first_tx")
+    aggs.append("approx_count_distinct(source.txId) AS n_tx")
+    return f"struct({', '.join(aggs)}) AS m"
 
 
-@built_once
-def _aligned(
-    cols_json: str, added_at: tuple[int, ...], present: tuple[str, ...]
-) -> list:
+def _aligned(columns: list[dict], added_at: list[int], present: list[str]) -> list[str]:
     """:meth:`Engine._align`'s projection for the lake schema
-    ``cols_json``, each column's ADD COLUMN version ``added_at`` (0 =
+    ``columns``, each column's ADD COLUMN version ``added_at`` (0 =
     base column) and the image fields ``present`` in the batch."""
-    cols = [F.col("op"), F.col("lsn")]
-    for c, va in zip(json.loads(cols_json), added_at):
-        p = c["physical"]
-        if p in ("repo", "path"):
-            cols.append(F.col(p).cast(c["type"]).alias(p))
-            continue
-        if p not in present:
+    cols = ["op", "lsn"]
+    for c, va in zip(columns, added_at):
+        p = _ident(c["physical"])
+        if c["physical"] in ("repo", "path"):
+            val = p
+        elif c["physical"] not in present:
             # columns removed by the column filter are absent from the
             # image struct — they land as NULL in the lake (never
             # captured)
-            cols.append(F.lit(None).cast(c["type"]).alias(p))
-            continue
-        val = F.col("after").getField(p)
-        if va > 0:
+            val = "NULL"
+        elif va > 0:
             # events predating the ADD COLUMN contribute the column's
             # DEFAULT (DefaultValueConverter semantics — a pre-alter
             # row reads as the default after the alter), NULL when none
             # is declared
-            val = F.when(F.col("schema_version") >= va, val).otherwise(
-                F.lit(c.get("default"))
+            val = (
+                f"CASE WHEN schema_version >= {va} THEN `after`.{p} "
+                f"ELSE {_literal(c.get('default'))} END"
             )
-        cols.append(val.cast(c["type"]).alias(p))
+        else:
+            val = f"`after`.{p}"
+        cols.append(f"CAST({val} AS {c['type']}) AS {p}")
     return cols
 
 
@@ -1533,7 +1501,7 @@ class Engine:
             + (["message"] if "message" in events.columns else [])
             + (["ts_ms"] if "ts_ms" in events.columns else [])
         )
-        ctl = events.filter(_control_op()).select(*ctl_cols).collect()
+        ctl = events.filter("op IN ('t', 'm')").select(*ctl_cols).collect()
         from debezium_spark.signals import parse_source_signal
 
         deferred_signals: list[dict] = []
@@ -1654,7 +1622,7 @@ class Engine:
         from pyspark.sql import Observation
 
         obs = Observation()
-        events = events.observe(obs, *_frontier_aggs(self.cfg.partitions))
+        events = events.observe(obs, F.expr(_frontier_aggs(self.cfg.partitions)))
         # No cache here: the single consumer is the merge, which
         # persists the aligned change rows; the observation fires when
         # its bucket-discovery job materializes that cache.
@@ -1666,10 +1634,10 @@ class Engine:
         #    state below it.
         ev = events
         if truncate_lsn is not None:
-            ev = ev.filter(F.col("lsn") > truncate_lsn)
+            ev = ev.filter(f"lsn > {truncate_lsn}")
         # schema-change events (op='m') were dispatched to the schema
         # path above — keep them out of the data pipeline
-        ev = ev.filter(_not_schema_op())
+        ev = ev.filter("op IS NULL OR op != 'm'")
         if self.cfg.table_include_regex:
             ev = table_filter(ev, include_regex=self.cfg.table_include_regex)
         if self.cfg.column_include_regex or self.cfg.column_exclude_regex:
@@ -1684,12 +1652,12 @@ class Engine:
                 always_keep=tuple(self.cfg.key_columns),
             )
         obs_pre_valid = Observation()
-        ev = ev.observe(obs_pre_valid, _row_count())
+        ev = ev.observe(obs_pre_valid, F.expr("count(1) AS n"))
         if self.cfg.error_mode == "dlq":
             self._write_dead_letters(ev, batch_id, phase)
         ev = enforce_valid(ev, self.cfg.error_mode)
         obs_post_valid = Observation()
-        ev = ev.observe(obs_post_valid, _row_count())
+        ev = ev.observe(obs_post_valid, F.expr("count(1) AS n"))
         ev = drop_tombstones(ev)
         if self.cfg.skipped_operations:
             ev = skip_operations(ev, self.cfg.skipped_operations)
@@ -1697,7 +1665,7 @@ class Engine:
             # PostProcessor SPI — see EngineConfig.post_processors
             ev = pp(ev)
         obs_survived = Observation()
-        ev = ev.observe(obs_survived, _row_count())
+        ev = ev.observe(obs_survived, F.expr("count(1) AS n"))
         ev = pk_change_split(ev, self.cfg.key_columns)
         ev = normalize_target_key(ev, self.cfg.key_columns)
 
@@ -1734,7 +1702,8 @@ class Engine:
                 m_empty[f"cnt_{p}"] = 0
             for opc in ("c", "u", "d", "r"):
                 m_empty[f"op_{opc}"] = 0
-            m = _obs_row(obs, m_empty)
+            m = _obs_row(obs, {"m": None})["m"]
+            m = m_empty if m is None else m.asDict()
             # a log generated with more partitions than cfg.partitions
             # would silently lose offsets/lineage for the overflow ids —
             # fail loudly instead (the frontier range is config-bounded)
@@ -1780,7 +1749,9 @@ class Engine:
 
         # the merge elects the LWW winner per key over the touched
         # buckets' state and these raw change rows
-        flat = ev.select(*_flat_projection())
+        flat = ev.selectExpr(
+            "key.repo AS repo", "key.path AS path", "lsn", "op", "`after`", "schema_version"
+        )
         result = self.lake.merge(
             self._align(flat),
             batch_id,
@@ -1832,12 +1803,8 @@ class Engine:
                 added_at.append(self.tracker.added_at_version(c["physical"]))
             except KeyError:
                 added_at.append(0)
-        return flat.select(
-            *_aligned(
-                columns_key(schema.columns),
-                tuple(added_at),
-                tuple(flat.schema["after"].dataType.names),
-            )
+        return flat.selectExpr(
+            *_aligned(schema.columns, added_at, flat.schema["after"].dataType.names)
         )
 
     # -- introspection ------------------------------------------------------

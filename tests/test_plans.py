@@ -845,3 +845,63 @@ def test_stream_setup_reads_the_log_footers_once(spark, tmp_path_factory):
     ]
     # a footer read is a one-stage job named after the parquet reader
     assert sum(name.startswith("parquet at ") for name in stages) == 1
+
+
+# Driver-thread Py4J round trips of one warm sparse batch below: 248
+# with expressions as SQL text, 252 with once-built cached Columns, and
+# 1,306 with Column trees rebuilt every batch (see CHANGES.md).
+WARM_BATCH_ROUND_TRIPS = 500
+
+
+def test_warm_sparse_batch_planning_round_trips(spark, tmp_path_factory):
+    """Building a batch's plan is Py4J traffic: a warm sparse stream
+    batch through ``Engine._apply_batch`` stays under a fixed number of
+    driver round trips (expressions go to Spark as SQL text)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from debezium_spark.generator import gen_source_table
+    from debezium_spark.streaming.engine import Engine, EngineConfig
+
+    d = tmp_path_factory.mktemp("roundtrips")
+    src, log = str(d / "src"), str(d / "log")
+    gen_source_table(spark, 5, 40).write.parquet(src)
+    gen_change_log(spark, 5, 40, n_events=400, snapshot_lsn_base=200).write.parquet(log)
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=log,
+            lake_root=str(d / "lake"),
+            source_table_path=src,
+            batch_lsn_span=32,
+            n_buckets=8,
+        ),
+    )
+    eng.run(max_batches=2)  # snapshot + two stream batches: warm
+
+    # the driver thread's round trips: py4j's finalizer thread frees
+    # Java objects whenever Python's GC lets it
+    counted = []
+    send = ClientServerConnection.send_command
+    apply = eng._apply_batch
+    driver = threading.get_ident()
+
+    def counting_send(self, command, *args, **kwargs):
+        counted[-1] += threading.get_ident() == driver
+        return send(self, command, *args, **kwargs)
+
+    def counting_apply(*args, **kwargs):
+        counted.append(0)
+        ClientServerConnection.send_command = counting_send
+        try:
+            return apply(*args, **kwargs)
+        finally:
+            ClientServerConnection.send_command = send
+
+    eng._apply_batch = counting_apply
+    res = eng.run(max_batches=1)[-1]
+    assert not res["skipped"] and res["batch_id"] == 3
+    assert any(e.get("deltas") for e in eng.lake.manifest()["files"].values())
+    print(f"warm sparse batch: {counted[-1]} round trips")
+    assert counted[-1] <= WARM_BATCH_ROUND_TRIPS

@@ -725,3 +725,66 @@ def test_add_and_widen_inside_one_batch_between_plain_batches(spark, tmp_root):
             n_sized += row["size_bytes"] is not None
         assert 0 < n_sized < len(got), run
         assert engine.lake.table_schema().col("size_bytes")["type"] == "bigint"
+
+
+def test_column_name_with_backtick_and_default_with_quotes(spark, tmp_root):
+    """Identifiers and literals reach Spark as SQL text: a column named
+    ``a`b`` whose default holds a quote and a backslash must survive
+    the merge (copy-on-write and delta), the state read (pre-add rows
+    read the default), the change feed and the engine's alignment."""
+    from debezium_spark.lake import LakeTable
+
+    col, default, value = "a`b", "it's \\ d", "x'y`z"
+    add = {
+        "change_type": "ALTER_ADD_COLUMN",
+        "column_name": col,
+        "new_type": "string",
+        "default": default,
+        "schema_version": 1,
+        "lsn": 3,
+    }
+    root = os.path.join(tmp_root, "lake")
+    lake = LakeTable(spark, root, n_buckets=2)
+    lake.create()
+    base = "repo string, path string, commit string, lang string, content string"
+    lake.merge(
+        spark.createDataFrame(
+            [("r", "a", "c1", "py", "x", "c", 1), ("r", "k", "c1", "go", "x", "c", 2)],
+            f"{base}, op string, lsn long",
+        ),
+        1,
+    )
+    lake.apply_schema_change(add)
+    v_add = lake.current_version()
+    ddl = f"{base}, `a``b` string, op string, lsn long"
+    lake.merge(spark.createDataFrame([("r", "b", "c2", "py", "y", value, "c", 4)], ddl), 2)
+    # one key of a bucket that has a base file: written as a delta and
+    # read merge-on-read
+    lake.merge(spark.createDataFrame([("r", "a", "c3", "py", "z", None, "u", 6)], ddl), 3)
+    assert any(e.get("deltas") for e in lake.manifest()["files"].values())
+    state = {r["path"]: r[col] for r in lake.read_state().collect()}
+    assert state == {"a": None, "k": default, "b": value}
+
+    feed = {r["path"]: r for r in lake.table_changes(v_add).collect()}
+    assert sorted(feed) == ["a", "b"]
+    assert feed["b"]["op"] == "c" and feed["b"]["after"][col] == value
+    assert feed["a"]["op"] == "u"
+    assert feed["a"]["before"][col] == default and feed["a"]["after"][col] is None
+
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=os.path.join(tmp_root, "log"),
+            lake_root=root,
+            n_buckets=2,
+            schema_changes=[add],
+        ),
+    )
+    after = "repo string, path string, `a``b` string"
+    flat = spark.createDataFrame(
+        [("r", "d", 8, "c", ("r", "d", "old"), 0), ("r", "e", 10, "c", ("r", "e", value), 1)],
+        f"repo string, path string, lsn long, op string, after struct<{after}>, "
+        "schema_version int",
+    )
+    aligned = {r["path"]: r[col] for r in eng._align(flat).collect()}
+    assert aligned == {"d": default, "e": value}

@@ -54,3 +54,38 @@ def test_oversized_conf_heap_fails_before_the_jvm_launches(host_15g):
 
 def test_host_memory_is_read():
     assert session.host_memory_mb() > 0
+
+
+class _RecordingBuilder:
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        class _Session:
+            class sparkContext:
+                @staticmethod
+                def setLogLevel(_):
+                    pass
+
+        return _Session()
+
+
+def test_builder_turns_off_call_site_capture(host_15g, monkeypatch):
+    """PySpark reads the flag once per process, at the first Column it
+    builds, so the session builder is where it must be set."""
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(
+        session, "SparkSession", type("_S", (), {"builder": builder})
+    )
+    session.get_spark("flag", cores=1)
+    assert builder.conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
