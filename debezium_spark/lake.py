@@ -51,26 +51,6 @@ from debezium_spark.operators.compaction import compact, elect_sources
 from debezium_spark.schema_evolution import TableSchema
 
 
-def _ident(name: str) -> str:
-    """A SQL identifier: backtick-quoted, embedded backticks doubled."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _literal(value) -> str:
-    """A SQL literal for a JSON scalar (a column default): ``NULL``, a
-    boolean, a number (a float as a DOUBLE, like ``F.lit``) or a string
-    quoted with ``\\`` and ``'`` escaped."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return "TRUE" if value else "FALSE"
-    if isinstance(value, int):
-        return str(value)
-    if isinstance(value, float):
-        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
-    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _bucket_expr(n_buckets: int) -> str:
     """A key's bucket (existing lakes are partitioned by exactly this)."""
     return f"CAST(pmod(xxhash64(repo, path), {n_buckets}) AS INT)"
@@ -184,6 +164,26 @@ def _fold_plan(
 def _is_data_dir(name: str) -> bool:
     """A bucket's base directory or a batch's delta directory."""
     return name.startswith("bucket=") or name == "delta"
+
+
+def _ident(name: str) -> str:
+    """A SQL identifier: backtick-quoted, embedded backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _literal(value) -> str:
+    """A SQL literal for a JSON scalar (a column default): ``NULL``, a
+    boolean, a number (a float as a DOUBLE, like ``F.lit``) or a string
+    quoted with ``\\`` and ``'`` escaped."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return f"{value!r}D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _bucket_in(buckets: list[int]) -> str:
@@ -378,27 +378,26 @@ class LakeTable:
                 + [f"{_ident(n)} {t}" for n, t in sys_cols]
             )
             return self.spark.createDataFrame([], ddl)
-        cur = schema.columns
         plain = [e for e in entries.values() if not e.get("deltas")]
         merged = {b: e for b, e in entries.items() if e.get("deltas")}
         parts = []
         if plain:
             parts.extend(
-                self._scan(plain, cur, logical, with_sys, self.retain_tombstones)
+                self._scan(plain, schema.columns, logical, with_sys, self.retain_tombstones)
             )
         if merged:
-            parts.append(self._read_merged(merged, cur, logical, with_sys))
+            parts.append(self._read_merged(merged, schema.columns, logical, with_sys))
         return _union(parts)
 
     def _scan(
         self,
         entries: list[dict],
-        cur: list[dict],
+        columns: list[dict],
         logical: bool,
         with_sys: bool,
         retain_tombstones: bool,
     ) -> list[DataFrame]:
-        """The base files of ``entries`` as the table schema ``cur``:
+        """The base files of ``entries`` as the table schema ``columns``:
         one scan per physical file schema, every file read with the
         schema of the manifest that wrote it, so no footer is
         inferred."""
@@ -411,7 +410,7 @@ class LakeTable:
         parts = []
         for file_cols, paths in by_schema.items():
             read_ddl, keep, project = _state_projection(
-                file_cols, cur, logical, with_sys, retain_tombstones
+                file_cols, columns, logical, with_sys, retain_tombstones
             )
             df = self.spark.read.schema(read_ddl).parquet(*paths)
             if keep is not None:
@@ -420,7 +419,7 @@ class LakeTable:
         return parts
 
     def _read_merged(
-        self, entries: dict[int, dict], cur: list[dict], logical: bool, with_sys: bool
+        self, entries: dict[int, dict], columns: list[dict], logical: bool, with_sys: bool
     ) -> DataFrame:
         """Buckets that list deltas: their base files and the rows of
         their deltas, combined by :func:`elect_sources` (merge-on-read).
@@ -450,7 +449,7 @@ class LakeTable:
             if group:
                 bases.extend(
                     df.selectExpr("*", "0 AS _src", f"{_literal(kept)} AS _tombstones")
-                    for df in self._scan(group, cur, False, True, True)
+                    for df in self._scan(group, columns, False, True, True)
                 )
         listed = {
             d["path"]: d["version"] for e in entries.values() for d in e["deltas"]
@@ -479,7 +478,7 @@ class LakeTable:
         deltas = []
         for file_cols, paths in by_schema.items():
             read_ddl, _, project = _state_projection(
-                file_cols, cur, False, True, True
+                file_cols, columns, False, True, True
             )
             deltas.append(
                 self.spark.read.schema(read_ddl + ", `bucket` int, `_version` int")
@@ -490,7 +489,7 @@ class LakeTable:
                 )
             )
         keep, project = _merged_output(
-            cur, logical, with_sys, self.retain_tombstones
+            columns, logical, with_sys, self.retain_tombstones
         )
         won = elect_sources(_union(bases + deltas), self.retain_tombstones)
         if keep is not None:

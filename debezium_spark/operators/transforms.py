@@ -184,12 +184,12 @@ def pk_change_split(
         ) + ")"
 
     delete_part = ev(
-        op=f"{_literal(OP_DELETE)}",
+        op=_literal(OP_DELETE),
         after=f"CAST(NULL AS {_sql_type(schema['after'].dataType)})",
         key=_image_key("before", key_columns),
     )
     create_part = ev(
-        op=f"{_literal(OP_CREATE)}",
+        op=_literal(OP_CREATE),
         lsn="lsn + 1",
         before=f"CAST(NULL AS {_sql_type(schema['before'].dataType)})",
         key=_image_key("after", key_columns),
@@ -284,9 +284,11 @@ def dead_letter_records(
 
     Pure scan→filter→project (codegen, no shuffle): at scale this is
     the produce-to-DLQ-topic side channel, not a join."""
-    def first_rule(pick) -> str:
+
+    def first_match(field: int) -> str:
+        # field 0 is a rule's stage, 1 its message
         whens = " ".join(
-            f"WHEN {pred} THEN {_literal(pick(st, m))}" for st, m, pred in _INVALID_RULES
+            f"WHEN {r[2]} THEN {_literal(r[field])}" for r in _INVALID_RULES
         )
         return f"CASE {whens} ELSE CAST(NULL AS STRING) END"
 
@@ -296,9 +298,9 @@ def dead_letter_records(
         ("offset", "CAST(lsn AS STRING)"),
         ("connector.name", _literal(connector)),
         ("task.id", _literal(str(task_id))),
-        ("stage", first_rule(lambda st, m: st)),
+        ("stage", first_match(0)),
         ("exception.class.name", _literal(DLQ_EXCEPTION_CLASS)),
-        ("exception.message", first_rule(lambda st, m: m)),
+        ("exception.message", first_match(1)),
     ]
     headers = "map(" + ", ".join(
         f"{_literal('__connect.errors.' + k)}, {v}" for k, v in entries
