@@ -903,5 +903,4 @@ def test_warm_sparse_batch_planning_round_trips(spark, tmp_path_factory):
     res = eng.run(max_batches=1)[-1]
     assert not res["skipped"] and res["batch_id"] == 3
     assert any(e.get("deltas") for e in eng.lake.manifest()["files"].values())
-    print(f"warm sparse batch: {counted[-1]} round trips")
     assert counted[-1] <= WARM_BATCH_ROUND_TRIPS
