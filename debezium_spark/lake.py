@@ -401,14 +401,8 @@ class LakeTable:
         one scan per physical file schema, every file read with the
         schema of the manifest that wrote it, so no footer is
         inferred."""
-        by_schema: dict[tuple, list[str]] = {}
-        for e in entries:
-            written = self.manifest(e["version"])["schema"]
-            by_schema.setdefault(
-                tuple((c["physical"], c["type"]) for c in written), []
-            ).append(os.path.join(self.root, e["path"]))
         parts = []
-        for file_cols, paths in by_schema.items():
+        for file_cols, paths in self._by_writer_schema(entries).items():
             read_ddl, keep, project = _state_projection(
                 file_cols, columns, logical, with_sys, retain_tombstones
             )
@@ -469,13 +463,10 @@ class LakeTable:
             if not_retained
             else "true"
         )
-        by_schema: dict[tuple, list[str]] = {}
-        for path, version in sorted(listed.items()):
-            written = self.manifest(version)["schema"]
-            by_schema.setdefault(
-                tuple((c["physical"], c["type"]) for c in written), []
-            ).append(os.path.join(self.root, path))
         deltas = []
+        by_schema = self._by_writer_schema(
+            {"path": p, "version": v} for p, v in sorted(listed.items())
+        )
         for file_cols, paths in by_schema.items():
             read_ddl, _, project = _state_projection(
                 file_cols, columns, False, True, True
@@ -495,6 +486,18 @@ class LakeTable:
         if keep is not None:
             won = won.filter(keep)
         return won.selectExpr(*project)
+
+    def _by_writer_schema(self, files) -> dict[tuple, list[str]]:
+        """The paths of ``files`` (``path``/``version`` entries: bases or
+        deltas) grouped by the ``(physical, type)`` columns of the
+        schema whose commit wrote them."""
+        groups: dict[tuple, list[str]] = {}
+        for f in files:
+            written = self.manifest(f["version"])["schema"]
+            groups.setdefault(
+                tuple((c["physical"], c["type"]) for c in written), []
+            ).append(os.path.join(self.root, f["path"]))
+        return groups
 
     def _on_disk(self) -> list[int]:
         return sorted(
@@ -641,41 +644,15 @@ class LakeTable:
         ]
         if not touched:
             return {"purged_buckets": [], "version": man["version"]}
-        new_version = man["version"] + 1
         keep = self.read_state(
             buckets=touched, logical=False, with_sys=True
         ).filter(f"NOT ({dead})")
-        out_dir = os.path.join(self.root, f"data/v{new_version}")
-        (
-            keep.withColumn("bucket", self._bucket_col())
-            .repartition(max(len(touched), 1), "bucket")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        written = {
-            int(n.split("=")[1])
-            for n in os.listdir(out_dir)
-            if n.startswith("bucket=")
-        }
         files = dict(man["files"])
-        for b in touched:
-            if b in written:
-                files[str(b)] = {
-                    "path": f"data/v{new_version}/bucket={b}",
-                    "version": new_version,
-                }
-            else:
-                files.pop(str(b), None)
-        manifest = {
-            **man,
-            "version": new_version,
-            "files": files,
-            "metrics": {"tombstone_purge_below": below_lsn},
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest)
-        return {"purged_buckets": sorted(touched), "version": new_version}
+        self._write_buckets(keep, man["version"] + 1, touched, files)
+        manifest = self._commit(
+            man, {"tombstone_purge_below": below_lsn}, files=files
+        )
+        return {"purged_buckets": sorted(touched), "version": manifest["version"]}
 
     def rebucket(self, new_n_buckets: int) -> dict:
         """Partition-spec evolution: rewrite the table under a new
@@ -700,39 +677,19 @@ class LakeTable:
         if new_n_buckets == old_n:
             return {"version": man["version"], "n_buckets": old_n}
         state = self.read_state(logical=False, with_sys=True)
-        new_version = man["version"] + 1
-        out_dir = os.path.join(self.root, f"data/v{new_version}")
+        files: dict = {}
         self.n_buckets = new_n_buckets
         try:
-            (
-                state.withColumn("bucket", self._bucket_col())
-                .repartition(new_n_buckets, "bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(out_dir)
+            self._write_buckets(
+                state, man["version"] + 1, list(range(new_n_buckets)), files
             )
         except Exception:
             self.n_buckets = old_n
             raise
-        files = {
-            str(int(n.split("=")[1])): {
-                "path": f"data/v{new_version}/bucket={int(n.split('=')[1])}",
-                "version": new_version,
-            }
-            for n in sorted(os.listdir(out_dir))
-            if n.startswith("bucket=")
-        }
-        manifest = {
-            **man,
-            "version": new_version,
-            "batch_id": None,
-            "files": files,
-            "n_buckets": new_n_buckets,
-            "metrics": {"rebucket_from": old_n, "rebucket_to": new_n_buckets},
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest)
-        return {"version": new_version, "n_buckets": new_n_buckets}
+        manifest = self._commit(
+            man, {"rebucket_from": old_n, "rebucket_to": new_n_buckets}, files=files
+        )
+        return {"version": manifest["version"], "n_buckets": new_n_buckets}
 
     def table_changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Incremental read of the committed NET changes between two
@@ -822,7 +779,6 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_id: int,
-        metrics: dict | None = None,
         frontier_fn=None,
         phase: str = "stream",
         truncate_lsn: int | None = None,
@@ -895,42 +851,25 @@ class LakeTable:
             .collect()
         )
         keys_in = {r["bucket"]: r["keys"] for r in rows}
-        n_changes = int(sum(keys_in.values()))
+        metrics = {"phase": phase}
         offsets, lineage_rows = {}, None
         if frontier_fn is not None:
             offsets, lineage_rows, n_events, counters = frontier_fn()
-            metrics = {**(metrics or {}), "events": n_events, **counters}
+            metrics.update(events=n_events, **counters)
+        metrics["changes"] = int(sum(keys_in.values()))
         files = dict(man["files"])
         rewrite, delta = _fold_plan(files, keys_in, truncate_lsn is not None)
-        out_dir = os.path.join(self.root, f"data/v{new_version}")
         if rewrite:
             cow = changes if not delta else changes.filter(_bucket_in(rewrite))
             old = self.read_state(buckets=rewrite, logical=False, with_sys=True)
             if truncate_lsn is not None:
                 old = old.filter(f"_lsn > {truncate_lsn}")
-            new_state = compact(
-                cow.drop("bucket"), old, self.retain_tombstones
-            ).withColumn("bucket", self._bucket_col())
-            (
-                new_state.repartition(len(rewrite), "bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(out_dir)
+            self._write_buckets(
+                compact(cow.drop("bucket"), old, self.retain_tombstones),
+                new_version,
+                rewrite,
+                files,
             )
-            written = {
-                int(n.split("=")[1])
-                for n in os.listdir(out_dir)
-                if n.startswith("bucket=")
-            }
-            for b in rewrite:
-                if b in written:
-                    files[str(b)] = {
-                        "path": f"data/v{new_version}/bucket={b}",
-                        "version": new_version,
-                    }
-                else:
-                    # bucket emptied out entirely (all keys deleted)
-                    files.pop(str(b), None)
         if delta:
             # after the rewrite: its overwrite clears data/v{N}
             sparse = changes if not rewrite else changes.filter(_bucket_in(delta))
@@ -944,7 +883,7 @@ class LakeTable:
                 .coalesce(1)
                 .sortWithinPartitions("bucket")
                 .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, "delta"))
+                .parquet(os.path.join(self.root, f"data/v{new_version}/delta"))
             )
             ref = {"path": f"data/v{new_version}/delta", "version": new_version}
             for b in delta:
@@ -952,30 +891,79 @@ class LakeTable:
                 files[str(b)] = {**e, "deltas": [*e.get("deltas", ()), ref]}
         changes.unpersist()
 
-        new_offsets = dict(man["offsets"])
-        for k, v in offsets.items():
-            new_offsets[str(k)] = max(int(v), int(new_offsets.get(str(k), -1)))
-        phase_ids = {**man.get("last_batch_ids", {}), phase: batch_id}
-        manifest = {
-            "version": new_version,
-            "batch_id": batch_id,
-            "last_batch_id": max(int(man["last_batch_id"]), batch_id),
-            "last_batch_ids": phase_ids,
-            "files": files,
-            "n_buckets": self.n_buckets,
-            "schema": schema.columns,
-            "schema_version": schema.version,
-            "offsets": new_offsets,
-            "metrics": {**(metrics or {}), "changes": n_changes},
-            "retain_tombstones": self.retain_tombstones,
-            "ts": time.time(),
-        }
         # lineage first: until the manifest commits it, :meth:`lineage`
         # hides the file, and a rerun of the batch rewrites it
         if lineage_rows:
             self._append_lineage(batch_id, lineage_rows, phase)
-        self._write_manifest(manifest)
+        self._commit(
+            man, metrics, files=files, offsets=offsets, batch_id=batch_id, phase=phase
+        )
         return {"skipped": False, "version": new_version, "batch_id": batch_id}
+
+    def _write_buckets(
+        self, state: DataFrame, version: int, buckets: list[int], files: dict
+    ) -> None:
+        """Write ``state`` (physical and system columns) as the base
+        files of ``buckets`` under ``data/v{version}``, one shuffle
+        partition per bucket, and point ``files`` (a manifest's file
+        map) at them. A bucket that gets no rows leaves ``files``."""
+        out_dir = os.path.join(self.root, f"data/v{version}")
+        (
+            state.withColumn("bucket", self._bucket_col())
+            .repartition(len(buckets), "bucket")
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(out_dir)
+        )
+        written = {
+            int(n.split("=")[1]) for n in os.listdir(out_dir) if n.startswith("bucket=")
+        }
+        for b in buckets:
+            if b in written:
+                files[str(b)] = {"path": f"data/v{version}/bucket={b}", "version": version}
+            else:
+                files.pop(str(b), None)
+
+    def _commit(
+        self,
+        man: dict,
+        metrics: dict,
+        files: dict | None = None,
+        schema: TableSchema | None = None,
+        offsets: dict | None = None,
+        batch_id: int | None = None,
+        phase: str | None = None,
+    ) -> dict:
+        """Commit the version after ``man`` (the head it was planned
+        on) and return its manifest. What is not given carries
+        forward; ``offsets`` raise the per-partition offsets they name.
+        A batch commit (``batch_id``) advances the global fence and
+        ``phase``'s; any other commit records ``batch_id: None`` and
+        carries every fence forward."""
+        fences = man.get("last_batch_ids", {})
+        last = int(man["last_batch_id"])
+        if batch_id is not None:
+            fences, last = {**fences, phase: batch_id}, max(last, batch_id)
+        new_offsets = dict(man["offsets"])
+        for k, v in (offsets or {}).items():
+            new_offsets[str(k)] = max(int(v), int(new_offsets.get(str(k), -1)))
+        schema = schema or TableSchema(man["schema"], man["schema_version"])
+        manifest = {
+            "version": man["version"] + 1,
+            "batch_id": batch_id,
+            "last_batch_id": last,
+            "last_batch_ids": fences,
+            "files": man["files"] if files is None else files,
+            "n_buckets": self.n_buckets,
+            "schema": schema.columns,
+            "schema_version": schema.version,
+            "offsets": new_offsets,
+            "metrics": metrics,
+            "retain_tombstones": self.retain_tombstones,
+            "ts": time.time(),
+        }
+        self._write_manifest(manifest)
+        return manifest
 
     # perfbench/trace.py looks this name up; re-point the trace, then delete
     merge_full = merge
@@ -987,18 +975,11 @@ class LakeTable:
         reference: schema-history replay,
         ``relational/history/SchemaHistory.java:34-101``)."""
         man = self.manifest()
-        schema = self.table_schema().apply_change(change)
-        manifest = {
-            **man,
-            "version": man["version"] + 1,
-            "batch_id": None,
-            "schema": schema.columns,
-            "schema_version": schema.version,
-            "metrics": {"schema_change": change["change_type"]},
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest)
-        return manifest
+        return self._commit(
+            man,
+            {"schema_change": change["change_type"]},
+            schema=self.table_schema().apply_change(change),
+        )
 
     # -- offsets / lineage -------------------------------------------------
     def committed_offsets(self) -> dict[int, int]:

@@ -35,14 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from debezium_spark.envelope import OP_READ, SNAPSHOT_INCREMENTAL
-from debezium_spark.generator import BASE_TS_MS, TABLE_NAME
-
-_ROW_DDL = (
-    "struct<repo:string,path:string,commit:string,lang:string,"
-    "content:string,size_bytes:bigint>"
-)
-
+from debezium_spark.envelope import SNAPSHOT_INCREMENTAL
+from debezium_spark.generator import TABLE_NAME
+from debezium_spark.sources.snapshot import read_envelopes
 
 PK_COLS = ("repo", "path")
 
@@ -158,16 +153,6 @@ def read_chunk_range(
     return source.filter(in_range & ~null_key)
 
 
-_ROW_FIELD_TYPES = (
-    ("repo", "string"),
-    ("path", "string"),
-    ("commit", "string"),
-    ("lang", "string"),
-    ("content", "string"),
-    ("size_bytes", "bigint"),
-)
-
-
 def chunk_envelopes(
     chunk: DataFrame,
     watermark_lsn: int,
@@ -184,29 +169,11 @@ def chunk_envelopes(
     revert them to NULL); absent fields are NULL. ``schema_version``
     should be the engine's current version so evolved columns pass the
     mixed-schema gate."""
-    present = set(chunk.columns)
-    after = F.struct(
-        *[
-            (
-                F.col(f).cast(t) if f in present else F.lit(None).cast(t)
-            ).alias(f)
-            for f, t in _ROW_FIELD_TYPES
-        ]
-    )
-    return chunk.select(
-        F.pmod(F.xxhash64("repo"), partitions).cast("int").alias("partition_id"),
-        F.lit(watermark_lsn).cast("bigint").alias("lsn"),
-        F.lit(OP_READ).alias("op"),
-        F.struct(F.col("repo"), F.col("path")).alias("key"),
-        F.lit(None).cast(_ROW_DDL).alias("before"),
-        after.alias("after"),
-        F.struct(
-            F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
-            F.lit(SNAPSHOT_INCREMENTAL).alias("snapshot"),
-            F.lit(-1).cast("bigint").alias("txId"),
-            F.lit(table).alias("table"),
-        ).alias("source"),
-        F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
-        F.lit(int(schema_version)).cast("int").alias("schema_version"),
-        F.lit(False).alias("is_tombstone"),
+    return read_envelopes(
+        chunk,
+        watermark_lsn,
+        F.lit(SNAPSHOT_INCREMENTAL),
+        partitions,
+        table,
+        schema_version,
     )

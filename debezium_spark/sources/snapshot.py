@@ -20,31 +20,59 @@ The first/last markers are computed from global min/max key aggregates
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from debezium_spark.envelope import (
     OP_READ,
+    ROW_SCHEMA,
     SNAPSHOT_FIRST,
     SNAPSHOT_LAST,
     SNAPSHOT_TRUE,
 )
 from debezium_spark.generator import BASE_TS_MS, TABLE_NAME
 
-_ROW_DDL = (
-    "struct<repo:string,path:string,commit:string,lang:string,"
-    "content:string,size_bytes:bigint>"
-)
 
-
-_ROW_FIELD_TYPES = (
-    ("repo", "string"),
-    ("path", "string"),
-    ("commit", "string"),
-    ("lang", "string"),
-    ("content", "string"),
-    ("size_bytes", "bigint"),
-)
+def read_envelopes(
+    rows: DataFrame,
+    lsn: int,
+    snapshot: Column,
+    partitions: int,
+    table: str,
+    schema_version: int,
+) -> DataFrame:
+    """READ (``op='r'``) envelopes for ``rows`` at ``lsn``, with the
+    ``source.snapshot`` marker ``snapshot`` — the one builder behind the
+    initial and the incremental snapshot. The after image carries every
+    row field ``rows`` provides; absent ones are NULL."""
+    present = set(rows.columns)
+    after = F.struct(
+        *[
+            (
+                F.col(f.name).cast(f.dataType)
+                if f.name in present
+                else F.lit(None).cast(f.dataType)
+            ).alias(f.name)
+            for f in ROW_SCHEMA
+        ]
+    )
+    return rows.select(
+        F.pmod(F.xxhash64("repo"), partitions).cast("int").alias("partition_id"),
+        F.lit(lsn).cast("bigint").alias("lsn"),
+        F.lit(OP_READ).alias("op"),
+        F.struct(F.col("repo"), F.col("path")).alias("key"),
+        F.lit(None).cast(ROW_SCHEMA).alias("before"),
+        after.alias("after"),
+        F.struct(
+            F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
+            snapshot.alias("snapshot"),
+            F.lit(-1).cast("bigint").alias("txId"),
+            F.lit(table).alias("table"),
+        ).alias("source"),
+        F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
+        F.lit(int(schema_version)).cast("int").alias("schema_version"),
+        F.lit(False).alias("is_tombstone"),
+    )
 
 
 def snapshot_envelopes(
@@ -67,29 +95,4 @@ def snapshot_envelopes(
         .when(keystr == bounds["hi"], F.lit(SNAPSHOT_LAST))
         .otherwise(F.lit(SNAPSHOT_TRUE))
     )
-    present = set(source.columns)
-    after = F.struct(
-        *[
-            (
-                F.col(f).cast(t) if f in present else F.lit(None).cast(t)
-            ).alias(f)
-            for f, t in _ROW_FIELD_TYPES
-        ]
-    )
-    return source.select(
-        F.pmod(F.xxhash64("repo"), partitions).cast("int").alias("partition_id"),
-        F.lit(0).cast("bigint").alias("lsn"),
-        F.lit(OP_READ).alias("op"),
-        F.struct(F.col("repo"), F.col("path")).alias("key"),
-        F.lit(None).cast(_ROW_DDL).alias("before"),
-        after.alias("after"),
-        F.struct(
-            F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
-            marker.alias("snapshot"),
-            F.lit(-1).cast("bigint").alias("txId"),
-            F.lit(table).alias("table"),
-        ).alias("source"),
-        F.lit(BASE_TS_MS).cast("bigint").alias("ts_ms"),
-        F.lit(0).cast("int").alias("schema_version"),
-        F.lit(False).alias("is_tombstone"),
-    )
+    return read_envelopes(source, 0, marker, partitions, table, 0)

@@ -248,8 +248,9 @@ class StopEngine(Exception):
 
 def await_stream(query, engines) -> None:
     """Wait for a streaming front-end's query. A ``StopEngine`` raised
-    by one of ``engines``' batch callbacks ends it gracefully and marks
-    that engine stopped; any other failure propagates."""
+    by one of ``engines``' callbacks (``batch_callback`` or
+    ``heartbeat_action``) ends it gracefully and marks that engine
+    stopped; any other failure propagates."""
     for eng in engines:
         eng._stop_requested = False
     try:
@@ -262,24 +263,24 @@ def await_stream(query, engines) -> None:
             eng._stopped = True
 
 
-def _frontier_aggs(partitions: int) -> str:
-    """The offset-frontier Observation's aggregates: per source
-    partition max LSN and event count, plus per-op and transaction
-    counters for the JMX-metrics analogue
+def _frontier_aggs(partitions: int) -> dict[str, tuple[str, int | None]]:
+    """The offset-frontier Observation's aggregates, ``name ->
+    (aggregate, its value over zero rows)``: per source partition max
+    LSN and event count, plus per-op and transaction counters for the
+    JMX-metrics analogue
     (pipeline/metrics/traits/CommonEventMetricsMXBean.java,
-    StreamingMetricsMXBean.java) — one observation, zero extra jobs.
-    One struct ``m``, so the observation is built from one Column."""
-    aggs = ["max(partition_id) AS max_pid"]
+    StreamingMetricsMXBean.java) — one observation, zero extra jobs."""
+    aggs: dict[str, tuple[str, int | None]] = {"max_pid": ("max(partition_id)", None)}
     for p in range(partitions):
-        aggs.append(f"max(CASE WHEN partition_id = {p} THEN lsn END) AS max_{p}")
-        aggs.append(f"count(CASE WHEN partition_id = {p} THEN true END) AS cnt_{p}")
+        aggs[f"max_{p}"] = (f"max(CASE WHEN partition_id = {p} THEN lsn END)", None)
+        aggs[f"cnt_{p}"] = (f"count(CASE WHEN partition_id = {p} THEN true END)", 0)
     for opc in ("c", "u", "d", "r"):
-        aggs.append(f"count(CASE WHEN op = '{opc}' THEN true END) AS op_{opc}")
-    aggs.append("max(ts_ms) AS max_source_ts")
-    aggs.append("max_by(source.txId, lsn) AS last_tx")
-    aggs.append("min_by(source.txId, lsn) AS first_tx")
-    aggs.append("approx_count_distinct(source.txId) AS n_tx")
-    return f"struct({', '.join(aggs)}) AS m"
+        aggs[f"op_{opc}"] = (f"count(CASE WHEN op = '{opc}' THEN true END)", 0)
+    aggs["max_source_ts"] = ("max(ts_ms)", None)
+    aggs["last_tx"] = ("max_by(source.txId, lsn)", None)
+    aggs["first_tx"] = ("min_by(source.txId, lsn)", None)
+    aggs["n_tx"] = ("approx_count_distinct(source.txId)", 0)
+    return aggs
 
 
 def _aligned(columns: list[dict], added_at: list[int], present: list[str]) -> list[str]:
@@ -732,21 +733,15 @@ class Engine:
         return source
 
     # -- streaming phase (batches 1..N) ----------------------------------
-    def stream(
-        self,
-        max_batches: int | None = None,
-        crash_after_batches: int | None = None,
-    ) -> list[dict]:
+    def stream(self, max_batches: int | None = None) -> list[dict]:
         """Batch-replay loop over the LSN-ordered log. Deterministic
         batch boundaries (lsn windows) make restart resume exact: batch
         k covers ``[lo + k*span, lo + (k+1)*span)``; resume starts at
         ``last_batch_id`` (re-running a half-applied batch is safe —
-        fenced + LSN-guarded).
-
-        ``crash_after_batches`` injects a crash right after the Nth
-        batch's merge commit and BEFORE any offset flush — the
-        "merge committed, offsets not flushed" window the PERIODIC
-        commit policy exposes (EmbeddedEngine.java:815-836)."""
+        fenced + LSN-guarded). Each batch runs :meth:`_after_commit`
+        before the offset flush, so an exception from ``batch_callback``
+        leaves the "merge committed, offsets not flushed" window the
+        PERIODIC commit policy exposes (EmbeddedEngine.java:815-836)."""
         if self.cfg.snapshot_mode == "initial_only":
             return []
         # one footer read per call, not per batch: signal recovery, the
@@ -812,22 +807,12 @@ class Engine:
             k += 1
             n_done += 1
             try:
-                if (
-                    self.cfg.heartbeat_interval_batches
-                    and n_done % self.cfg.heartbeat_interval_batches == 0
-                ):
-                    self._emit_heartbeat(k)
-                if self.cfg.batch_callback is not None:
-                    self.cfg.batch_callback(self, results[-1])
+                self._after_commit(results[-1], k, n_done)
             except StopEngine:
                 # graceful: this batch's commit stands, the loop exit
                 # below flushes offsets, run() reports success
                 self._stopped = True
                 break
-            if crash_after_batches is not None and n_done >= crash_after_batches:
-                raise RuntimeError(
-                    "injected crash: merge committed, offsets not flushed"
-                )
             if store is not None and (
                 self.cfg.offset_commit_policy == "always"
                 or n_done % self.cfg.offset_flush_interval_batches == 0
@@ -840,6 +825,20 @@ class Engine:
         if store is not None and k > flushed_through:
             store.flush(k, self.lake.committed_offsets())
         return results
+
+    def _after_commit(self, result: dict, batch_id: int, ordinal: int) -> None:
+        """The step after each stream batch's merge commit, in every
+        front-end: the heartbeat every ``heartbeat_interval_batches``
+        batches (``ordinal`` counts this run's batches from 1), then
+        ``batch_callback``. A ``StopEngine`` from either propagates for
+        the front-end to stop gracefully; it runs before the offset
+        flush or checkpoint, so any other exception is a crash in the
+        "merge committed, position not recorded" window."""
+        interval = self.cfg.heartbeat_interval_batches
+        if interval and ordinal % interval == 0:
+            self._emit_heartbeat(batch_id)
+        if self.cfg.batch_callback is not None:
+            self.cfg.batch_callback(self, result)
 
     def _emit_heartbeat(self, batch_id: int) -> None:
         """Append one heartbeat record (HeartbeatImpl.forcedBeat shape:
@@ -1372,10 +1371,7 @@ class Engine:
 
     # -- structured-streaming front-end -----------------------------------
     def run_streaming(
-        self,
-        checkpoint_dir: str,
-        max_files_per_trigger: int = 1,
-        crash_after_batches: int | None = None,
+        self, checkpoint_dir: str, max_files_per_trigger: int = 1
     ) -> None:
         """Drive the same apply through Structured Streaming
         ``foreachBatch`` (file source over the log directory). Epoch ids
@@ -1383,11 +1379,11 @@ class Engine:
         exactly-once across restarts. Used when the log arrives
         incrementally rather than as a replayable table.
 
-        ``crash_after_batches`` injects a crash right after the Nth
-        batch's merge commit but BEFORE its checkpoint commit — the
+        An exception from ``batch_callback`` kills the query after the
+        epoch's merge commit but BEFORE its checkpoint commit — the
         at-least-once window Structured Streaming re-delivers on
-        restart; the fence must turn the re-delivery into a no-op
-        (the reference's stop/restart-mid-stream tests,
+        restart; the fence turns the re-delivery into a no-op (the
+        reference's stop/restart-mid-stream tests,
         embedded/AbstractConnectorTest.java:243-330)."""
         self._recover_source_signals()
         stream = stream_changelog(
@@ -1398,13 +1394,6 @@ class Engine:
         def apply(batch_df: DataFrame, epoch_id: int) -> None:
             applied["n"] += 1
             self._apply_stream_epoch(batch_df, int(epoch_id) + 1, applied["n"])
-            if (
-                crash_after_batches is not None
-                and applied["n"] >= crash_after_batches
-            ):
-                raise RuntimeError(
-                    "injected crash: merge committed, checkpoint not"
-                )
 
         q = (
             stream.writeStream.foreachBatch(apply)
@@ -1420,8 +1409,9 @@ class Engine:
         """One Structured Streaming epoch through the apply — the body
         both streaming front-ends run (this engine's
         :meth:`run_streaming` and ``MultiTableEngine.run_streaming``,
-        once per table). ``ordinal`` counts the epochs applied in this
-        run (1-based) for the heartbeat cadence.
+        once per table): the apply, :meth:`_after_commit`, then one
+        poll of the file signal channel. ``ordinal`` counts the epochs
+        applied in this run (1-based) for the heartbeat cadence.
 
         Log-carried schema changes apply when their own 'm' row arrives
         in-batch (the control-row pass in :meth:`_apply_batch`), which
@@ -1436,25 +1426,21 @@ class Engine:
         result = self._apply_batch(
             batch_df, batch_id, phase="stream", lsn_hi=lsn_hi
         )
-        if self.cfg.batch_callback is not None:
-            try:
-                self.cfg.batch_callback(self, result)
-            except StopEngine:
-                # graceful per the StopEngineException contract: the
-                # merge commit stands, but the query must die BEFORE
-                # this epoch checkpoints (returning normally would mark
-                # it processed and a later engine-side gap could never
-                # replay). The next start re-delivers the epoch and the
-                # fence skips it — exactly the crash-replay path, minus
-                # the crash. :func:`await_stream` swallows the stop.
-                self._stop_requested = True
-                raise
-        # same heartbeat cadence as the batch-replay loop — a streaming
-        # front-end must not silently disable a configured heartbeat
-        # (HeartbeatImpl emits regardless of how the poll loop is driven)
-        interval = self.cfg.heartbeat_interval_batches
-        if interval and ordinal % interval == 0:
-            self._emit_heartbeat(batch_id)
+        try:
+            self._after_commit(result, batch_id, ordinal)
+        except StopEngine:
+            # graceful per the StopEngineException contract: the
+            # merge commit stands, but the query must die BEFORE
+            # this epoch checkpoints (returning normally would mark
+            # it processed and a later engine-side gap could never
+            # replay). The next start re-delivers the epoch and the
+            # fence skips it — exactly the crash-replay path, minus
+            # the crash. :func:`await_stream` swallows the stop.
+            self._stop_requested = True
+            raise
+        # the between-batches poll (the replay loop polls before each
+        # batch); pause / stop flags do not end a streaming query
+        self.process_signals()
         return result
 
     # -- the per-batch pipeline -------------------------------------------
@@ -1621,8 +1607,11 @@ class Engine:
         #    the merge job itself — no separate aggregation job.
         from pyspark.sql import Observation
 
+        aggs = _frontier_aggs(self.cfg.partitions)
         obs = Observation()
-        events = events.observe(obs, F.expr(_frontier_aggs(self.cfg.partitions)))
+        # one struct ``m``, so the observation is built from one Column
+        m_sql = ", ".join(f"{a} AS {name}" for name, (a, _) in aggs.items())
+        events = events.observe(obs, F.expr(f"struct({m_sql}) AS m"))
         # No cache here: the single consumer is the merge, which
         # persists the aligned change rows; the observation fires when
         # its bucket-discovery job materializes that cache.
@@ -1690,20 +1679,8 @@ class Engine:
                 return dict(fallback)
 
         def frontier() -> tuple[dict, list[dict], int, dict]:
-            m_empty: dict = {
-                "max_pid": None,
-                "max_source_ts": None,
-                "last_tx": None,
-                "first_tx": None,
-                "n_tx": 0,
-            }
-            for p in range(self.cfg.partitions):
-                m_empty[f"max_{p}"] = None
-                m_empty[f"cnt_{p}"] = 0
-            for opc in ("c", "u", "d", "r"):
-                m_empty[f"op_{opc}"] = 0
             m = _obs_row(obs, {"m": None})["m"]
-            m = m_empty if m is None else m.asDict()
+            m = {n: z for n, (_, z) in aggs.items()} if m is None else m.asDict()
             # a log generated with more partitions than cfg.partitions
             # would silently lose offsets/lineage for the overflow ids —
             # fail loudly instead (the frontier range is config-bounded)
@@ -1756,7 +1733,6 @@ class Engine:
             self._align(flat),
             batch_id,
             frontier_fn=frontier,
-            metrics={"phase": phase},
             phase=phase,
             truncate_lsn=truncate_lsn,
         )

@@ -291,10 +291,7 @@ class MultiTableEngine:
             return {name: f.result() for name, f in futs.items()}
 
     def run_streaming(
-        self,
-        checkpoint_dir: str,
-        max_files_per_trigger: int = 1,
-        crash_point: tuple[int, int] | None = None,
+        self, checkpoint_dir: str, max_files_per_trigger: int = 1
     ) -> None:
         """Drive ALL captured tables through ONE Structured Streaming
         query over the mixed log — the single-source-task shape of the
@@ -304,19 +301,18 @@ class MultiTableEngine:
         through that table's engine with the epoch as the shared
         fencing batch id — the same per-epoch body as
         ``Engine.run_streaming`` (config-injected schema-change gate,
-        ``batch_callback``/``StopEngine``, heartbeats).
+        heartbeats, ``batch_callback``/``StopEngine``, signal poll).
 
         Exactly-once under partial fan failure: engines fence
         independently, so a crash after table A's merge but before
-        table B's leaves A committed at epoch N and B not; Structured
-        Streaming re-delivers epoch N on restart and A's fence skips
-        while B applies — no double-apply, no gap. ``crash_point``
-        = (epoch_ordinal, tables_applied_first) injects exactly that
-        failure for tests.
+        table B's (an exception from A's ``batch_callback``) leaves A
+        committed at epoch N and B not; Structured Streaming
+        re-delivers epoch N on restart and A's fence skips while B
+        applies — no double-apply, no gap.
 
-        The SHARED signal channel stays live while streaming: after
-        each epoch's fan-out every engine polls ``signal_path`` once
-        (the reference's signal-table poll cadence,
+        The SHARED signal channel stays live while streaming: each
+        engine polls ``signal_path`` once per epoch, after its own
+        apply (the reference's signal-table poll cadence,
         ``pipeline/signal/SignalProcessor.java`` interval poll) — one
         signal fires ONCE PER CONSUMER, acked into that consumer's own
         ledger, so a data-collection-addressed snapshot runs on the
@@ -342,30 +338,13 @@ class MultiTableEngine:
         seen = {"epochs": 0}
 
         def apply(batch_df: DataFrame, epoch_id: int) -> None:
-            bid = int(epoch_id) + 1
             seen["epochs"] += 1
-            done = 0
             for name, eng in engines.items():
-                if (
-                    crash_point is not None
-                    and seen["epochs"] == crash_point[0]
-                    and done == crash_point[1]
-                ):
-                    raise RuntimeError(
-                        "injected crash mid-fan: earlier tables"
-                        " committed this epoch, later ones not"
-                    )
                 eng._apply_stream_epoch(
                     batch_df.filter(F.col("source.table") == F.lit(name)),
-                    bid,
+                    int(epoch_id) + 1,
                     seen["epochs"],
                 )
-                done += 1
-            # epoch-boundary poll of the shared file-signal channel
-            # (control-plane: a few jsonl rows; no-op when unset)
-            for eng in engines.values():
-                if eng.cfg.signal_path:
-                    eng.process_signals()
 
         q = (
             stream_changelog(

@@ -718,3 +718,96 @@ def test_stop_engine_from_streaming_batch_callback(spark, tmp_root):
             hashlib.sha256((got[k]["content"] or "").encode()).hexdigest()
             == hashlib.sha256((w["content"] or "").encode()).hexdigest()
         )
+
+
+def _streamed_oracle(log):
+    """The oracle fold of a snapshot-less log DataFrame."""
+    from debezium_spark.oracle import fold_final_state
+
+    log_pdf = log.toPandas()
+    for c in ("source", "transaction"):
+        if c in log_pdf.columns:
+            log_pdf[c] = log_pdf[c].map(
+                lambda r: r.asDict() if hasattr(r, "asDict") else r
+            )
+    return fold_final_state(None, log_pdf)
+
+
+def _assert_content_matches(engine, want):
+    import hashlib
+
+    got = {(r["repo"], r["path"]): r for r in engine.final_state().collect()}
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert (
+            hashlib.sha256((got[k]["content"] or "").encode()).hexdigest()
+            == hashlib.sha256((w["content"] or "").encode()).hexdigest()
+        )
+
+
+def test_stop_engine_from_streaming_heartbeat_action(spark, tmp_root):
+    """A StopEngine raised by heartbeat_action ends a streaming run as
+    gracefully as one raised by batch_callback: the engine is stopped,
+    the batches committed before the stop stand, and a restart (no
+    action) finishes the log and converges to the oracle."""
+    from debezium_spark.sources.changelog import write_changelog_ordered
+    from debezium_spark.streaming.engine import StopEngine
+
+    log = gen_change_log(spark, 4, 20, n_events=1200, partitions=4)
+    log_path = tmp_root + "/slog"
+    write_changelog_ordered(log, log_path, n_files=4)
+    base = dict(
+        changelog_path=log_path,
+        lake_root=tmp_root + "/lake",
+        snapshot_mode="never",
+        n_buckets=4,
+    )
+    beats = []
+
+    def on_beat(engine):
+        beats.append(engine.lake.last_batch_id("stream"))
+        raise StopEngine("stop at the first heartbeat")
+
+    e1 = Engine(
+        spark,
+        EngineConfig(**base, heartbeat_interval_batches=2, heartbeat_action=on_beat),
+    )
+    e1.run_streaming(tmp_root + "/ckpt", max_files_per_trigger=1)
+    assert e1._stopped and beats == [2]
+    assert e1.lake.last_batch_id("stream") == 2
+    e2 = Engine(spark, EngineConfig(**base))
+    e2.run_streaming(tmp_root + "/ckpt", max_files_per_trigger=1)
+    assert e2.lake.last_batch_id("stream") == 4
+    _assert_content_matches(e2, _streamed_oracle(log))
+
+
+def test_streaming_polls_file_signal_channel(spark, tmp_root):
+    """Single-table run_streaming polls ``signal_path`` between epochs,
+    as the replay loop does: an execute-snapshot written to the file
+    channel before the run fires once during it, and the state still
+    converges to the oracle (the chunk rows lose to streamed events)."""
+    from debezium_spark.signals import SignalChannel
+    from debezium_spark.sources.changelog import write_changelog_ordered
+
+    log = gen_change_log(spark, 4, 20, n_events=1200, partitions=4)
+    log_path = tmp_root + "/slog"
+    write_changelog_ordered(log, log_path, n_files=4)
+    sig = tmp_root + "/signals.jsonl"
+    SignalChannel(sig).send("sig-1", "execute-snapshot", {"chunk_size": 50})
+    eng = Engine(
+        spark,
+        EngineConfig(
+            changelog_path=log_path,
+            lake_root=tmp_root + "/lake",
+            snapshot_mode="never",
+            n_buckets=4,
+            signal_path=sig,
+        ),
+    )
+    eng.run_streaming(tmp_root + "/ckpt", max_files_per_trigger=1)
+    assert eng.lake.last_batch_id("incremental") >= 0
+    assert eng.lake.last_batch_id("stream") == 4
+    assert SignalChannel(sig).poll() == []
+    with open(sig + ".processed") as f:
+        assert [line.strip() for line in f].count("sig-1") == 1
+    _assert_content_matches(eng, _streamed_oracle(log))

@@ -438,17 +438,33 @@ def test_streaming_multi_table_crash_mid_fan_recovers(spark, tmp_root):
     tables = [TABLE_NAME, T2]
     log_path = _mixed_log(spark, tmp_root, tables, n_events=900)
 
-    def make():
+    def make(**kw):
         return MultiTableEngine(
             spark, log_path, f"{tmp_root}/lake_crash", route="filter",
-            snapshot_mode="never", n_buckets=4, partitions=4,
+            snapshot_mode="never", n_buckets=4, partitions=4, **kw,
         )
 
+    first = sorted(tables)[0]  # the fan applies tables in name order
+
+    def crash_mid_fan(eng, result):
+        # after the first table commits epoch 2, before the next applies
+        if eng.cfg.collection_name == first and result["batch_id"] == 2:
+            raise RuntimeError(
+                "injected crash mid-fan: earlier tables"
+                " committed this epoch, later ones not"
+            )
+
     ckpt = f"{tmp_root}/ckpt_crash"
+    crashing = make(batch_callback=crash_mid_fan)
     with pytest.raises(Exception, match="injected crash mid-fan"):
-        make().run_streaming(
-            ckpt, max_files_per_trigger=4, crash_point=(2, 1)
-        )
+        crashing.run_streaming(ckpt, max_files_per_trigger=4)
+    assert list(crashing.engines()) == sorted(tables)
+    assert crashing.engines()[first].lake.last_batch_id("stream") == 2
+    assert all(
+        eng.lake.last_batch_id("stream") == 1
+        for name, eng in crashing.engines().items()
+        if name != first
+    )
     # fresh coordinator, same checkpoint: resumes and completes
     mt = make()
     mt.run_streaming(ckpt, max_files_per_trigger=4)

@@ -35,6 +35,19 @@ def world(spark, tmp_root):
     return tmp_root
 
 
+def _crash_after(n):
+    """A batch_callback that crashes after the ``n``th batch's merge
+    commit, before any offset flush."""
+    calls = []
+
+    def crash(engine, result):
+        calls.append(result)
+        if len(calls) >= n:
+            raise RuntimeError("injected crash: merge committed, offsets not flushed")
+
+    return crash
+
+
 def _final(eng):
     return {
         (r["repo"], r["path"]): r["content"]
@@ -49,11 +62,11 @@ def test_periodic_crash_rewinds_resume_and_fences_absorb_it(spark, world):
         offset_commit_policy="periodic",
         offset_flush_interval_batches=3,
     )
-    e1 = Engine(spark, _cfg(world, **cfg))
+    e1 = Engine(spark, _cfg(world, batch_callback=_crash_after(4), **cfg))
     # crash after batch 4's merge commit, before any flush: only the
     # 3-batch cadence boundary made it to the store
     with pytest.raises(RuntimeError, match="injected crash"):
-        e1.stream(crash_after_batches=4)
+        e1.stream()
     assert FileOffsetStore(store_path).last_batch_id() == 3
     assert e1.lake.last_batch_id("stream") == 4
 
@@ -79,9 +92,9 @@ def test_always_policy_has_no_redelivery_window(spark, world):
         offset_store_path=store_path,
         offset_commit_policy="always",
     )
-    e1 = Engine(spark, _cfg(world, **cfg))
+    e1 = Engine(spark, _cfg(world, batch_callback=_crash_after(4), **cfg))
     with pytest.raises(RuntimeError, match="injected crash"):
-        e1.stream(crash_after_batches=4)
+        e1.stream()
     # the injected crash fires between the merge commit and the flush,
     # so even ALWAYS lags by exactly the in-flight batch — the
     # reference's irreducible at-least-once window (markBatchFinished

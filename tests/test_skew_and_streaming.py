@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark.sql import functions as F
@@ -117,13 +118,19 @@ def test_streaming_crash_between_merge_and_checkpoint(spark, tmp_root):
         source_table_path=src_path,
         n_buckets=8,
     )
-    engine = Engine(spark, cfg)
+    applied = []
+
+    def crash_after_two(eng, result):
+        # runs after the epoch's merge commit, before its checkpoint
+        applied.append(result)
+        if len(applied) >= 2:
+            raise RuntimeError("injected crash: merge committed, checkpoint not")
+
+    engine = Engine(spark, dataclasses.replace(cfg, batch_callback=crash_after_two))
     engine.snapshot()
     ckpt = os.path.join(tmp_root, "ckpt_crash")
     with pytest.raises(Exception, match="injected crash"):
-        engine.run_streaming(
-            checkpoint_dir=ckpt, max_files_per_trigger=1, crash_after_batches=2
-        )
+        engine.run_streaming(checkpoint_dir=ckpt, max_files_per_trigger=1)
 
     # fresh engine over the same checkpoint finishes the log
     engine2 = Engine(spark, cfg)

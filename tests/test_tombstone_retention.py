@@ -290,3 +290,31 @@ def test_lake_written_without_retention_reads_live_when_reopened_retaining(
         if r["_deleted"]
     }
     assert dead == {("r1", "p005")}
+
+
+def test_maintenance_commits_record_no_batch_id(spark, tmp_root):
+    """Purge, rebucket and a schema change are not batch commits: each
+    records ``batch_id: None`` and carries every fence and the offsets
+    forward, so counting manifests that carry a batch id counts only
+    the merges."""
+    lt = _seed(spark, f"{tmp_root}/maint", True)
+    lt.merge(_ch(spark, [_row(0, "d", 500, "d0")]), 2)
+    head = lt.manifest()
+    assert lt.purge_tombstones(below_lsn=600)["purged_buckets"]
+    lt.rebucket(2)
+    lt.apply_schema_change(
+        {"change_type": "ALTER_ADD_COLUMN", "column_name": "stars", "new_type": "int"}
+    )
+    maintenance = [lt.manifest(v) for v in lt.versions() if v > head["version"]]
+    assert [m["metrics"] for m in maintenance] == [
+        {"tombstone_purge_below": 600},
+        {"rebucket_from": 4, "rebucket_to": 2},
+        {"schema_change": "ALTER_ADD_COLUMN"},
+    ]
+    for m in maintenance:
+        assert m["batch_id"] is None
+        assert m["last_batch_id"] == head["last_batch_id"] == 2
+        assert m["last_batch_ids"] == head["last_batch_ids"] == {"stream": 2}
+        assert m["offsets"] == head["offsets"]
+    batches = [lt.manifest(v)["batch_id"] for v in lt.versions()]
+    assert [b for b in batches if b is not None] == [1, 2]
